@@ -9,6 +9,7 @@ the redact_pii / dedup_lines_corpus evidence pattern.
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from triplestore_spark import schema as S
 from triplestore_spark.dsl import Obj
@@ -978,6 +979,45 @@ def test_kleene_max_depth_raises(spark):
     # and a depth that fits succeeds with the full reachable set
     got = _path_rows(g, ["p+"], start="n0", closure_max_depth=16)
     assert len(got) == 12
+
+
+def test_closure_failed_level_releases_edge_cache(spark):
+    """A job that fails inside a closure level must not leave the
+    closure's cached edge set behind (only the per-level checkpoint
+    blocks stay, which Spark's cleaner drops with their frames)."""
+    import gc
+
+    from triplestore_spark.operators.bgp import _closure_pairs
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        gc.collect()
+        spark._jvm.System.gc()
+        rdds = jsc.getPersistentRDDs()
+        return {k: rdds[k].rdd() for k in rdds.keySet()}
+
+    before = set(persisted())
+    n = F.col("id")
+    # a range, not a LocalRelation: the planted error must fire in the
+    # level-1 job, not while the optimizer folds a local projection
+    edges = spark.range(3).select(
+        F.concat(F.lit("n"), n.cast("string")).alias("_cs"),
+        F.when(n == 1, F.raise_error(F.lit("planted level failure")))
+        .otherwise(F.concat(F.lit("n"), (n + 1).cast("string")))
+        .alias("_cd"),
+    )
+    seed = spark.range(1).select(F.lit("n0").alias("_n"))
+    with pytest.raises(Exception, match="planted level failure"):
+        _closure_pairs(seed, edges, 0, None, 64)
+    assert not edges.is_cached
+    assert not edges.storageLevel.useMemory
+    left = {
+        k: rdd
+        for k, rdd in persisted().items()
+        if k not in before and not rdd.isCheckpointed()
+    }
+    assert not left, [rdd.toDebugString() for rdd in left.values()]
 
 
 def test_property_path_literal_endpoint_in_subject_slot_refused(hand_graph):

@@ -192,28 +192,44 @@ def test_decontaminate_shuffles_exclude_text(spark, sf_dir):
 
 
 def test_binary_split_ranges_spread_tasks(spark, tmp_path):
-    """The split reader's range table must round-robin across tasks
-    (one range per task), not collapse into one partition."""
+    """The split reader decodes each byte range in its own task: one
+    partition per range, whatever the core count, never collapsed."""
     from pyspark.sql import functions as F
 
     from triplestore_spark.dsl import subj_pred, triples_to_df
     from triplestore_spark.sources.binary import (
+        _list_ranges,
         encode_binary_triples,
         read_binary_split,
+        scan_ranges,
     )
 
     ts = [subj_pred(f"s{i}", "p").integer_literal(i) for i in range(60)]
     p = tmp_path / "one.bin"
     p.write_bytes(encode_binary_triples(triples_to_df(spark, ts)))
+    n_ranges = len(_list_ranges(spark, str(p), 512))
+    assert n_ranges >= 3
+    # scan_ranges runs the same range table through one Python task
+    # per partition and returns one row per range
+    per_range_task = (
+        scan_ranges(spark, str(p), split_size=512)
+        .groupBy(F.spark_partition_id().alias("pp"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    assert sorted(r["n"] for r in per_range_task) == [1] * n_ranges
     df = read_binary_split(spark, str(p), split_size=512)
+    assert df.rdd.getNumPartitions() == n_ranges
     per_task = (
         df.groupBy(F.spark_partition_id().alias("pp"))
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
-    assert len(per_task) >= 3
-    # no task may own the whole file
+    # the last range may hold only the tail of a record that starts
+    # before it, so it can decode no rows; no task owns the file
+    assert len(per_task) >= n_ranges - 1
     total = sum(r["n"] for r in per_task)
+    assert total == len(ts)
     assert max(r["n"] for r in per_task) < total
 
 

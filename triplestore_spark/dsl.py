@@ -20,6 +20,7 @@ from triplestore_spark.functions.literals import (
     go_fmt_float,
     go_fmt_int,
 )
+from triplestore_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -259,7 +260,7 @@ def triples_to_df(spark, triples: Iterable[Triple]):
     from triplestore_spark.functions.keys import with_keys
 
     rows = [t.as_row() for t in triples]
-    return with_keys(spark.createDataFrame(rows, S.TRIPLE_SCHEMA))
+    return with_keys(local_frame(spark, rows, S.TRIPLE_SCHEMA))
 
 
 def row_to_triple(row) -> Triple:

@@ -33,6 +33,7 @@ from triplestore_spark.operators.similarity import (
     _ivf_centroids,
     nearest_centroid_col,
 )
+from triplestore_spark.session import local_frame
 # index.json goes through the Hadoop FileSystem API — the same
 # storage-agnostic route the vectors take; a driver-local open() would
 # put it on the driver's disk when `path` is an HDFS/S3 URI while the
@@ -139,8 +140,10 @@ class IVFIndex:
             sims = centroids @ q
             for c in np.argsort(-sims)[:n_probe]:
                 probes.append((int(qid), [float(x) for x in vec], int(c)))
-        probe_df = self._spark.createDataFrame(
-            probes, "query_id long, qvec array<double>, cluster int"
+        probe_df = local_frame(
+            self._spark,
+            probes,
+            "query_id long, qvec array<double>, cluster int",
         )
         touched = sorted({c for _, _, c in probes})
 

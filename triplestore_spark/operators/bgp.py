@@ -40,13 +40,14 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from triplestore_spark.dsl import Obj
 from triplestore_spark.functions.keys import okey_expr
 from triplestore_spark.operators.graph import RDFGraph, object_predicate
 from triplestore_spark.schema import KIND_RESOURCE
+from triplestore_spark.session import local_frame
 
 Term = Union[str, Obj]
 Pattern = tuple[Term, Term, Term]
@@ -1147,8 +1148,10 @@ def bgp_match(
             data = [
                 tuple(x for x, m in zip(r, mask) if m) for r in rows_m
             ]
-            vdf = cur.sparkSession.createDataFrame(
-                data, ", ".join(f"`{v}` string" for v in defined)
+            vdf = local_frame(
+                cur.sparkSession,
+                data,
+                ", ".join(f"`{v}` string" for v in defined),
             )
             branches.append(
                 cur.join(F.broadcast(vdf), on=defined, how="leftsemi")
@@ -1509,66 +1512,68 @@ def _closure_pairs(
     closure otherwise compounds the plan per level). The seed set is
     the BOUND frontier (pinned endpoint or the chain's bindings so
     far), never all nodes — an unrooted all-pairs closure is refused
-    upstream because it is quadratic in components at 100 TB."""
+    upstream because it is quadratic in components at 100 TB.
+
+    The edge cache is released on every exit, a failed level included.
+    Each level's emptiness is read from its own checkpoint job (an
+    observed row count), not from a second isEmpty() job."""
     edges = edges.cache()
-    cur = seed.select(F.col("_n").alias("_a"), F.col("_n").alias("_b"))
-    for i in range(lo):
-        cur = (
-            cur.join(edges, cur["_b"] == edges["_cs"])
-            .select("_a", F.col("_cd").alias("_b"))
-            .distinct()
-        )
-        if (i + 1) % checkpoint_every == 0:
-            cur = cur.localCheckpoint(eager=True)
-    if hi is not None and hi == lo:
-        # exact-hop path: release the edge cache here too (the cache
-        # only pays off across the many re-scans of the closure loop
-        # below; an exact quantifier re-reads edges `lo` times in one
-        # action at most, and holding the cache past return is the
-        # leak the loop exits avoid)
-        edges.unpersist()
-        return cur.distinct()
-    # Each level's frontier is localCheckpoint'ed (eager): the
-    # anti-join against `reached` otherwise nests the ENTIRE previous
-    # lineage into every new level — exponential plan growth that OOMs
-    # the driver analyzing level ~10 regardless of data size. With the
-    # checkpoint the frontier plan is flat and `reached` is a linear
-    # union of checkpointed levels, collapsed every `checkpoint_every`
-    # levels. One tiny Spark job per LEVEL (graph diameter), never per
-    # node — the same cost model as tree.py's frontier walk.
-    reached = cur.distinct().localCheckpoint(eager=True)
-    frontier = reached
-    level = 0
-    while hi is None or level < hi - lo:
-        level += 1
-        nxt = (
-            frontier.join(edges, frontier["_b"] == edges["_cs"])
-            .select("_a", F.col("_cd").alias("_b"))
-            .distinct()
-            .join(reached, ["_a", "_b"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            # every level is materialized via localCheckpoint, so the
-            # returned frame no longer references the edge lineage —
-            # release the edge cache instead of holding it until
-            # session end (guide §5: unpersist when done; repeated
-            # closure calls otherwise accumulate cached edge copies)
-            edges.unpersist()
-            return reached
-        reached = reached.unionByName(nxt)
-        frontier = nxt
-        if level % checkpoint_every == 0:
-            reached = reached.localCheckpoint(eager=True)
-        if hi is None and level >= max_depth:
-            edges.unpersist()
-            raise ValueError(
-                f"property_path: closure still expanding after "
-                f"{max_depth} levels; raise closure_max_depth if the "
-                "graph really is that deep"
+    try:
+        cur = seed.select(F.col("_n").alias("_a"), F.col("_n").alias("_b"))
+        for i in range(lo):
+            cur = (
+                cur.join(edges, cur["_b"] == edges["_cs"])
+                .select("_a", F.col("_cd").alias("_b"))
+                .distinct()
             )
-    edges.unpersist()
-    return reached
+            if (i + 1) % checkpoint_every == 0:
+                cur = cur.localCheckpoint(eager=True)
+        if hi is not None and hi == lo:
+            # exact-hop path: no closure levels, and the returned frame
+            # re-reads edges `lo` times in one action at most, so it
+            # needs no cache past return
+            return cur.distinct()
+        # Each level's frontier is localCheckpoint'ed (eager): the
+        # anti-join against `reached` otherwise nests the ENTIRE
+        # previous lineage into every new level — exponential plan
+        # growth that OOMs the driver analyzing level ~10 regardless of
+        # data size. With the checkpoint the frontier plan is flat and
+        # `reached` is a linear union of checkpointed levels, collapsed
+        # every `checkpoint_every` levels. One tiny Spark job per LEVEL
+        # (graph diameter), never per node — the same cost model as
+        # tree.py's frontier walk. Every returned frame is materialized,
+        # so it no longer references the edge lineage.
+        reached = cur.distinct().localCheckpoint(eager=True)
+        frontier = reached
+        level = 0
+        while hi is None or level < hi - lo:
+            level += 1
+            found = Observation()
+            nxt = (
+                frontier.join(edges, frontier["_b"] == edges["_cs"])
+                .select("_a", F.col("_cd").alias("_b"))
+                .distinct()
+                .join(reached, ["_a", "_b"], "left_anti")
+                .observe(found, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            if found.get["n"] == 0:
+                return reached
+            reached = reached.unionByName(nxt)
+            frontier = nxt
+            if level % checkpoint_every == 0:
+                reached = reached.localCheckpoint(eager=True)
+            if hi is None and level >= max_depth:
+                raise ValueError(
+                    f"property_path: closure still expanding after "
+                    f"{max_depth} levels; raise closure_max_depth if the "
+                    "graph really is that deep"
+                )
+        return reached
+    finally:
+        # guide §5: unpersist when done; repeated closure calls (or a
+        # failed level) otherwise leave cached edge copies behind
+        edges.unpersist()
 
 
 def property_path(
@@ -1654,9 +1659,8 @@ def property_path(
             )
             if cur is None:
                 # first step: seed from the pinned start constant
-                spark = edges.sparkSession
-                seed = spark.createDataFrame(
-                    [(_term_key(start),)], "_n string"
+                seed = local_frame(
+                    edges.sparkSession, [(_term_key(start),)], "_n string"
                 )
             else:
                 seed = cur.select(

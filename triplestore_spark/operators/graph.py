@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from triplestore_spark import schema as S
 from triplestore_spark.dsl import Obj, Triple, row_to_triple, triples_to_df
 from triplestore_spark.functions.keys import with_keys
+from triplestore_spark.session import local_frame
 
 _KEYED_COLS = S.TRIPLE_FIELDS + ["okey", "tkey"]
 
@@ -340,7 +341,7 @@ class TripleSource:
         consecutive adds union together (one dedup), each remove is an
         anti join. Order preserved — add/remove/add of the same key
         resolves like the reference's map ops."""
-        current = self._spark.createDataFrame([], S.TRIPLE_SCHEMA_KEYED)
+        current = local_frame(self._spark, [], S.TRIPLE_SCHEMA_KEYED)
         pending_adds: list[DataFrame] = []
 
         def flush(cur: DataFrame) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from triplestore_spark.operators.graph import RDFGraph
 from triplestore_spark.schema import KIND_RESOURCE
+from triplestore_spark.session import local_frame
 
 __all__ = [
     "edge_view",
@@ -175,9 +176,15 @@ def bfs_distances(
     absent (no sentinel rows)."""
     if direction not in ("out", "in", "both"):
         raise ValueError(f"bfs_distances: bad direction {direction!r}")
-    if not isinstance(seeds, DataFrame):
-        seeds = edges.sparkSession.createDataFrame(
-            [(s,) for s in seeds], "node string"
+    if isinstance(seeds, DataFrame):
+        # cut the caller's seed lineage once
+        seeds = seeds.select("node").distinct().localCheckpoint()
+    else:
+        # a driver list is already a constant LocalRelation
+        seeds = local_frame(
+            edges.sparkSession,
+            [(s,) for s in dict.fromkeys(seeds)],
+            "node string",
         )
     e = edges.select("src", "dst")
     if direction == "in":
@@ -187,9 +194,7 @@ def bfs_distances(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     e = e.distinct()
-    visited = seeds.select("node").distinct().withColumn(
-        "dist", F.lit(0)
-    ).localCheckpoint()
+    visited = seeds.withColumn("dist", F.lit(0))
     frontier = visited.select("node")
     levels = [visited]
     for depth in range(1, int(max_depth) + 1):

@@ -43,6 +43,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from triplestore_spark.session import local_frame
+
 __all__ = [
     "sample_neighborhoods",
     "sample_neighborhoods_sql",
@@ -94,8 +96,8 @@ def sample_neighborhoods(
     if not fanouts or any(f < 1 for f in fanouts):
         raise ValueError(f"sample_neighborhoods: bad fanouts {fanouts!r}")
     if not isinstance(seeds, DataFrame):
-        seeds = edges.sparkSession.createDataFrame(
-            [(s,) for s in seeds], "node string"
+        seeds = local_frame(
+            edges.sparkSession, [(s,) for s in seeds], "node string"
         )
     e = edges.select("src", "dst").distinct()
     frontier = seeds.select(
@@ -162,8 +164,8 @@ def random_walks(
             "random_walks: walk_length and walks_per_seed must be >= 1"
         )
     if not isinstance(seeds, DataFrame):
-        seeds = edges.sparkSession.createDataFrame(
-            [(s,) for s in seeds], "node string"
+        seeds = local_frame(
+            edges.sparkSession, [(s,) for s in seeds], "node string"
         )
     spark = edges.sparkSession
     e = edges.select("src", "dst").distinct()

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from triplestore_spark.operators.graph import RDFGraph, dedup_triples
 from triplestore_spark.schema import KIND_RESOURCE
+from triplestore_spark.session import local_frame
 
 RDF_TYPE = "rdf:type"
 RDFS_SUBCLASS = "rdfs:subClassOf"
@@ -124,7 +125,7 @@ def rdfs_expand_types(
     if not closure:
         return dedup_triples(df)
     cl = F.broadcast(
-        spark.createDataFrame(closure, "cls string, supercls string")
+        local_frame(spark, closure, "cls string, supercls string")
     )
     types = df.where(
         (F.col("predicate") == type_pred)
@@ -160,7 +161,7 @@ def rdfs_expand_properties(
     if not closure:
         return dedup_triples(df)
     cl = F.broadcast(
-        spark.createDataFrame(closure, "prop string, superprop string")
+        local_frame(spark, closure, "prop string, superprop string")
     )
     inferred = df.join(
         cl, df["predicate"] == cl["prop"], "inner"

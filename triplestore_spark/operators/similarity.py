@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from triplestore_spark.session import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -301,8 +303,8 @@ def ivf_topk(
         sims = centroids @ (q / np.linalg.norm(q))
         for c in np.argsort(-sims)[:n_probe]:
             probes.append((int(r[id_col]), list(map(float, r[vec_col])), int(c)))
-    probe_df = spark.createDataFrame(
-        probes, "query_id long, qvec array<double>, cluster int"
+    probe_df = local_frame(
+        spark, probes, "query_id long, qvec array<double>, cluster int"
     )
 
     joined = assigned.join(F.broadcast(probe_df), on="cluster").where(

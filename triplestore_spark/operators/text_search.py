@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from triplestore_spark.schema import KIND_LITERAL
+from triplestore_spark.session import local_frame
 
 # Case-folded alphanumeric runs. Kept deliberately simple and
 # portable: the oracle, the Spark expression, and any SQL twin agree
@@ -143,7 +144,7 @@ def _queries_df(
             rows = [(str(i), str(q)) for i, q in enumerate(queries)]
         if not rows:
             raise ValueError("bm25_search: no queries")
-        qdf = spark.createDataFrame(rows, "qid string, text string").select(
+        qdf = local_frame(spark, rows, "qid string, text string").select(
             "qid", terms_col("text").alias("_terms")
         )
     return (
@@ -396,8 +397,10 @@ class PersistedTextIndex(TextIndex):
         terms = sorted({r["term"] for r in rows})
         buckets = sorted({r["bucket"] for r in rows})
         keep = F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        qt = self._spark.createDataFrame(
-            [(r["qid"], r["term"]) for r in rows], "qid string, term string"
+        qt = local_frame(
+            self._spark,
+            [(r["qid"], r["term"]) for r in rows],
+            "qid string, term string",
         )
         return (
             self.postings.where(keep).drop("bucket"),

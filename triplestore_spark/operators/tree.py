@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from triplestore_spark.operators.graph import RDFGraph
 from triplestore_spark.schema import KIND_RESOURCE
+from triplestore_spark.session import local_frame
 
 
 class Tree:
@@ -60,8 +61,10 @@ class Tree:
         """
         spark = self._g.df.sparkSession
         edges = self.edges().cache()
-        frontier = spark.createDataFrame(
-            [(root, 0, [root])], "node string, depth int, path array<string>"
+        frontier = local_frame(
+            spark,
+            [(root, 0, [root])],
+            "node string, depth int, path array<string>",
         )
         out = frontier
         depth = 0
@@ -88,8 +91,10 @@ class Tree:
         (reference tree.go:58-82 uses WithPredObj per node)."""
         spark = self._g.df.sparkSession
         edges = self.edges().cache()
-        frontier = spark.createDataFrame(
-            [(node, 0, [node])], "node string, depth int, path array<string>"
+        frontier = local_frame(
+            spark,
+            [(node, 0, [node])],
+            "node string, depth int, path array<string>",
         )
         out = frontier
         depth = 0

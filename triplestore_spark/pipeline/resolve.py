@@ -23,11 +23,12 @@ from pyspark.sql import functions as F
 
 from triplestore_spark import schema as S
 from triplestore_spark.pipeline import spec
+from triplestore_spark.session import local_frame
 
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        sorted(spec.GAZETTEER.items()), ["surface", "iri"]
+    return local_frame(
+        spark, sorted(spec.GAZETTEER.items()), "surface string, iri string"
     )
 
 
@@ -80,7 +81,7 @@ def resolve_mentions_static(
     lookup is a pure whole-stage-codegen projection — no broadcast
     build, no join at all. Inner-join semantics: surfaces outside the
     mapping yield NULL and drop. Row-identical to
-    resolve_mentions(mentions, createDataFrame(mapping), 'broadcast')
+    resolve_mentions(mentions, <mapping as a frame>, 'broadcast')
     (locked by tests/test_skew.py::test_static_equals_broadcast)."""
     m = F.create_map(
         *[F.lit(x) for kv in sorted(mapping.items()) for x in kv]

@@ -27,6 +27,7 @@ from triplestore_spark.operators.graph import dedup_triples
 from triplestore_spark.operators.struct_melt import MeltField, melt_df
 from triplestore_spark.pipeline import spec
 from triplestore_spark.pipeline.run import run_pipeline
+from triplestore_spark.session import local_frame
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -295,7 +296,8 @@ def _infer_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     from triplestore_spark.operators.infer import rdfs_expand_types
 
     schema_df = with_keys(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (a, False, "rdfs:subClassOf", "res", b, "", "")
                 for a, b in _SUBCLASS_EDGES
@@ -1550,7 +1552,7 @@ def _sql_str(s: str) -> str:
 def _context_encode(spark: SparkSession) -> DataFrame:
     from triplestore_spark.sources.ntriples import encode_df
 
-    df = spark.createDataFrame(_CONTEXT_ROWS, S.TRIPLE_SCHEMA)
+    df = local_frame(spark, _CONTEXT_ROWS, S.TRIPLE_SCHEMA)
     return encode_df(df, ctx=_CONTEXT_CTX).select(F.col("value").alias("line"))
 
 
@@ -2022,7 +2024,9 @@ def _dot_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = RDFGraph(dedup_triples(tpch_graph_triples(spark, sf_dir)), cache=False)
     out = encode_dot(g, "kg:inRegion")
-    return spark.createDataFrame([(ln,) for ln in out.split("\n")], "line string")
+    return local_frame(
+        spark, [(ln,) for ln in out.split("\n")], "line string"
+    )
 
 
 def _nt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

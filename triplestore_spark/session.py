@@ -38,6 +38,31 @@ def read_parquet_table(spark: SparkSession, path: str):
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """DataFrame over driver-resident rows, planned as a LocalRelation.
+
+    `rows` are tuples (or Rows) in `schema` field order; `schema` is a
+    StructType or a DDL string. The rows go to the JVM once as an Arrow
+    table, so evaluating the frame runs no Python worker. A list handed
+    to createDataFrame instead becomes a parallelized Python RDD, and
+    every action over it starts one Python task per default-parallelism
+    slot — for a one-row constant. This is the package's only
+    createDataFrame call."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def get_spark(
     app_name: str = "triplestore-spark",
     cpus: int | None = None,

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from triplestore_spark import schema as S
 from triplestore_spark.functions.keys import with_keys
+from triplestore_spark.session import local_frame
 from triplestore_spark.sources.ntriples import (
     escape_string_literal,
     unescape_string_literal,
@@ -482,6 +483,30 @@ def _list_ranges(
     return ranges
 
 
+def _ranges_frame(
+    spark: SparkSession, ranges: list[tuple[str, int, int, int]]
+) -> DataFrame:
+    """The (path, start, end, flen) ranges, one per partition, so each
+    range decodes in its own task. Range(0, n, 1, n) puts exactly row i
+    in partition i, and the broadcast join keeps that partitioning; a
+    round-robin repartition of the ranges does not (each input
+    partition starts its round-robin at its own offset, so ranges
+    collide and fewer tasks run, depending on the core count)."""
+    from pyspark.sql import functions as F
+
+    table = local_frame(
+        spark,
+        [(i, *r) for i, r in enumerate(ranges)],
+        "id long, path string, start long, end long, flen long",
+    )
+    n = len(ranges)
+    return (
+        spark.range(0, n, 1, n)
+        .join(F.broadcast(table), "id")
+        .select("path", "start", "end", "flen")
+    )
+
+
 COVERAGE_MANIFEST_NAME = "_split_coverage.json"
 
 
@@ -665,13 +690,9 @@ def read_binary_split(
             _save_coverage_manifest(spark, loc, manifest)
     ranges = _list_ranges(spark, path, split_size, files=files)
     if not ranges:
-        return with_keys(
-            spark.createDataFrame([], S.TRIPLE_SCHEMA)
-        )
+        return with_keys(local_frame(spark, [], S.TRIPLE_SCHEMA))
 
-    ranges_df = spark.createDataFrame(
-        ranges, "path string, start long, end long, flen long"
-    ).repartition(len(ranges))
+    ranges_df = _ranges_frame(spark, ranges)
 
     vr, mw = validate_records, max_word_bytes
 
@@ -717,10 +738,8 @@ def scan_ranges(
         ]
     )
     if not ranges:
-        return spark.createDataFrame([], schema)
-    ranges_df = spark.createDataFrame(
-        ranges, "path string, start long, end long, flen long"
-    ).repartition(len(ranges))
+        return local_frame(spark, [], schema)
+    ranges_df = _ranges_frame(spark, ranges)
     vr, mw = validate_records, max_word_bytes
 
     def _scan(it: Iterator) -> Iterator:

@@ -35,6 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from triplestore_spark.session import local_frame
 from triplestore_spark.streaming.ingest import (
     COMPACTION_LOCK_LEASE_MS,
     DEFAULT_BUCKETS,
@@ -111,7 +112,8 @@ def stream_documents_into_kg(
         # row idempotently (partitioned by batch_id)
         import time as _time
 
-        sess.createDataFrame(
+        local_frame(
+            sess,
             [(batch_id, n_docs, triples.count(), _time.time())],
             "batch_id long, n_docs long, n_candidate_triples long, ts double",
         ).write.mode("overwrite").parquet(
