@@ -924,13 +924,17 @@ def test_kleene_bounded_quantifiers(cycle_graph):
     ]
 
 
-def test_kleene_differential_vs_recursive_cte(spark):
+@pytest.mark.parametrize("seed", [23, 5, 71])
+def test_kleene_differential_vs_recursive_cte(spark, seed):
     """Random graph: Spark frontier closure == DuckDB WITH RECURSIVE
     (property_path_sql) on every quantifier shape, rooted, unrooted
-    with a fixed step, and reversed (pinned end)."""
+    with a fixed step, and reversed (pinned end). The fixed-step-seeded
+    bounded shapes start from many `_a` values at once, so one node is
+    reached at different depths from different sources — the case the
+    closure's per-pair min-depth merge must keep apart."""
     from triplestore_spark.operators.bgp import property_path_sql
 
-    rows = _random_rows(23)
+    rows = _random_rows(seed)
     g = spark.createDataFrame(rows, S.TRIPLE_SCHEMA)
     con = _duck(rows)
     cases = [
@@ -944,6 +948,9 @@ def test_kleene_differential_vs_recursive_cte(spark):
         (["p0*"], {"end": "e3"}),          # pinned end only
         (["p1", "p0+"], {"start": "e2"}),  # mid-chain closure
         (["p1", "p0*", "p2"], {}),         # closure between fixed steps
+        (["p1", "p0{2,4}"], {}),           # many sources, bounded
+        (["p1", "p0{1,}"], {}),            # many sources, lo > 0
+        (["p1", "p0{0,2}"], {}),           # many sources, zero-hop rows
     ]
     nonempty = 0
     for path, kw in cases:

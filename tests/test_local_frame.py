@@ -56,10 +56,22 @@ def _chain_graph(spark):
     return RDFGraph(local_frame(spark, rows, S.TRIPLE_SCHEMA), cache=False)
 
 
+def _python_rdd_leaves(df) -> list[str]:
+    """LogicalRDD leaves of the optimized plan that are not checkpoint
+    blocks: a parallelized Python list, which runs Python tasks on
+    every evaluation. (A level an operator localCheckpoints is a
+    LogicalRDD too, over a checkpointed RDD, and runs no Python.)"""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [
+        leaf.toString()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD" and not leaf.rdd().isCheckpointed()
+    ]
+
+
 def test_pinned_query_plans_hold_no_rdd(spark):
     """Seeds pinned by a driver constant reach the plan as a
-    LocalRelation; a LogicalRDD here would be a parallelized Python
-    list, which runs Python tasks on every evaluation."""
+    LocalRelation, never as a Python RDD."""
     from triplestore_spark.operators.bgp import property_path
     from triplestore_spark.operators.graph_algos import bfs_distances
     from triplestore_spark.operators.tree import Tree
@@ -73,8 +85,10 @@ def test_pinned_query_plans_hold_no_rdd(spark):
         "descendants": Tree(g, "p").descendants("n0"),
         "bfs_distances": bfs_distances(edges, ["n0"]),
     }
+    listed = spark.createDataFrame([("n0",)], "node string")
+    assert _python_rdd_leaves(listed), "the check must see a Python RDD"
     for name, df in frames.items():
-        assert "LogicalRDD" not in optimized_str(df), name
+        assert not _python_rdd_leaves(df), name
     assert [r[0] for r in frames["property_path"].collect()] == ["<n2>"]
     assert sorted(r["node"] for r in frames["descendants"].collect()) == [
         "n0", "n1", "n2", "n3"

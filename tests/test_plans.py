@@ -366,3 +366,42 @@ def test_seq_closure_edge_relation_composed_once(mat_graph):
     # the composition is a single two-scan join, aggregated distinct
     assert opt.count("Join") == 1, opt
     assert "kg:mentions" in opt and "kg:source" in opt
+
+
+def test_closure_level_joins_leaves_and_shuffles_once(spark, monkeypatch):
+    """The fourth level of a closure: the frontier broadcasts against
+    the edge set in the static plan already, the min-depth merge is the
+    level's only hash shuffle, no anti-join re-reads the reached set,
+    and the edge set is a checkpoint leaf, not a cached relation."""
+    from triplestore_spark import schema as S
+    from triplestore_spark.operators import bgp
+    from triplestore_spark.operators.graph import RDFGraph
+    from triplestore_spark.session import local_frame
+
+    rows = [
+        (f"n{i}", False, "p", "res", f"n{j}", "", "")
+        for i in range(40)
+        for j in ((i + 1) % 40, (i * 7 + 1) % 40)
+    ]
+    g = RDFGraph(local_frame(spark, rows, S.TRIPLE_SCHEMA), cache=False)
+    levels = []
+    step = bgp._reach_level
+
+    def spy(state, edges, level):
+        levels.append(step(state, edges, level))
+        return levels[-1]
+
+    monkeypatch.setattr(bgp, "_reach_level", spy)
+    assert len(bgp.property_path(g, ["p*"], start="n0").collect()) == 40
+    assert len(levels) >= 4
+    level = levels[3]
+    level.collect()
+    adaptive = level._jdf.queryExecution().executedPlan()
+    plan = adaptive.toString()  # final and initial plan
+    assert "isFinalPlan=true" in plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "LeftAnti" not in plan, plan
+    assert "InMemory" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+    final = adaptive.finalPhysicalPlan().toString()
+    assert final.count("Exchange hashpartitioning") == 1, final

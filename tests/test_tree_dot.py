@@ -3,10 +3,12 @@
 
 import pytest
 
+from triplestore_spark import schema as S
 from triplestore_spark.dsl import parse_typed, subj_pred, subj_pred_res
 from triplestore_spark.operators.dot import encode_dot
-from triplestore_spark.operators.graph import TripleSource
+from triplestore_spark.operators.graph import RDFGraph, TripleSource
 from triplestore_spark.operators.tree import Tree
+from triplestore_spark.session import local_frame
 
 
 @pytest.fixture(scope="module")
@@ -88,6 +90,19 @@ def test_descendants_distributed_shape(tree_graph):
         ("7", 3),
         ("8", 3),
     }
+
+
+def test_walks_leave_no_cached_frame(spark, uncheckpointed_persisted):
+    """descendants / ancestors_df hold their edge set and levels as
+    checkpoint leaves: after collecting, no cached frame is left."""
+    rows = [(str(i), False, "->", "res", str(i + 1), "", "") for i in range(4)]
+    tree = Tree(
+        RDFGraph(local_frame(spark, rows, S.TRIPLE_SCHEMA), cache=False), "->"
+    )
+    assert len(tree.descendants("0").collect()) == 5
+    assert len(tree.ancestors_df("4").collect()) == 5
+    left = uncheckpointed_persisted()
+    assert not left, left
 
 
 def test_encode_dot(spark):

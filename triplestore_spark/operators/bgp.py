@@ -1467,9 +1467,9 @@ def _seq_edges(graph, inner_steps: Sequence[tuple]) -> DataFrame:
     '(p1/p2)*' closes over THIS. Each hop's edge frame (alternation /
     inverse / negated handled by _closure_edges) composes left-to-
     right with one equi-join per hop; the result is distinct (the
-    closure is set-valued anyway, and dedup shrinks the cached edge
-    set before the walk). Composing ONCE and caching beats deriving
-    the chain again at every closure level."""
+    closure is set-valued anyway, and dedup shrinks the checkpointed
+    edge set before the walk). Composing ONCE and checkpointing beats
+    deriving the chain again at every closure level."""
     cur: DataFrame | None = None
     for alts, lo, hi in inner_steps:
         if isinstance(alts, _SeqGroup) or (lo, hi) != (1, 1):
@@ -1492,6 +1492,50 @@ def _seq_edges(graph, inner_steps: Sequence[tuple]) -> DataFrame:
     return cur.distinct()
 
 
+def _reach_level(state: DataFrame, edges: DataFrame, level: int) -> DataFrame:
+    """One level of the depth-tagged reachability fixpoint. `state`
+    holds key columns ending in `_b` (the node reached) and `_l`, the
+    level the key was first reached at. Keys found at `level - 1` step
+    one edge (`_cs` -> `_cd`); the min(_l) merge keeps each key once at
+    its first depth, so a key reached again never re-enters the
+    frontier (cycle-safe, set-valued). Both inputs are plan leaves, so
+    the frontier join plans as a broadcast from their known sizes and
+    the merge is the level's one shuffle."""
+    keys = [c for c in state.columns if c != "_l"]
+    cand = (
+        state.where(F.col("_l") == level - 1)
+        .join(edges, F.col("_b") == F.col("_cs"))
+        .select(
+            *[c for c in keys if c != "_b"],
+            F.col("_cd").alias("_b"),
+            F.lit(level).alias("_l"),
+        )
+    )
+    return state.unionByName(cand).groupBy(*keys).agg(F.min("_l").alias("_l"))
+
+
+def _reach(
+    state: DataFrame, edges: DataFrame, levels: int
+) -> tuple[DataFrame, bool]:
+    """Up to `levels` _reach_level steps from `state` (its rows at
+    `_l` 0) over a checkpointed `edges` leaf. Each level is one eager
+    localCheckpoint whose own job counts the keys it newly reached (an
+    observed metric, no separate probe job), so the plan is flat at
+    every depth; the first level that reaches nothing new stops the
+    loop. Returns the state and whether its last level still grew."""
+    for level in range(1, levels + 1):
+        found = Observation()
+        new = F.count(F.when(F.col("_l") == level, 1)).alias("n")
+        state = (
+            _reach_level(state, edges, level)
+            .observe(found, new)
+            .localCheckpoint(eager=True)
+        )
+        if found.get["n"] == 0:
+            return state, False
+    return state, levels > 0
+
+
 def _closure_pairs(
     seed: DataFrame,
     edges: DataFrame,
@@ -1501,79 +1545,47 @@ def _closure_pairs(
     checkpoint_every: int = 8,
 ) -> DataFrame:
     """Distinct (_a, _b) pairs with _b reachable from a seed node _a
-    in between `lo` and `hi` hops (hi=None -> unbounded closure).
+    in between `lo` and `hi` hops (hi=None -> unbounded closure), plus
+    `_l`, the closure level past `lo` that first reached the pair.
 
-    Level-synchronous frontier expansion (the tree.py:53 shape, made
-    cycle-safe): `lo` mandatory exact hops, then 0..(hi-lo) closure
-    levels where each new frontier is anti-joined against everything
-    already reached — set semantics per SPARQL, so a cyclic graph
-    terminates in <= |reachable nodes| levels. Lineage is truncated
-    with a localCheckpoint every `checkpoint_every` levels (a deep
-    closure otherwise compounds the plan per level). The seed set is
+    `lo` exact hops (deduplicated between hops, localCheckpoint'ed every
+    `checkpoint_every` hops to bound a long prefix's plan), then up to
+    hi-lo _reach levels — set semantics per SPARQL, so a cyclic graph
+    terminates in <= |reachable nodes| levels; an unbounded closure
+    still growing after `max_depth` levels raises. The seed set is
     the BOUND frontier (pinned endpoint or the chain's bindings so
     far), never all nodes — an unrooted all-pairs closure is refused
-    upstream because it is quadratic in components at 100 TB.
-
-    The edge cache is released on every exit, a failed level included.
-    Each level's emptiness is read from its own checkpoint job (an
-    observed row count), not from a second isEmpty() job."""
-    edges = edges.cache()
-    try:
-        cur = seed.select(F.col("_n").alias("_a"), F.col("_n").alias("_b"))
-        for i in range(lo):
-            cur = (
-                cur.join(edges, cur["_b"] == edges["_cs"])
-                .select("_a", F.col("_cd").alias("_b"))
-                .distinct()
-            )
-            if (i + 1) % checkpoint_every == 0:
-                cur = cur.localCheckpoint(eager=True)
-        if hi is not None and hi == lo:
-            # exact-hop path: no closure levels, and the returned frame
-            # re-reads edges `lo` times in one action at most, so it
-            # needs no cache past return
-            return cur.distinct()
-        # Each level's frontier is localCheckpoint'ed (eager): the
-        # anti-join against `reached` otherwise nests the ENTIRE
-        # previous lineage into every new level — exponential plan
-        # growth that OOMs the driver analyzing level ~10 regardless of
-        # data size. With the checkpoint the frontier plan is flat and
-        # `reached` is a linear union of checkpointed levels, collapsed
-        # every `checkpoint_every` levels. One tiny Spark job per LEVEL
-        # (graph diameter), never per node — the same cost model as
-        # tree.py's frontier walk. Every returned frame is materialized,
-        # so it no longer references the edge lineage.
-        reached = cur.distinct().localCheckpoint(eager=True)
-        frontier = reached
-        level = 0
-        while hi is None or level < hi - lo:
-            level += 1
-            found = Observation()
-            nxt = (
-                frontier.join(edges, frontier["_b"] == edges["_cs"])
-                .select("_a", F.col("_cd").alias("_b"))
-                .distinct()
-                .join(reached, ["_a", "_b"], "left_anti")
-                .observe(found, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            if found.get["n"] == 0:
-                return reached
-            reached = reached.unionByName(nxt)
-            frontier = nxt
-            if level % checkpoint_every == 0:
-                reached = reached.localCheckpoint(eager=True)
-            if hi is None and level >= max_depth:
-                raise ValueError(
-                    f"property_path: closure still expanding after "
-                    f"{max_depth} levels; raise closure_max_depth if the "
-                    "graph really is that deep"
-                )
-        return reached
-    finally:
-        # guide §5: unpersist when done; repeated closure calls (or a
-        # failed level) otherwise leave cached edge copies behind
-        edges.unpersist()
+    upstream because it is quadratic in components at 100 TB. With
+    closure levels to run, the edge set is localCheckpoint'ed once:
+    a leaf every level joins, with no cache to release."""
+    closure = hi is None or hi > lo
+    if closure:
+        edges = edges.localCheckpoint(eager=True)
+    cur = seed.select(F.col("_n").alias("_a"), F.col("_n").alias("_b"))
+    for i in range(lo):
+        cur = cur.join(edges, cur["_b"] == edges["_cs"]).select(
+            "_a", F.col("_cd").alias("_b")
+        )
+        if i + 1 < lo:
+            # the last hop is deduplicated below: by the exact path's
+            # distinct, or by the first closure level's min merge
+            cur = cur.distinct()
+        if (i + 1) % checkpoint_every == 0:
+            cur = cur.localCheckpoint(eager=True)
+    if not closure:
+        return cur.distinct()
+    pairs, expanding = _reach(
+        cur.withColumn("_l", F.lit(0)),
+        edges,
+        max_depth if hi is None else hi - lo,
+    )
+    if hi is None and expanding:
+        raise ValueError(
+            f"property_path: closure still expanding after "
+            f"{max_depth} levels; raise closure_max_depth if the "
+            "graph really is that deep"
+        )
+    return pairs
 
 
 def property_path(
@@ -1594,9 +1606,9 @@ def property_path(
     '^p|q*' reads as SPARQL (^p|q)*), or a quantified SEQUENCE GROUP
     '(p1/p2)*' (closure over the composed relation: the inner hops —
     alternation/inverse/negated fine, nested quantifiers refused —
-    join into ONE cached (src, dst) edge set via _seq_edges, and the
-    frontier walks that, so each closure level costs one join however
-    long the inner sequence is). Hop variables stitch
+    join into ONE checkpointed (src, dst) edge set via _seq_edges, and
+    the frontier walks that, so each closure level costs one join
+    however long the inner sequence is). Hop variables stitch
     object-of-step-i to subject-of-step-i+1 — exact because both
     positions bind the same node-key space. `start`/`end` pin the
     endpoints (subject string / Obj or IRI string respectively).
@@ -1610,7 +1622,9 @@ def property_path(
     step's one-hop edge set (the reference's unbounded recursive walk,
     tree.go:58-82, re-expressed as one join per LEVEL instead of one
     query per node), seeded from the chain's bindings so far — never
-    from all nodes. Cycle-safe: each level anti-joins the reached set
+    from all nodes. Each level is one join of the newest frontier
+    against the checkpointed edge set, merged into a single
+    depth-tagged reached set that keeps every pair at its first depth
     (SPARQL path closure is existential / set-valued), so cyclic
     graphs terminate; `closure_max_depth` bounds a runaway unbounded
     walk with a clear error.
@@ -1752,7 +1766,10 @@ def property_path(
         order = [c for c in ("src", "dst") if c in out.columns]
         if order:
             out = out.select(*order)
-    return out.distinct() if distinct else out
+    # a lone quantified step is distinct already: its closure pairs
+    # are, and a pinned endpoint keeps one pair per remaining column
+    lone_closure = len(steps) == 1 and steps[0][1:] != (1, 1)
+    return out.distinct() if distinct and not lone_closure else out
 
 
 def parse_bgp(text: str) -> list[Pattern]:
@@ -2129,7 +2146,8 @@ def property_path_sql(
     (DuckDB runs it verbatim) for the Kleene paths. Bounded
     quantifiers carry a depth column capped in the recursive arm;
     unbounded ones rely on UNION's (src, cur) dedup for cycle-safe
-    termination, exactly the anti-join the DataFrame closure uses.
+    termination, the same set semantics as the DataFrame closure's
+    min-depth merge.
 
     Same endpoint rules as property_path, including walking a leading
     unrooted closure backward from a pinned end (the result columns

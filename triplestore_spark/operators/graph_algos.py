@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from triplestore_spark.operators.bgp import _reach
 from triplestore_spark.operators.graph import RDFGraph
 from triplestore_spark.schema import KIND_RESOURCE
 from triplestore_spark.session import local_frame
@@ -162,18 +163,18 @@ def bfs_distances(
     *,
     max_depth: int = 20,
     direction: str = "out",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source BFS: (node, dist) with dist = fewest hops from ANY
     seed (seeds at 0), up to `max_depth`. `direction`: 'out' follows
     edges, 'in' reverses them, 'both' treats the graph undirected.
 
-    Level-synchronous frontier expansion with a visited anti-join —
-    the same cycle-safe shape as the tree walk and the Kleene closure
-    (tree.py / bgp.py): each level is one equi-join frontier x edges
-    plus one anti-join against visited, lineage checkpointed every few
-    levels; stops early on an empty frontier. Unreachable nodes are
-    absent (no sentinel rows)."""
+    The Kleene closure's level step (bgp._reach) keyed by node alone:
+    one depth-tagged reached set where dist is the level a node was
+    first reached, each level one frontier join against the
+    checkpointed edge set plus a min-depth merge, checkpointed with
+    the level's new-node count observed in the same job; stops early
+    at the first level that reaches nothing new. Unreachable nodes
+    are absent (no sentinel rows)."""
     if direction not in ("out", "in", "both"):
         raise ValueError(f"bfs_distances: bad direction {direction!r}")
     if isinstance(seeds, DataFrame):
@@ -186,41 +187,18 @@ def bfs_distances(
             [(s,) for s in dict.fromkeys(seeds)],
             "node string",
         )
-    e = edges.select("src", "dst")
-    if direction == "in":
-        e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    elif direction == "both":
+    src, dst = ("dst", "src") if direction == "in" else ("src", "dst")
+    e = edges.select(F.col(src).alias("_cs"), F.col(dst).alias("_cd"))
+    if direction == "both":
         e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            edges.select(F.col(dst).alias("_cs"), F.col(src).alias("_cd"))
         )
-    e = e.distinct()
-    visited = seeds.withColumn("dist", F.lit(0))
-    frontier = visited.select("node")
-    levels = [visited]
-    for depth in range(1, int(max_depth) + 1):
-        nxt = (
-            e.join(
-                frontier.select(F.col("node").alias("src")), "src",
-                "leftsemi",
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
-        )
-        if depth % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        visited = visited.unionByName(nxt)
-        if depth % checkpoint_every == 0:
-            visited = visited.localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-    out = levels[0]
-    for df in levels[1:]:
-        out = out.unionByName(df)
-    return out
+    reached, _ = _reach(
+        seeds.select(F.col("node").alias("_b"), F.lit(0).alias("_l")),
+        e.distinct().localCheckpoint(eager=True),
+        int(max_depth),
+    )
+    return reached.select(F.col("_b").alias("node"), F.col("_l").alias("dist"))
 
 
 def k_core(

@@ -4,7 +4,7 @@ A tree view is (graph, predicate): edges are triples of that
 predicate with resource objects (reference tree.go:8-24). The
 reference recurses per node with O(1) index lookups; at Spark scale
 the equivalent is LEVEL-SYNCHRONOUS FRONTIER EXPANSION — one join per
-depth level against the edge set, not one query per node.
+depth level against the checkpointed edge set, not one query per node.
 
 `descendants`/`ancestors` return distributed (node, depth, path)
 DataFrames; `traverse_dfs`/`traverse_ancestors` then produce the
@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from triplestore_spark.operators.graph import RDFGraph
@@ -55,65 +55,48 @@ class Tree:
         """(node, depth, path) for the subtree under `root`.
 
         path = array of nodes from root to node; used both for exact
-        DFS ordering and as lineage. Frontier join per level; at k
-        levels the plan depth is k — for deep graphs checkpoint every
-        few levels (the edge set itself is cached once).
-        """
-        spark = self._g.df.sparkSession
-        edges = self.edges().cache()
-        frontier = local_frame(
-            spark,
-            [(root, 0, [root])],
-            "node string, depth int, path array<string>",
-        )
-        out = frontier
-        depth = 0
-        while depth < max_depth:
-            frontier = (
-                frontier.join(edges, frontier["node"] == edges["parent"])
-                .select(
-                    F.col("child").alias("node"),
-                    (F.col("depth") + 1).alias("depth"),
-                    F.concat(F.col("path"), F.array(F.col("child"))).alias(
-                        "path"
-                    ),
-                )
-            )
-            frontier = frontier.cache()
-            if frontier.isEmpty():
-                break
-            out = out.unionByName(frontier)
-            depth += 1
-        return out
+        DFS ordering and as lineage."""
+        return self._walk(root, "parent", "child", max_depth)
 
     def ancestors_df(self, node: str, max_depth: int = 64) -> DataFrame:
         """(node, depth, path) walking parent edges upward
         (reference tree.go:58-82 uses WithPredObj per node)."""
-        spark = self._g.df.sparkSession
-        edges = self.edges().cache()
+        return self._walk(node, "child", "parent", max_depth)
+
+    def _walk(
+        self, start: str, src: str, dst: str, max_depth: int
+    ) -> DataFrame:
+        """Frontier join per level along `src` -> `dst` edges, every
+        path kept (a tree has one path per node). The edge set is
+        localCheckpoint'ed once, a plan leaf each level joins; each
+        level is one eager localCheckpoint whose own job counts its
+        rows (an observed metric, no separate emptiness probe), so
+        the plan stays flat at any depth and no cache outlives the
+        call."""
+        edges = self.edges().localCheckpoint(eager=True)
         frontier = local_frame(
-            spark,
-            [(node, 0, [node])],
+            self._g.df.sparkSession,
+            [(start, 0, [start])],
             "node string, depth int, path array<string>",
         )
         out = frontier
-        depth = 0
-        while depth < max_depth:
+        for _ in range(max_depth):
+            found = Observation()
             frontier = (
-                frontier.join(edges, frontier["node"] == edges["child"])
+                frontier.join(edges, frontier["node"] == edges[src])
                 .select(
-                    F.col("parent").alias("node"),
+                    F.col(dst).alias("node"),
                     (F.col("depth") + 1).alias("depth"),
-                    F.concat(F.col("path"), F.array(F.col("parent"))).alias(
+                    F.concat(F.col("path"), F.array(F.col(dst))).alias(
                         "path"
                     ),
                 )
-                .cache()
+                .observe(found, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
             )
-            if frontier.isEmpty():
+            if found.get["n"] == 0:
                 break
             out = out.unionByName(frontier)
-            depth += 1
         return out
 
     # -- exact reference visit order --
