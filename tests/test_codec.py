@@ -26,6 +26,9 @@ from triplestore_spark.sources.ntriples import (
     parse_nt_line,
     parse_nt_text,
 )
+from triplestore_spark.schema import TRIPLE_FIELDS
+
+from oracles import arrow_parse_rows
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -212,6 +215,22 @@ def test_failfast_error_names_the_line_and_file(spark, tmp_path):
     assert "bad_input_file.nt" in str(exc.value)
 
 
+def test_read_ntriples_splits_lines_like_the_reference(spark, tmp_path):
+    """Lines end at '\\n' only, with one trailing '\\r' dropped
+    (bufio.ScanLines): a bare '\\r' inside a literal is content, not a
+    line break."""
+    from triplestore_spark.sources.ntriples import read_ntriples
+
+    data = b'<s> <p> "a\rb" .\n<s2> <p> <o> .\r\n'
+    p = tmp_path / "cr.nt"
+    p.write_bytes(data)
+    got = sorted(
+        tuple(r) for r in read_ntriples(spark, str(p)).select(*TRIPLE_FIELDS).collect()
+    )
+    assert got == sorted(parse_nt_text(data.decode("utf-8")))
+    assert len(got) == 2
+
+
 def test_quarantine_keeps_rejects_with_provenance(spark, tmp_path):
     from pyspark.sql import functions as F
     from triplestore_spark.sources.ntriples import decode_lines_quarantine
@@ -327,8 +346,6 @@ def test_w3c_positives_batch_path(path):
     """The Arrow/RE2 batch parser must produce exactly the state
     machine's rows on every W3C positive fixture (the executor hot
     path sees real-world grammar, not just encoder output)."""
-    from triplestore_spark.sources.ntriples import parse_nt_batch
-
     text = open(path, encoding="utf-8").read()
     lines = [ln.rstrip("\r") for ln in text.split("\n")]
     slow = []
@@ -336,58 +353,7 @@ def test_w3c_positives_batch_path(path):
         row = parse_nt_line(ln)
         if row is not None:
             slow.append(row)
-    assert parse_nt_batch(lines) == slow
-
-
-def test_jvm_fast_decode_differential(spark):
-    """The Catalyst decode path (regexp_replace -> split -> when
-    assembly) must produce IDENTICAL rows to the Arrow/RE2 path on
-    every W3C positive fixture AND the adversarial quarantine corpus
-    (PERMISSIVE: both paths skip the genuinely-bad lines) — full
-    nine-column comparison, not just tkey."""
-    from triplestore_spark.sources.ntriples import decode_lines_df
-
-    lines = []
-    for path in sorted(
-        glob.glob(os.path.join(FIXTURES, "w3c_suite", "positives", "*.nt"))
-    ) + [os.path.join(FIXTURES, "nt_quarantine_corpus.nt")]:
-        text = open(path, encoding="utf-8").read()
-        lines += [ln.rstrip("\r") for ln in text.split("\n")]
-    # raw control-delimiter lines must route to the slow branch, not
-    # corrupt the fast one
-    lines += ['<http://a> <http://p> "has\x01ctl" .']
-    df = spark.createDataFrame([(ln,) for ln in lines], "value string")
-    cols = [
-        "subject", "subject_is_bnode", "predicate", "object_kind",
-        "object_value", "object_type", "object_lang", "okey", "tkey",
-    ]
-
-    def rows(jvm):
-        out = decode_lines_df(df, mode="PERMISSIVE", jvm_fast=jvm)
-        return sorted(tuple(r[c] for c in cols) for r in out.collect())
-
-    a, b = rows(True), rows(False)
-    assert a == b, sorted(set(a) ^ set(b))[:5]
-
-
-def test_jvm_fast_grammar_covers_encoder_output(spark):
-    """Every encoder-emitted line must match the Java-regex grammar
-    (slow-branch row count 0 on clean corpora) — otherwise the
-    codegen fast path silently degrades to the Python boundary."""
-    from triplestore_spark.sources.ntriples import (
-        _JVM_CTL,
-        _JVM_LINE_PATTERN,
-        _JVM_REPL,
-        encode_df,
-    )
-    from pyspark.sql import functions as F
-
-    enc = encode_df(triples_to_df(spark, CORPUS))
-    r = enc.withColumn(
-        "_r", F.regexp_replace(F.col("value"), _JVM_LINE_PATTERN, _JVM_REPL)
-    )
-    rejected = r.where(~F.contains(F.col("_r"), F.lit(_JVM_CTL))).count()
-    assert rejected == 0
+    assert arrow_parse_rows(lines) == sorted(slow)
 
 
 def test_binary_split_coverage_verification(spark, tmp_path):

@@ -6,6 +6,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from oracles import union_find_components
+
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
@@ -128,7 +130,7 @@ def test_connected_components_chain_and_singletons(spark):
     """A 4-node chain (transitive dups) collapses to one cluster with
     the min id as canonical; disjoint pairs stay separate clusters."""
     from triplestore_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
         dedup_keep_list,
     )
 
@@ -136,7 +138,10 @@ def test_connected_components_chain_and_singletons(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)],
         "doc_a long, doc_b long",
     )
-    cc = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    cc = {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components_star(pairs).collect()
+    }
     assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
     docs = spark.createDataFrame(
@@ -147,15 +152,15 @@ def test_connected_components_chain_and_singletons(spark):
 
 
 def test_connected_components_long_path_converges(spark):
-    """A 12-node path exercises multi-round propagation + the
+    """A 12-node path exercises multi-round alternation + the
     localCheckpoint lineage truncation (real dup clusters are dense
     and converge in a couple of rounds; a path is the worst case)."""
-    from triplestore_spark.operators.dedup import connected_components
+    from triplestore_spark.operators.dedup import connected_components_star
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
     )
-    cc = connected_components(pairs, max_iter=20)
+    cc = connected_components_star(pairs, max_iter=20)
     assert {r["cluster_id"] for r in cc.collect()} == {0}
 
 
@@ -1082,36 +1087,43 @@ def test_ivf_largek_uses_udf_path_and_recalls(spark, emb):
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    """A path graph longer than max_iter must raise (silent wrong
-    labels were ADVICE r2's correctness trap), and 'warn' mode must
-    warn instead."""
+    """Stopping before the fixed point must raise (silent wrong labels
+    were ADVICE r2's correctness trap) and 'warn' mode must warn; a
+    graph whose last allowed round IS the fixed point is accepted."""
     import warnings
 
     from triplestore_spark.operators.dedup import (
         ConvergenceError,
-        connected_components,
+        connected_components_star,
     )
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], ["doc_a", "doc_b"]
     )
-    with pytest.raises(ConvergenceError):
-        connected_components(pairs, max_iter=3)
-    # diameter == max_iter: the last counted round IS the finishing
-    # move — the confirming pass must accept it, not raise
-    short = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3)], ["doc_a", "doc_b"]
-    )
-    ok = connected_components(short, max_iter=3)
+    # rounds == the round that OBSERVED stability; the fixed point was
+    # reached one round earlier
+    free = {}
+    connected_components_star(pairs, stats=free).collect()
+    assert free["converged"] and free["rounds"] >= 3
+    fixed_at = free["rounds"] - 1
+    # max_iter == fixed_at: the loop never sees stability, only the
+    # confirming round does — it must accept, not raise
+    stats = {}
+    ok = connected_components_star(pairs, max_iter=fixed_at, stats=stats)
     assert {r["cluster_id"] for r in ok.collect()} == {0}
+    assert stats == {"rounds": free["rounds"], "converged": True}
+    with pytest.raises(ConvergenceError):
+        connected_components_star(pairs, max_iter=fixed_at - 1)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        labels = connected_components(pairs, max_iter=3, on_nonconverged="warn")
-        labels.collect()
+        stats = {}
+        labels = connected_components_star(
+            pairs, max_iter=fixed_at - 1, on_nonconverged="warn", stats=stats
+        )
         assert any("converge" in str(x.message) for x in w)
-    # and with enough iterations the same graph is fine
-    done = connected_components(pairs, max_iter=25)
-    assert done.where(F.col("cluster_id") != 0).count() == 0
+    assert stats["converged"] is False
+    # partial labels still cover every node
+    assert labels.count() == 13
 
 
 def test_bpe_token_count_matches_python_re(docs):
@@ -1191,15 +1203,12 @@ def test_pack_documents_formula_and_shards(spark, docs):
 
 
 def test_connected_components_star_equivalence(spark):
-    """Alternating large-star/small-star (VERDICT r3 #3 evaluation)
-    must produce exactly label propagation's clustering on chains,
-    stars, cliques, and a seeded random graph."""
+    """Alternating large-star/small-star must produce exactly the
+    union-find clustering on chains, stars, cliques, and a seeded
+    random graph."""
     import random
 
-    from triplestore_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from triplestore_spark.operators.dedup import connected_components_star
 
     rng = random.Random(7)
     graphs = {
@@ -1216,15 +1225,11 @@ def test_connected_components_star_equivalence(spark):
     }
     for name, es in graphs.items():
         pairs = spark.createDataFrame(es, "doc_a long, doc_b long")
-        a = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components(pairs, max_iter=40).collect()
-        }
-        b = {
+        got = {
             r["doc_id"]: r["cluster_id"]
             for r in connected_components_star(pairs).collect()
         }
-        assert a == b, (name, a, b)
+        assert got == union_find_components(es), name
 
 
 def test_connected_components_star_beats_diameter(spark):
@@ -1252,38 +1257,6 @@ def test_connected_components_star_nonconvergence_raises(spark):
     )
     with pytest.raises(ConvergenceError):
         connected_components_star(pairs, max_iter=1)
-
-
-def test_dedup_keep_list_star_algorithm_identical(spark):
-    """dedup_keep_list's two algorithms must keep exactly the same
-    survivors — and the default must be the star path (VERDICT r4 #2:
-    the plan the oracle checks every round is the better one)."""
-    import inspect
-
-    from triplestore_spark.operators.dedup import dedup_keep_list
-
-    assert (
-        inspect.signature(dedup_keep_list).parameters["algorithm"].default
-        == "star"
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    docs = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 10, 11, 20, 21, 99]], "doc_id long"
-    )
-    a = sorted(
-        r["doc_id"]
-        for r in dedup_keep_list(docs, pairs, algorithm="label").collect()
-    )
-    b = sorted(
-        r["doc_id"]
-        for r in dedup_keep_list(docs, pairs, algorithm="star").collect()
-    )
-    assert a == b == [1, 10, 20, 99]
-    with pytest.raises(ValueError, match="algorithm"):
-        dedup_keep_list(docs, pairs, algorithm="nope")
 
 
 # -- best-fit (FFD) sequence packing ----------------------------------

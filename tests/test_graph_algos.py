@@ -18,6 +18,8 @@ from triplestore_spark.operators.graph_algos import (
     triangle_count,
 )
 
+from oracles import union_find_components
+
 
 def _edges_df(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
@@ -189,27 +191,6 @@ def test_edge_view_from_graph(spark):
     assert got == [("a", "b"), ("b", "c")]
 
 
-def _union_find_components(pairs):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        if a != b:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-    comp = {}
-    for x in list(parent):
-        comp.setdefault(find(x), []).append(x)
-    return {x: min(members) for members in comp.values() for x in members}
-
-
 def test_connected_components_vs_union_find(spark):
     """Seeded random digraphs (direction ignored, self-loops dropped):
     component = min node id, matching an independent union-find."""
@@ -221,7 +202,7 @@ def test_connected_components_vs_union_find(spark):
                 for _ in range(25)
             }
         )
-        want = _union_find_components(pairs)
+        want = union_find_components(pairs)
         got = {
             r["node"]: r["component"]
             for r in connected_components(_edges_df(spark, pairs)).collect()

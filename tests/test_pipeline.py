@@ -67,58 +67,86 @@ def test_pipeline_pr_vs_oracle(spark, docs, sf_dir):
     assert (p, r) == (1.0, 1.0)
 
 
+def _corpus_mention_surfaces(corpus, candidate_surfaces):
+    """Reference: (doc_id, surface) from the corpus text spans."""
+    doc_tokens = F.flatten(
+        F.transform(
+            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
+            lambda s: F.split(s["text"], " "),
+        )
+    )
+    surfaces = F.array_intersect(
+        F.array_distinct(doc_tokens),
+        F.array(*[F.lit(x) for x in sorted(candidate_surfaces)]),
+    )
+    return corpus.select("doc_id", F.explode(surfaces).alias("surface"))
+
+
+def _corpus_media_objects(corpus):
+    """Reference: (doc, media ref) from the corpus image spans."""
+    media = F.filter(F.col("spans"), lambda s: s["kind"] == "image")
+    return corpus.select(
+        "doc_id", F.explode(media).alias("span")
+    ).select("doc_id", "span.media_ref")
+
+
 def test_candidates_direct_equals_corpus(spark, docs):
     """The doc-direct extractors (hot path, r7 optimization) must
-    produce exactly the rows of the corpus-mediated extractors."""
+    produce exactly the rows the corpus text and image spans give."""
     from triplestore_spark.pipeline import spec
     from triplestore_spark.pipeline.extract import (
-        extract_media_triples,
-        extract_media_triples_direct,
-        extract_mention_surfaces,
+        extract_all_candidates_direct,
         extract_mention_surfaces_direct,
     )
 
     corpus = build_corpus(docs)
     surf = list(spec.GAZETTEER)
-    a = extract_mention_surfaces(corpus, candidate_surfaces=surf)
+    a = _corpus_mention_surfaces(corpus, surf)
     b = extract_mention_surfaces_direct(docs, candidate_surfaces=surf)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    m_corpus = extract_media_triples(corpus)
-    m_direct = extract_media_triples_direct(docs)
-    assert sorted(map(tuple, m_corpus.collect())) == sorted(
+    m_direct = (
+        extract_all_candidates_direct(docs, {})
+        .where(F.col("predicate") == spec.PRED_HAS_MEDIA)
+        .select("subject", "object_value")
+    )
+    assert sorted(map(tuple, _corpus_media_objects(corpus).collect())) == sorted(
         map(tuple, m_direct.collect())
     )
 
 
 def test_single_pass_equals_union(spark, docs):
     """The single-pass extractor (hot path, r7 optimization: one
-    projection + one explode for all three candidate streams) must be
-    row-multiset-identical to the three-branch union it replaces."""
+    projection + one explode for all candidate streams) must be
+    row-multiset-identical to the broadcast gazetteer join unioned with
+    the mention-free pass — the shape of candidate_triples' join
+    strategies. The second mapping adds an N:1 surface->iri pair and
+    surfaces no document contains (the join's inner-drop)."""
     from triplestore_spark.pipeline import spec
     from triplestore_spark.pipeline.extract import (
         extract_all_candidates_direct,
-        extract_media_triples_direct,
         extract_mention_surfaces_direct,
-        extract_metadata_triples,
     )
-    from triplestore_spark.pipeline.resolve import resolve_mentions_static
+    from triplestore_spark.pipeline.resolve import resolve_mentions
+    from triplestore_spark.session import local_frame
 
-    mapping = dict(spec.GAZETTEER)
-    single = extract_all_candidates_direct(docs, mapping)
-    union = (
-        resolve_mentions_static(
+    n_to_one = {"table": "kg:ent/hot", "value": "kg:ent/hot", "row": "kg:ent/cold"}
+    for mapping in (dict(spec.GAZETTEER), {**n_to_one, "zzz-none": "kg:ent/x"}):
+        single = extract_all_candidates_direct(docs, mapping)
+        dictionary = local_frame(
+            spark, sorted(mapping.items()), "surface string, iri string"
+        )
+        union = resolve_mentions(
             extract_mention_surfaces_direct(
                 docs, candidate_surfaces=list(mapping)
             ),
-            mapping,
-        )
-        .unionByName(extract_media_triples_direct(docs))
-        .unionByName(extract_metadata_triples(docs))
-    )
-    assert single.columns == union.columns
-    assert sorted(map(tuple, single.collect())) == sorted(
-        map(tuple, union.collect())
-    )
+            dictionary,
+            strategy="broadcast",
+        ).unionByName(extract_all_candidates_direct(docs, {}))
+        assert single.columns == union.columns
+        got = sorted(map(tuple, single.collect()))
+        assert got == sorted(map(tuple, union.collect()))
+        hits = {r[4] for r in got if r[2] == spec.PRED_MENTIONS}
+        assert hits <= set(mapping.values()) and hits, mapping
 
 
 def test_pipeline_dedup_is_canonical(spark, sf_dir):

@@ -52,13 +52,13 @@ def test_column_pruning_reaches_scan(mat_graph):
 def test_gazetteer_join_is_broadcast(spark, sf_dir):
     """The ER dictionary join must be a BroadcastHashJoin — a shuffle
     of the mention stream here would dominate the pipeline at scale."""
-    from triplestore_spark.pipeline.corpus import build_corpus, read_documents
-    from triplestore_spark.pipeline.extract import extract_mention_surfaces
+    from triplestore_spark.pipeline.corpus import read_documents
+    from triplestore_spark.pipeline.extract import extract_mention_surfaces_direct
     from triplestore_spark.pipeline.resolve import gazetteer_df, resolve_mentions
 
-    corpus = build_corpus(read_documents(spark, sf_dir))
     resolved = resolve_mentions(
-        extract_mention_surfaces(corpus), gazetteer_df(spark)
+        extract_mention_surfaces_direct(read_documents(spark, sf_dir)),
+        gazetteer_df(spark),
     )
     plan = plan_str(resolved)
     assert "BroadcastHashJoin" in plan
@@ -68,15 +68,18 @@ def test_gazetteer_join_is_broadcast(spark, sf_dir):
 def test_extract_path_whole_stage_codegen(spark, sf_dir):
     """The extraction scan->explode->project path must run inside
     WholeStageCodegen spans (no interpreted projection fallbacks)."""
-    from triplestore_spark.pipeline.corpus import build_corpus, read_documents
-    from triplestore_spark.pipeline.extract import extract_metadata_triples
+    from triplestore_spark.pipeline.corpus import read_documents
+    from triplestore_spark.pipeline.extract import extract_all_candidates_direct
+    from triplestore_spark.pipeline.spec import GAZETTEER
 
-    meta = extract_metadata_triples(read_documents(spark, sf_dir))
+    cands = extract_all_candidates_direct(
+        read_documents(spark, sf_dir), GAZETTEER
+    )
     # the under-split repartition wraps the plan in AdaptiveSparkPlan,
     # which hides codegen markers until stages are finalized — execute
     # first, then read the final adaptive plan (r7)
-    meta.collect()
-    plan = plan_str(meta)
+    cands.collect()
+    plan = plan_str(cands)
     # '*(n)' prefixes mark WholeStageCodegen stages in the tree string
     assert "*(1)" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

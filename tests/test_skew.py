@@ -48,39 +48,6 @@ def test_salted_join_spreads_hot_key(spark):
     assert a == b
 
 
-def test_static_equals_broadcast(spark):
-    """The literal-map resolver (r7 hot-path) is row-identical to the
-    broadcast join over the same dictionary, including the inner-join
-    drop of unmapped surfaces and N:1 surface->iri mappings."""
-    from triplestore_spark.pipeline.resolve import (
-        resolve_mentions,
-        resolve_mentions_static,
-    )
-
-    mapping = {"hot": "kg:ent/hot", "warm": "kg:ent/hot", "cold": "kg:ent/cold"}
-    mentions = spark.range(500).select(
-        F.concat(F.lit("doc:"), F.col("id")).alias("doc_id"),
-        F.element_at(
-            F.array(F.lit("hot"), F.lit("warm"), F.lit("cold"), F.lit("none")),
-            (F.col("id") % 4 + 1).cast("int"),
-        ).alias("surface"),
-    )
-    dictionary = spark.createDataFrame(
-        sorted(mapping.items()), ["surface", "iri"]
-    )
-    a = sorted(
-        tuple(r)
-        for r in resolve_mentions_static(mentions, mapping).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in resolve_mentions(
-            mentions, dictionary, strategy="broadcast"
-        ).collect()
-    )
-    assert a == b and len(a) == 375  # 'none' dropped
-
-
 def test_salt_column_balances_shuffle(spark):
     """The salted key (surface, salt) splits the hot key across
     reducers: measure the shuffle partition histogram of the salted

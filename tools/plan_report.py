@@ -41,8 +41,8 @@ def main():
         MaterializedGraph,
         materialize_graph,
     )
-    from triplestore_spark.pipeline.corpus import build_corpus, read_documents
-    from triplestore_spark.pipeline.extract import extract_mention_surfaces
+    from triplestore_spark.pipeline.corpus import read_documents
+    from triplestore_spark.pipeline.extract import extract_mention_surfaces_direct
     from triplestore_spark.pipeline.resolve import gazetteer_df, resolve_mentions
     from triplestore_spark.pipeline.run import run_pipeline
 
@@ -53,9 +53,9 @@ def main():
         ("Flagship pipeline (extract -> resolve -> dedup)", fmt(canon))
     )
 
-    corpus = build_corpus(read_documents(spark, sf_dir))
     resolved = resolve_mentions(
-        extract_mention_surfaces(corpus), gazetteer_df(spark)
+        extract_mention_surfaces_direct(read_documents(spark, sf_dir)),
+        gazetteer_df(spark),
     )
     sections.append(("ER broadcast join (gazetteer)", fmt(resolved)))
 

@@ -1536,20 +1536,24 @@ def _reach(
     return state, levels > 0
 
 
+# exact hops between localCheckpoints of a long path prefix, which
+# bound that prefix's plan
+_PREFIX_HOPS_PER_CHECKPOINT = 8
+
+
 def _closure_pairs(
     seed: DataFrame,
     edges: DataFrame,
     lo: int,
     hi: int | None,
     max_depth: int,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Distinct (_a, _b) pairs with _b reachable from a seed node _a
     in between `lo` and `hi` hops (hi=None -> unbounded closure), plus
     `_l`, the closure level past `lo` that first reached the pair.
 
     `lo` exact hops (deduplicated between hops, localCheckpoint'ed every
-    `checkpoint_every` hops to bound a long prefix's plan), then up to
+    _PREFIX_HOPS_PER_CHECKPOINT hops), then up to
     hi-lo _reach levels — set semantics per SPARQL, so a cyclic graph
     terminates in <= |reachable nodes| levels; an unbounded closure
     still growing after `max_depth` levels raises. The seed set is
@@ -1570,7 +1574,7 @@ def _closure_pairs(
             # the last hop is deduplicated below: by the exact path's
             # distinct, or by the first closure level's min merge
             cur = cur.distinct()
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % _PREFIX_HOPS_PER_CHECKPOINT == 0:
             cur = cur.localCheckpoint(eager=True)
     if not closure:
         return cur.distinct()

@@ -192,129 +192,10 @@ def minhash_lsh_pairs(
 
 
 class ConvergenceError(RuntimeError):
-    """Label propagation exited at max_iter with labels still moving —
-    the returned clusters would be WRONG (a chain longer than max_iter
-    hops would be split into several 'canonical' docs), so downstream
+    """Connected components exited at max_iter with the edge set still
+    changing — the returned clusters would be WRONG (one component
+    could be split into several 'canonical' docs), so downstream
     dedup_keep_list would silently under-dedup."""
-
-
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 25,
-    checkpoint_every: int = 5,
-    on_nonconverged: str = "raise",
-) -> DataFrame:
-    """(doc_a, doc_b) undirected duplicate edges -> (doc_id,
-    cluster_id) where cluster_id is the minimum doc id reachable —
-    the canonical representative of each near-dup cluster.
-
-    Min-label propagation: each round every node takes the min of its
-    own label and its neighbors' labels; converges in O(diameter)
-    rounds (dup clusters are dense, so a handful). Every join is an
-    equi-join on node id — no quadratic key anywhere — and lineage is
-    truncated with localCheckpoint every few rounds so the iterative
-    plan does not grow unboundedly (the same discipline as the tree
-    traversal frontier, operators/tree.py).
-
-    If the loop exits at max_iter with labels still changing (a
-    component whose diameter exceeds max_iter — plausible for chained
-    near-dup clusters at corpus scale) the result is NOT a valid
-    clustering; `on_nonconverged` controls whether that raises
-    ConvergenceError (default) or warns and returns the partial
-    labels ("warn").
-
-    Job-count discipline (VERDICT r3 #3): propagation rounds are LAZY
-    — only every `checkpoint_every`-th round materializes (one
-    localCheckpoint job) and probes convergence (one limit(1) join
-    job) against the labels at the previous probe. Labels are
-    monotonically non-increasing per node, so an unchanged window
-    proves every intermediate round was also a no-op — a fixed point,
-    with no separate confirming pass. The old design paid the probe
-    plus a driver round-trip EVERY round; at sf0.1 that driver churn,
-    not data volume, dominated dedup_clusters' runtime."""
-    if on_nonconverged not in ("raise", "warn"):
-        raise ValueError(f"on_nonconverged={on_nonconverged!r}")
-    checkpoint_every = max(1, checkpoint_every)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    edges = edges.localCheckpoint()
-    labels = labels.localCheckpoint()
-
-    def step(labels):
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("dst"), F.col("label").alias("nl")
-                ),
-                on="dst",
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("nl").alias("nbr_label"))
-        )
-        return labels.join(nbr_min, on="node", how="left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        )
-
-    def probe(new_labels, old_labels) -> int:
-        return (
-            new_labels.alias("n")
-            .join(old_labels.alias("o"), on="node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-
-    at_last_probe = labels
-    converged = False
-    rounds_since_probe = 0
-    for _i in range(max_iter):
-        labels = step(labels)
-        rounds_since_probe += 1
-        if rounds_since_probe == checkpoint_every:
-            labels = labels.localCheckpoint()
-            if probe(labels, at_last_probe) == 0:
-                converged = True
-                break
-            at_last_probe = labels
-            rounds_since_probe = 0
-    if not converged and rounds_since_probe:
-        # tail window shorter than checkpoint_every (max_iter not a
-        # multiple): materialize and probe it too
-        labels = labels.localCheckpoint()
-        converged = probe(labels, at_last_probe) == 0
-    if not converged:
-        # max_iter's window DID move labels, but the finishing move may
-        # have been the window's last round — one confirming pass
-        # distinguishes 'just converged' from 'still propagating'
-        new_labels = step(labels).localCheckpoint()
-        converged = probe(new_labels, labels) == 0
-        labels = new_labels
-    if not converged:
-        msg = (
-            f"connected_components did not converge in {max_iter} "
-            "iterations — a component's diameter exceeds max_iter and "
-            "the returned cluster labels are not final"
-        )
-        if on_nonconverged == "raise":
-            raise ConvergenceError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning)
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -366,20 +247,27 @@ def connected_components_star(
     on_nonconverged: str = "raise",
     stats: dict | None = None,
 ) -> DataFrame:
-    """Alternating large-star/small-star connected components — the
-    O(log^2 n)-round algorithm (public: Kiveris et al., SoCC'14) for
-    graphs whose components may be CHAIN-shaped, where min-label
-    propagation's O(diameter) rounds is the scale risk (VERDICT r3 #3
-    'evaluate large-star/small-star'). Same output contract as
-    connected_components: (doc_id, cluster_id = component minimum).
+    """(doc_a, doc_b) undirected duplicate edges -> (doc_id,
+    cluster_id) where cluster_id is the minimum doc id reachable — the
+    canonical representative of each near-dup cluster.
+
+    Alternating large-star/small-star connected components — the
+    O(log^2 n)-round algorithm (public: Kiveris et al., SoCC'14), so
+    CHAIN-shaped components (transitive paraphrase chains) cannot blow
+    the round count the way min-label propagation's O(diameter) rounds
+    would: a 200-node chain converges in ~5 alternating rounds.
 
     Every operation is an equi-join/groupBy on node ids; rounds are
     materialized with localCheckpoint and convergence is edge-set
     stability of the small-star output (count match + empty
-    difference — both sides deduped). Equivalence with label
-    propagation is locked by tests/test_dataops.py on chains, stars,
-    and seeded random graphs; a 200-node chain converges in ~5
-    alternating rounds here vs 200 label-propagation rounds.
+    difference — both sides deduped). Equality with a union-find
+    oracle is locked by tests/test_dataops.py on chains, stars, cliques
+    and seeded random graphs.
+
+    If the loop exits at max_iter with the edge set still changing,
+    the result is NOT a valid clustering; `on_nonconverged` controls
+    whether that raises ConvergenceError (default) or warns and
+    returns the partial labels ("warn").
 
     When a dict is passed as `stats`, it is filled with observability
     counters after the run: 'rounds' (alternating large+small star
@@ -416,8 +304,7 @@ def connected_components_star(
     if not converged:
         # the loop's LAST round may itself have been the fixed point
         # (stability is only observable one round later) — confirm with
-        # one extra alternating round before failing, mirroring
-        # connected_components' boundary handling
+        # one extra alternating round before failing
         new_edges = _small_star(_large_star(edges)).localCheckpoint()
         rounds += 1
         if (
@@ -452,28 +339,11 @@ def connected_components_star(
     )
 
 
-def dedup_keep_list(
-    docs: DataFrame, pairs: DataFrame, algorithm: str = "star"
-) -> DataFrame:
+def dedup_keep_list(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """The dedup DELIVERABLE: which documents survive. Every doc not
     in any dup cluster survives; within a cluster only the canonical
-    (minimum) doc id survives.
-
-    algorithm='star' (default since r5 — VERDICT r4 #2, the
-    driver-oracled path) runs the alternating large-star/small-star
-    variant: O(log^2 n) rounds regardless of component shape, so
-    CHAIN-shaped components (transitive paraphrase chains) cannot blow
-    the round count, and it measured ~30% faster than label
-    propagation at 10x replication (9.4 vs 13.6 s). algorithm='label'
-    keeps min-label propagation (O(diameter) rounds) as the
-    equivalence cross-check; both produce identical clusterings
-    (locked in tests/test_dataops.py)."""
-    if algorithm == "label":
-        cc = connected_components(pairs)
-    elif algorithm == "star":
-        cc = connected_components_star(pairs)
-    else:
-        raise ValueError(f"algorithm={algorithm!r} (use 'label' or 'star')")
+    (minimum) doc id survives, as labelled by connected_components_star."""
+    cc = connected_components_star(pairs)
     drop = cc.where(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     return docs.join(drop, on="doc_id", how="left_anti")
 

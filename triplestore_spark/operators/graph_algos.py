@@ -323,7 +323,7 @@ def connected_components(
     Thin adapter over the alternating large-star/small-star machinery
     the dedup funnel runs in production (operators/dedup.py
     connected_components_star — O(log^2 n) rounds, chain-safe,
-    equivalence-locked against label propagation there). Direction is
+    checked against a union-find oracle in tests). Direction is
     ignored (weak components); isolated nodes don't appear because the
     edge view has no rows for them."""
     from triplestore_spark.operators.dedup import connected_components_star

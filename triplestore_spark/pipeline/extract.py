@@ -20,48 +20,22 @@ from triplestore_spark import schema as S
 from triplestore_spark.pipeline import spec
 
 
-def extract_mention_surfaces(
-    corpus: DataFrame, candidate_surfaces: list[str] | None = None
-) -> DataFrame:
-    """(doc_id, surface) candidate mentions from the text spans.
-
-    With `candidate_surfaces` (the dictionary's surface vocabulary,
-    small enough to inline as a literal array) the explode is pruned
-    JVM-side with array_distinct + array_intersect — per document only
-    the distinct dictionary hits survive instead of every token
-    occurrence (~10x fewer rows into the resolve join, and the
-    downstream distinct becomes near-free). Without it, one row per
-    token occurrence (the general path for large vocabularies, where
-    the resolve join is the detector)."""
-    doc_tokens = F.flatten(
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-            lambda s: F.split(s["text"], " "),
-        )
-    )
-    if candidate_surfaces is not None:
-        surfaces = F.array_intersect(
-            F.array_distinct(doc_tokens),
-            F.array(*[F.lit(x) for x in sorted(candidate_surfaces)]),
-        )
-    else:
-        surfaces = doc_tokens
-    return corpus.select(
-        "doc_id", F.explode(surfaces).alias("surface")
-    )
-
-
 def extract_mention_surfaces_direct(
     docs: DataFrame, candidate_surfaces: list[str] | None = None
 ) -> DataFrame:
-    """Same (doc_id, surface) rows as extract_mention_surfaces(
-    build_corpus(docs), ...), computed straight from the raw document
-    text. The text spans are consecutive word chunks re-joined with
-    single spaces, so the token multiset of all text spans IS
-    split(text, ' ') — building the chunk strings (array_join +
-    re-split per chunk) only to tokenize them again is pure waste on
-    the hot path. array_intersect already returns distinct elements,
-    so no separate array_distinct pass is needed."""
+    """(doc_id, surface) candidate mentions, computed straight from the
+    raw document text. The corpus text spans (build_corpus) are
+    consecutive word chunks re-joined with single spaces, so the token
+    multiset of all text spans IS split(text, ' ') — building the chunk
+    strings only to tokenize them again is pure waste on the hot path.
+
+    With `candidate_surfaces` (the dictionary's surface vocabulary,
+    small enough to inline as a literal array) the explode is pruned
+    JVM-side with array_intersect — per document only the distinct
+    dictionary hits survive instead of every token occurrence (~10x
+    fewer rows into the resolve join). Without it, one row per token
+    occurrence (the general path for large vocabularies, where the
+    resolve join is the detector)."""
     words = F.split(F.col("text"), " ")
     if candidate_surfaces is not None:
         surfaces = F.array_intersect(
@@ -76,88 +50,33 @@ def extract_mention_surfaces_direct(
     )
 
 
-def extract_media_triples_direct(docs: DataFrame) -> DataFrame:
-    """Same rows as extract_media_triples(build_corpus(docs)): media
-    spans exist for chunk index j < ceil(n_words/CHUNK_WORDS) with
-    (doc_id * 31 + j) % MEDIA_EVERY == 0 — derivable without
-    materializing any span text."""
-    W = spec.CHUNK_WORDS
-    words = F.split(F.col("text"), " ")
-    n_chunks = F.floor((F.size(words) + W - 1) / W).cast("int")
-    js = F.filter(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda j: (F.col("doc_id") * 31 + j) % spec.MEDIA_EVERY == 0,
-    )
-    media = docs.select("doc_id", F.explode(js).alias("j"))
-    return media.select(
-        F.concat(F.lit("doc:"), F.col("doc_id")).alias("subject"),
-        F.lit(False).alias("subject_is_bnode"),
-        F.lit(spec.PRED_HAS_MEDIA).alias("predicate"),
-        F.lit(S.KIND_RESOURCE).alias("object_kind"),
-        F.concat(
-            F.lit("media://"), F.col("doc_id"), F.lit("/"), F.col("j")
-        ).alias("object_value"),
-        F.lit("").alias("object_type"),
-        F.lit("").alias("object_lang"),
-    )
-
-
-def extract_media_triples(corpus: DataFrame) -> DataFrame:
-    """T2: (doc, kg:hasMedia, <media_ref>) candidate triples."""
-    media = corpus.select(
-        "doc_id",
-        F.explode(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "image")
-        ).alias("span"),
-    )
-    return media.select(
-        F.col("doc_id").alias("subject"),
-        F.lit(False).alias("subject_is_bnode"),
-        F.lit(spec.PRED_HAS_MEDIA).alias("predicate"),
-        F.lit(S.KIND_RESOURCE).alias("object_kind"),
-        F.col("span.media_ref").alias("object_value"),
-        F.lit("").alias("object_type"),
-        F.lit("").alias("object_lang"),
-    )
-
-
 def extract_all_candidates_direct(
     docs: DataFrame, mapping: dict[str, str]
 ) -> DataFrame:
-    """All three candidate streams (mentions + media + metadata) in ONE
-    projection + ONE explode over the raw documents.
+    """All candidate triples of the documents in ONE projection + ONE
+    explode: T1 mentions resolved through `mapping` (surface -> iri,
+    inlined as a literal map; an empty mapping gives no mention
+    triples), T2 media and T3-T6 metadata.
 
-    Row-multiset-identical to
-
-        resolve_mentions_static(extract_mention_surfaces_direct(docs,
-            list(mapping)), mapping)
-          .unionByName(extract_media_triples_direct(docs))
-          .unionByName(extract_metadata_triples(docs))
-
-    (locked by tests/test_pipeline.py::test_single_pass_equals_union).
-
-    Why: the union shape scans/shuffles the documents once PER BRANCH —
-    column pruning projects each branch differently ([doc_id, text] for
-    mentions/media vs all five columns for metadata), so exchange reuse
-    cannot collapse them: the round-start plan ran three separate
-    single-task scans (plans/r07/q1_pipeline_count_before.txt), and
-    after the under-split repartition it carried two separate
-    RoundRobinPartitioning exchanges of the same documents
-    (plans/r07/q1_pipeline_count_mid.txt) — and it splits the text once
-    per branch. Building the three span-triple arrays in one
+    Why one pass: a union of per-stream extractors scans and shuffles
+    the documents once PER BRANCH — column pruning projects each
+    branch differently, so exchange reuse cannot collapse them
+    (plans/r07/q1_pipeline_count_before.txt ran three single-task
+    scans; plans/r07/q1_pipeline_count_mid.txt carried two
+    RoundRobinPartitioning exchanges of the same documents) — and it
+    splits the text once per branch. Building the triple arrays in one
     pass and exploding their concat gives one scan, one exchange, one
     Generate (guide §1.2-1 'remove unnecessary passes', §2.4 'remove
-    shuffles outright'). Every expression below is copied verbatim from
-    the single-stream extractors so the row sets stay byte-identical.
+    shuffles outright'). A dictionary too large to inline resolves
+    through pipeline.resolve.resolve_mentions over
+    extract_mention_surfaces_direct instead, unioned with this pass
+    under an empty mapping (pipeline.run.candidate_triples).
     """
     W = spec.CHUNK_WORDS
     doc = F.concat(F.lit("doc:"), F.col("doc_id"))
     words = F.split(F.col("text"), " ")
     n_chunks = F.floor((F.size(words) + W - 1) / W).cast("int")
     title = F.array_join(F.slice(words, 1, spec.TITLE_WORDS), " ")
-    m = F.create_map(
-        *[F.lit(x) for kv in sorted(mapping.items()) for x in kv]
-    )
 
     def t(pred, kind, value, typ="", lang=""):
         return F.struct(
@@ -175,21 +94,25 @@ def extract_all_candidates_direct(
         "predicate:string,object_kind:string,object_value:string,"
         "object_type:string,object_lang:string>>"
     )
-    # T1 mentions: array_intersect returns the distinct dictionary hits
-    # (⊆ mapping keys, so the map lookup never misses — the static
-    # path's isNotNull filter is vacuous and elided); coalesce guards a
-    # NULL text, where the union shape yields no mention rows either
-    mentions = F.coalesce(
-        F.transform(
-            F.array_intersect(
-                words, F.array(*[F.lit(x) for x in sorted(mapping)])
-            ),
-            lambda s: t(
-                spec.PRED_MENTIONS, S.KIND_RESOURCE, m[s]
-            ),
-        ),
-        empty,
-    )
+    streams = []
+    if mapping:
+        # T1 mentions: array_intersect returns the distinct dictionary
+        # hits (⊆ mapping keys, so the map lookup never misses);
+        # coalesce guards a NULL text, which has no mentions
+        m = F.create_map(
+            *[F.lit(x) for kv in sorted(mapping.items()) for x in kv]
+        )
+        streams.append(
+            F.coalesce(
+                F.transform(
+                    F.array_intersect(
+                        words, F.array(*[F.lit(x) for x in sorted(mapping)])
+                    ),
+                    lambda s: t(spec.PRED_MENTIONS, S.KIND_RESOURCE, m[s]),
+                ),
+                empty,
+            )
+        )
     # T2 media: chunk index j < n_chunks with (doc_id*31 + j) % MEDIA_EVERY == 0
     media = F.coalesce(
         F.transform(
@@ -205,7 +128,7 @@ def extract_all_candidates_direct(
         ),
         empty,
     )
-    # T3-T6 metadata (same four structs as extract_metadata_triples)
+    # T3-T6 metadata
     metadata = F.array(
         t(
             spec.PRED_SOURCE,
@@ -227,57 +150,5 @@ def extract_all_candidates_direct(
         ),
         t(spec.PRED_TYPE, S.KIND_RESOURCE, F.lit(spec.TYPE_DOCUMENT)),
     )
-    return docs.select(
-        F.explode(F.concat(mentions, media, metadata)).alias("t")
-    ).select("t.*")
-
-
-def extract_metadata_triples(docs: DataFrame) -> DataFrame:
-    """T3-T6 from the raw document metadata. One projection + explode
-    of a 4-element triple array — narrow, shuffle-free."""
-    doc = F.concat(F.lit("doc:"), F.col("doc_id"))
-    words = F.split(F.col("text"), " ")
-    title = F.array_join(F.slice(words, 1, spec.TITLE_WORDS), " ")
-
-    def t(pred, kind, value, typ="", lang=""):
-        return F.struct(
-            doc.alias("subject"),
-            F.lit(False).alias("subject_is_bnode"),
-            F.lit(pred).alias("predicate"),
-            F.lit(kind).alias("object_kind"),
-            value.alias("object_value"),
-            (F.lit(typ) if isinstance(typ, str) else typ).alias("object_type"),
-            (F.lit(lang) if isinstance(lang, str) else lang).alias("object_lang"),
-        )
-
-    triples = F.array(
-        t(
-            spec.PRED_SOURCE,
-            S.KIND_RESOURCE,
-            F.concat(F.lit("src:"), F.col("source")),
-        ),
-        t(
-            spec.PRED_TITLE,
-            S.KIND_LITERAL,
-            title,
-            typ=S.XSD_STRING,
-            lang=F.col("lang"),
-        ),
-        t(
-            spec.PRED_NCHARS,
-            S.KIND_LITERAL,
-            F.col("n_chars").cast("string"),
-            typ=S.XSD_INTEGER,
-        ),
-        t(spec.PRED_TYPE, S.KIND_RESOURCE, F.lit(spec.TYPE_DOCUMENT)),
-    )
-    return docs.select(F.explode(triples).alias("t")).select("t.*")
-
-
-def extract_candidates(corpus: DataFrame, docs: DataFrame) -> dict:
-    """All candidate streams, pre-resolution."""
-    return {
-        "mentions": extract_mention_surfaces(corpus),
-        "media": extract_media_triples(corpus),
-        "metadata": extract_metadata_triples(docs),
-    }
+    streams += [media, metadata]
+    return docs.select(F.explode(F.concat(*streams)).alias("t")).select("t.*")

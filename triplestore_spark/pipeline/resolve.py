@@ -73,38 +73,6 @@ def resolve_mentions(
     )
 
 
-def resolve_mentions_static(
-    mentions: DataFrame, mapping: dict[str, str]
-) -> DataFrame:
-    """resolve_mentions for a DICTIONARY KNOWN AT PLAN TIME: the
-    surface->iri mapping inlines as a literal map expression, so the
-    lookup is a pure whole-stage-codegen projection — no broadcast
-    build, no join at all. Inner-join semantics: surfaces outside the
-    mapping yield NULL and drop. Row-identical to
-    resolve_mentions(mentions, <mapping as a frame>, 'broadcast')
-    (locked by tests/test_skew.py::test_static_equals_broadcast)."""
-    m = F.create_map(
-        *[F.lit(x) for kv in sorted(mapping.items()) for x in kv]
-    )
-    iri = m[F.col("surface")]
-    return (
-        mentions.select(
-            F.col("doc_id").alias("subject"),
-            iri.alias("object_value"),
-        )
-        .where(F.col("object_value").isNotNull())
-        .select(
-            "subject",
-            F.lit(False).alias("subject_is_bnode"),
-            F.lit(spec.PRED_MENTIONS).alias("predicate"),
-            F.lit(S.KIND_RESOURCE).alias("object_kind"),
-            "object_value",
-            F.lit("").alias("object_type"),
-            F.lit("").alias("object_lang"),
-        )
-    )
-
-
 def link_score_udf():
     """Vectorized entity-link scorer (SURVEY.md X4): batch similarity
     between a mention surface and a candidate dictionary surface as an

@@ -11,11 +11,11 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from triplestore_spark.operators.graph import dedup_triples
+from triplestore_spark.pipeline import spec
 from triplestore_spark.pipeline.corpus import read_documents
 from triplestore_spark.pipeline.extract import (
-    extract_media_triples_direct,
+    extract_all_candidates_direct,
     extract_mention_surfaces_direct,
-    extract_metadata_triples,
 )
 from triplestore_spark.pipeline.resolve import (
     gazetteer_df,
@@ -28,39 +28,28 @@ def candidate_triples(
     docs: DataFrame,
     strategy: str = "broadcast",
 ) -> DataFrame:
-    # Mentions and media are derived STRAIGHT from the documents: the
-    # interleaved-corpus span strings (build_corpus) are a pure
-    # intermediate for these two streams — token multiset and media
-    # chunk indices are functions of the raw text (see the *_direct
-    # extractors; equality with the corpus path is locked by
-    # tests/test_pipeline.py::test_candidates_direct_equals_corpus).
-    # Dropping the chunk-string materialization removed ~40% of the
-    # extraction stage's per-core compute (OPTIMIZATION_r07.md).
-    from triplestore_spark.pipeline import spec
+    """All candidate triples of `docs`, derived STRAIGHT from the
+    documents: the interleaved-corpus span strings (build_corpus) are a
+    pure intermediate here — token multiset and media chunk indices
+    are functions of the raw text. Dropping the chunk-string
+    materialization removed ~40% of the extraction stage's per-core
+    compute (OPTIMIZATION_r07.md).
 
+    strategy='broadcast': the gazetteer is a plan-time constant, so a
+    literal-map lookup inside the single extraction pass beats even a
+    broadcast join (no broadcast build per query, no join node — one
+    codegen projection). Any other strategy runs the gazetteer join
+    through resolve_mentions and unions it with the mention-free pass."""
+    mapping = dict(spec.GAZETTEER)
     if strategy == "broadcast":
-        # the gazetteer is a plan-time constant: a literal-map lookup
-        # beats even a broadcast join (no broadcast build per query,
-        # no join node — one codegen projection). Single-pass shape:
-        # all three streams from ONE projection + ONE explode — the
-        # union form scans and shuffles the documents once per branch
-        # (column pruning defeats exchange reuse across branches);
-        # equality locked by test_single_pass_equals_union.
-        from triplestore_spark.pipeline.extract import (
-            extract_all_candidates_direct,
-        )
-
-        return extract_all_candidates_direct(docs, dict(spec.GAZETTEER))
-
+        return extract_all_candidates_direct(docs, mapping)
     surfaces = extract_mention_surfaces_direct(
-        docs, candidate_surfaces=list(spec.GAZETTEER)
+        docs, candidate_surfaces=list(mapping)
     )
     mentions = resolve_mentions(
         surfaces, gazetteer_df(spark), strategy=strategy
     )
-    media = extract_media_triples_direct(docs)
-    metadata = extract_metadata_triples(docs)
-    return mentions.unionByName(media).unionByName(metadata)
+    return mentions.unionByName(extract_all_candidates_direct(docs, {}))
 
 
 def run_pipeline(

@@ -995,9 +995,8 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
 
     q["dedup_clusters"] = (
         # near-dup CLUSTERING: connected components over the verified
-        # minhash pairs — alternating large-star/small-star (the
-        # O(log^2 n)-round default since r5; label propagation remains
-        # the equivalence-locked cross-check in tests);
+        # minhash pairs — alternating large-star/small-star, the
+        # O(log^2 n)-round algorithm;
         # oracle = recursive-CTE reachability with min-id labels
         lambda spark, sf: DD.connected_components_star(_dup_pairs(spark, sf)),
         _DUP_PAIRS_SQL
@@ -1464,16 +1463,16 @@ def _parse_typed(value, typ, expected):
 
 
 def _fuzzy_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from triplestore_spark.pipeline.corpus import build_corpus, read_documents
-    from triplestore_spark.pipeline.extract import extract_mention_surfaces
+    from triplestore_spark.pipeline.corpus import read_documents
+    from triplestore_spark.pipeline.extract import extract_mention_surfaces_direct
     from triplestore_spark.pipeline.resolve import (
         gazetteer_df,
         resolve_mentions_fuzzy,
     )
 
-    corpus = build_corpus(read_documents(spark, sf_dir))
+    surfaces = extract_mention_surfaces_direct(read_documents(spark, sf_dir))
     return resolve_mentions_fuzzy(
-        extract_mention_surfaces(corpus), gazetteer_df(spark), min_score=0.99
+        surfaces, gazetteer_df(spark), min_score=0.99
     ).select("subject", F.col("object_value").alias("entity"))
 
 

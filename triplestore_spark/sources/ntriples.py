@@ -14,7 +14,7 @@ context-driven IRI expansion (encode.go:230-246, Go url.QueryEscape ==
 Python urllib.parse.quote_plus with default safe set).
 
 Spark integration: decode is `spark.read.text` -> Catalyst pre-filter
-of blank/comment lines -> `mapInPandas` Arrow-batched parse (the
+of blank/comment lines -> `mapInArrow` Arrow-batched parse (the
 state machine genuinely can't be a builtin expression); encode — with
 or without a context — is a pure Catalyst `concat/when` expression
 (whole-stage codegen, no Python in the hot path); the per-row Python
@@ -250,71 +250,33 @@ def parse_nt_line(line: str) -> Optional[tuple]:
 
 
 # ---------------------------------------------------------------------------
-# vectorized fast path
+# Arrow batch parse: vectorized grammar + state-machine fallback
 # ---------------------------------------------------------------------------
 
-# Conservative well-formed-line regex. It fires ONLY where its
-# interpretation provably equals the state machine's:
+# Conservative well-formed-line grammar, compiled by RE2 inside
+# pyarrow.compute.extract_regex (C++-side, no Python per row). It fires
+# ONLY where its interpretation provably equals the state machine's:
 # - bracketed tokens exclude <>/" so terminator lookahead is unambiguous
 # - literal content excludes '"' (the first closing quote IS the
 #   terminator when the suffix matches; quirky inner-quote lines fail
 #   the anchor and fall back)
-# - anchored at end-of-line (slow path tolerates trailing junk after
-#   the dot in some productions; those lines fall back)
-# Differential property tests assert fast==slow on accepted lines.
-import re
-
-_FAST_LINE = re.compile(
+# - anchored at end-of-line (the state machine tolerates trailing junk
+#   after the dot in some productions; those lines fall back)
+# pyarrow returns EMPTY STRINGS (not nulls) for capture groups that did
+# not participate in the match, so participation is signalled by
+# constant non-empty MARKER groups (om '<' / obm '_:' / tm '^^<');
+# bnode-subject-ness comes from the line's first two chars; a
+# participating lang tag is non-empty by its own grammar ([A-Za-z0-9-]+).
+# Differential property tests assert batch == state machine.
+_VEC_LINE_PATTERN = (
     r'^(?:<(?P<s>[^<>"]*)>|_:(?P<bs>[^ \t<]*))[ \t]*'
     r'<(?P<p>[^<>"]*)>[ \t]*'
-    r'(?:<(?P<o>[^<>"]*)>'
+    r'(?:(?P<om><)(?P<o>[^<>"]*)>'
     # bnode-object labels exclude '.'/'#' and must be followed by
     # explicit whitespace: the reference's parseBNodeObject terminates
     # a label at '.'-then-'#'/EOL (ntparser.go:205-216), so '_:.# .'
     # means label "" — labels with those characters (or no trailing
     # space) take the state-machine path instead of a greedy mismatch
-    r"|_:(?P<ob>[^ \t.#]*)[ \t]"
-    r'|"(?P<lit>[^"]*)"'
-    r'(?:\^\^<(?P<typ>[^<>"]*)>|@(?P<lang>[A-Za-z0-9-]+))?'
-    r")[ \t]*\.[ \t]*(?:#.*)?$"
-)
-
-
-def _fast_row(m: "re.Match") -> tuple:
-    s, bs, p = m.group("s"), m.group("bs"), m.group("p")
-    sub, is_bnode = (bs, True) if s is None else (s, False)
-    o, ob, lit = m.group("o"), m.group("ob"), m.group("lit")
-    if o is not None:
-        return (sub, is_bnode, p, S.KIND_RESOURCE, o, "", "")
-    if ob is not None:
-        return (sub, is_bnode, p, S.KIND_BNODE, ob, "", "")
-    typ, lang = m.group("typ"), m.group("lang")
-    if typ is not None:
-        return (sub, is_bnode, p, S.KIND_LITERAL, lit, typ, "")
-    if lang is not None:
-        return (
-            sub, is_bnode, p, S.KIND_LITERAL,
-            unescape_string_literal(lit), S.XSD_STRING, lang,
-        )
-    return (
-        sub, is_bnode, p, S.KIND_LITERAL,
-        unescape_string_literal(lit), S.XSD_STRING, "",
-    )
-
-
-# Batch-vectorized variant of the same conservative grammar, compiled
-# by RE2 inside pyarrow.compute.extract_regex (C++-side, no Python per
-# row). pyarrow returns EMPTY STRINGS (not nulls) for capture groups
-# that did not participate in the match, so participation is signalled
-# by constant non-empty MARKER groups (om '<' / obm '_:' / tm '^^<');
-# bnode-subject-ness comes from the line's first two chars; a
-# participating lang tag is non-empty by its own grammar ([A-Za-z0-9-]+).
-_VEC_LINE_PATTERN = (
-    r'^(?:<(?P<s>[^<>"]*)>|_:(?P<bs>[^ \t<]*))[ \t]*'
-    r'<(?P<p>[^<>"]*)>[ \t]*'
-    r'(?:(?P<om><)(?P<o>[^<>"]*)>'
-    # same bnode-object narrowing as _FAST_LINE (reference
-    # parseBNodeObject '.'-terminator quirks go to the state machine)
     r"|(?P<obm>_:)(?P<ob>[^ \t.#]*)[ \t]"
     r'|"(?P<lit>[^"]*)"'
     r'(?:(?P<tm>\^\^<)(?P<typ>[^<>"]*)>|@(?P<lang>[A-Za-z0-9-]+))?'
@@ -322,12 +284,32 @@ _VEC_LINE_PATTERN = (
 )
 
 
+def _arrow_triple_schema():
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            pa.field(f.name, pa.bool_() if f.name == "subject_is_bnode" else pa.string())
+            for f in S.TRIPLE_SCHEMA.fields
+        ]
+    )
+
+
+def _rows_batch(rows: list[tuple], schema):
+    """Python row tuples -> one pa.RecordBatch of `schema`."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)],
+        schema=schema,
+    )
+
+
 def _vectorized_parse(lines_arr):
     """pa.StringArray of raw lines -> (cols in TRIPLE_FIELDS order for
     the MATCHED rows only, validity mask over all input rows). Rows
     the conservative grammar rejects (validity False) must go through
-    the state machine — same contract as the per-row fast path, and
-    the differential property tests assert batch == state machine."""
+    the state machine."""
     import pyarrow.compute as pc
 
     trimmed = pc.utf8_ltrim(lines_arr, characters=" \t")
@@ -366,142 +348,54 @@ def _vectorized_parse(lines_arr):
     return cols, valid
 
 
-def parse_nt_batch(lines: list[str]) -> list[tuple]:
-    """Driver-side batch parse through the vectorized path with
-    state-machine fallback — returns rows in input order for matched-
-    or-fallback lines (blank/comment lines yield nothing). Exists so
-    the differential property tests can exercise the exact batch code
-    without a Spark session."""
+def parse_nt_arrow(lines, srcs=None) -> tuple[list, list[tuple]]:
+    """Parse a pa.StringArray of NT lines: the one batch parser behind
+    every Spark decode.
+
+    RE2 extract_regex + vectorized assembly handles the well-formed
+    lines with no Python per row; only the lines the conservative
+    grammar rejects go through the parse_nt_line state machine. Returns
+    (record batches over TRIPLE_FIELDS, rejects), where each reject is
+    (line, source, error) with `source` taken from the parallel `srcs`
+    array (None without one). Blank and comment lines yield nothing;
+    rows are not kept in input order."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    kept = [
-        ln for ln in lines
-        if (b := ln.lstrip(" \t")) and not b.startswith("#")
-    ]
-    if not kept:
-        return []
-    cols, valid = _vectorized_parse(pa.array(kept, type=pa.string()))
-    fast_rows = list(zip(*(c.to_pylist() for c in cols))) if len(cols[0]) else []
-    out = []
-    vi = 0
-    for i, ok in enumerate(valid.to_pylist()):
-        if ok:
-            out.append(tuple(fast_rows[vi]))
-            vi += 1
-        else:
-            row = parse_nt_line(kept[i].lstrip(" \t"))
-            if row is not None:
-                out.append(row)
-    return out
-
-
-# JVM-side (Catalyst) variant of the same conservative grammar. One
-# anchored regexp_replace maps a matching line to its capture groups
-# joined by \x01 (Java substitutes the EMPTY string for groups that
-# did not participate — the same convention pyarrow's extract_regex
-# gives us, so the marker-group trick carries over verbatim: group 2
-# '_:' marks a bnode subject, 5 '<' a resource object, 7 '_:' a bnode
-# object, 10 '^^<' an explicit datatype). A matched line therefore
-# contains exactly 11 \x01 delimiters; an unmatched line passes
-# through regexp_replace unchanged and (after the raw-\x01 pre-check)
-# contains none — that distinction routes rejects to the Arrow/state-
-# machine path. Groups: 1=s 2=bsm 3=bs 4=p 5=om 6=o 7=obm 8=ob 9=lit
-# 10=tm 11=typ 12=lang.
-_JVM_CTL = "\x01"
-_JVM_LINE_PATTERN = (
-    # leading whitespace folded into the pattern (the Arrow path
-    # ltrims before matching; one anchored match is cheaper here)
-    r'^[ \t]*(?:<([^<>"]*)>|(_:)([^ \t<]*))[ \t]*'
-    r'<([^<>"]*)>[ \t]*'
-    r'(?:(<)([^<>"]*)>'
-    # same bnode-object narrowing as _VEC_LINE_PATTERN (reference
-    # parseBNodeObject '.'-terminator quirks go to the state machine)
-    r"|(_:)([^ \t.#]*)[ \t]"
-    r'|"([^"]*)"'
-    r'(?:(\^\^<)([^<>"]*)>|@([A-Za-z0-9-]+))?'
-    r")[ \t]*\.[ \t]*(?:#.*)?$"
-)
-_JVM_REPL = _JVM_CTL.join(f"${i}" for i in range(1, 13))
-
-# Default for decode_lines_df(jvm_fast=None). MEASURED SLOWER than
-# the Arrow path and therefore OFF: at 12 M triples / local[32] with
-# full output materialization, Arrow/RE2 decodes in 2.05 s best vs
-# 3.74 s for this path (and 2.40 s even with the reject-detection
-# branch deleted — java.util.regex alone is ~2x slower than RE2 on
-# this grammar, and routing rejects costs a second full regex pass
-# because the two filter branches each rescan the source). Kept as a
-# differentially-tested alternative for deployments where the Python
-# worker boundary is the scarcer resource (e.g. small executors with
-# heavy Python memory pressure); both paths are pinned equal by
-# test_jvm_fast_decode_differential.
-NT_DECODE_JVM_FAST = False
-
-
-def _jvm_fast_triples(matched: DataFrame) -> DataFrame:
-    """Assemble TRIPLE_FIELDS from the \x01-joined groups in `_r`.
-
-    Mirrors _vectorized_parse exactly (same quirks: a literal with an
-    explicit ^^<...> datatype is NOT unescaped, a bare or lang-tagged
-    literal IS — reference ntparser.go:78-93), expressed as Catalyst
-    when-chains so the whole decode stays in codegen."""
-    a = F.split(F.col("_r"), _JVM_CTL, -1)
-
-    def g(i: int) -> Column:
-        return F.element_at(a, i)
-
-    is_bn_sub = g(2) == "_:"
-    is_res = g(5) == "<"
-    is_bn = g(7) == "_:"
-    has_typ = g(10) == "^^<"
-    has_lang = g(12) != ""
-    unesc = F.replace(
-        F.replace(g(9), F.lit("\\n"), F.lit("\n")),
-        F.lit("\\r"),
-        F.lit("\r"),
+    schema = _arrow_triple_schema()
+    cols, valid = _vectorized_parse(lines)
+    out = [pa.RecordBatch.from_arrays(cols, schema=schema)] if len(cols[0]) else []
+    if len(cols[0]) == len(lines):
+        return out, []
+    inv = pc.invert(valid)
+    bad_lines = pc.filter(lines, inv).to_pylist()
+    bad_srcs = (
+        pc.filter(srcs, inv).to_pylist() if srcs is not None else [None] * len(bad_lines)
     )
-    return matched.select(
-        F.when(is_bn_sub, g(3)).otherwise(g(1)).alias("subject"),
-        is_bn_sub.alias("subject_is_bnode"),
-        g(4).alias("predicate"),
-        F.when(is_res, F.lit(S.KIND_RESOURCE))
-        .when(is_bn, F.lit(S.KIND_BNODE))
-        .otherwise(F.lit(S.KIND_LITERAL))
-        .alias("object_kind"),
-        F.when(is_res, g(6))
-        .when(is_bn, g(8))
-        .when(has_typ, g(9))
-        .otherwise(unesc)
-        .alias("object_value"),
-        F.when(is_res | is_bn, F.lit(""))
-        .when(has_typ, g(11))
-        .otherwise(F.lit(S.XSD_STRING))
-        .alias("object_type"),
-        F.when(has_lang, g(12)).otherwise(F.lit("")).alias("object_lang"),
-    )
-
-
-def parse_nt_line_fast(line: str) -> Optional[tuple]:
-    """parse_nt_line with the regex fast path (identical results)."""
-    b = line.lstrip(" \t")
-    if not b or b[0] == "#":
-        return None
-    m = _FAST_LINE.match(b)
-    if m is not None:
-        return _fast_row(m)
-    return parse_nt_line(b)
+    rows, rejects = [], []
+    for line, src in zip(bad_lines, bad_srcs):
+        try:
+            row = parse_nt_line(line)
+        except NTParseError as e:
+            rejects.append((line, src, str(e)))
+            continue
+        if row is not None:
+            rows.append(row)
+    if rows:
+        out.append(_rows_batch(rows, schema))
+    return out, rejects
 
 
 def parse_nt_text(text: str) -> list[tuple]:
     """Parse a whole NT document (driver-side helper / oracle).
 
-    Splits on '\\n' only (with trailing '\\r' stripped), like Go's
-    bufio.ScanLines — str.splitlines() would also split on \\x1c-\\x1e,
-    \\x85, \\u2028 etc., which are valid characters inside lenient
-    literals."""
+    Splits on '\\n' only and drops one trailing '\\r', like Go's
+    bufio.ScanLines — str.splitlines() would also split on '\\r',
+    \\x1c-\\x1e, \\x85, \\u2028 etc., which are valid characters inside
+    lenient literals."""
     out = []
     for line in text.split("\n"):
-        line = line.rstrip("\r")
-        row = parse_nt_line(line)
+        row = parse_nt_line(line[:-1] if line.endswith("\r") else line)
         if row is not None:
             out.append(row)
     return out
@@ -512,29 +406,29 @@ def parse_nt_text(text: str) -> list[tuple]:
 # ---------------------------------------------------------------------------
 
 
+def _content_lines(
+    lines: DataFrame, col: str, src: Optional[Column]
+) -> DataFrame:
+    """`value` (plus `_src` when `src` is given) for the lines that are
+    not blank or comments — dropped JVM-side so Arrow only ships real
+    work."""
+    trimmed = F.ltrim(F.col(col))
+    cols = [F.col(col).alias("value")]
+    if src is not None:
+        cols.append(src.alias("_src"))
+    return lines.where(
+        (F.length(trimmed) > 0) & (F.substring(trimmed, 1, 1) != "#")
+    ).select(*cols)
+
+
 def decode_lines_df(
     lines: DataFrame,
     col: str = "value",
     mode: str = "FAILFAST",
     file_col: Optional[str] = None,
-    jvm_fast: Optional[bool] = None,
 ) -> DataFrame:
-    """Decode a DataFrame of NT lines into keyed triples.
-
-    Blank/comment lines are dropped JVM-side before the Python batch
-    boundary so Arrow only ships real work.
-
-    jvm_fast (default NT_DECODE_JVM_FAST=False): route lines the
-    conservative grammar accepts through a pure-Catalyst parse — one
-    anchored regexp_replace to a \\x01-joined group string, split +
-    when-chain assembly, all whole-stage codegen with no Python worker
-    or Arrow transfer; only regex-rejected lines (and lines containing
-    a raw \\x01) stream through the Arrow batch parser with its state-
-    machine fallback. Measured SLOWER than the Arrow path (see
-    NT_DECODE_JVM_FAST) — the default stays on Arrow/RE2; the flag
-    remains for environments where the Python boundary is the scarcer
-    resource. Differential tests pin all three parse paths
-    (Catalyst == Arrow/RE2 == state machine) on the same corpora.
+    """Decode a DataFrame of NT lines into keyed triples: one
+    `mapInArrow` over parse_nt_arrow.
 
     mode='FAILFAST' (default, the reference's behavior —
     ntparser.go:32-35 aborts on the first bad line) raises with the
@@ -547,88 +441,28 @@ def decode_lines_df(
     """
     if mode not in ("FAILFAST", "PERMISSIVE"):
         raise ValueError(f"unknown mode {mode!r}")
-    trimmed = F.ltrim(F.col(col))
-    cols = [F.col(col).alias("value")]
-    if file_col is not None:
-        cols.append(F.col(file_col).alias("_src"))
-    lines = lines.where(
-        (F.length(trimmed) > 0) & (F.substring(trimmed, 1, 1) != "#")
-    ).select(*cols)
+    lines = _content_lines(
+        lines, col, F.col(file_col) if file_col is not None else None
+    )
     permissive = mode == "PERMISSIVE"
     has_file = file_col is not None
 
     def _parse_batches(it: Iterator) -> Iterator:
-        # Arrow-native batch parse: RE2 extract_regex + vectorized
-        # assembly handles ~99% of lines with zero Python-per-row work
-        # (~2x the per-row regex fast path, which itself was ~3x the
-        # bare state machine); only grammar-quirky lines fall back to
-        # the state machine loop. mapInArrow skips the pandas object-
-        # frame entirely on both sides of the UDF.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arrow_schema = pa.schema(
-            [
-                pa.field("subject", pa.string()),
-                pa.field("subject_is_bnode", pa.bool_()),
-                pa.field("predicate", pa.string()),
-                pa.field("object_kind", pa.string()),
-                pa.field("object_value", pa.string()),
-                pa.field("object_type", pa.string()),
-                pa.field("object_lang", pa.string()),
-            ]
-        )
         for batch in it:
-            vals = batch.column(0)
-            cols, valid = _vectorized_parse(vals)
-            if len(cols[0]):
-                yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-            if len(cols[0]) == len(vals):
-                continue
-            # slow path for the rows the conservative grammar rejected
-            inv = pc.invert(valid)
-            bad_lines = pc.filter(vals, inv).to_pylist()
-            bad_srcs = (
-                pc.filter(batch.column(1), inv).to_pylist()
-                if has_file
-                else [None] * len(bad_lines)
+            good, rejects = parse_nt_arrow(
+                batch.column(0), batch.column(1) if has_file else None
             )
-            rows = []
-            for line, src in zip(bad_lines, bad_srcs):
-                try:
-                    row = parse_nt_line(line.lstrip(" \t"))
-                except NTParseError as e:
-                    if permissive:
-                        continue
-                    where = f" in file {src!r}" if has_file else ""
-                    raise NTParseError(
-                        f"{e} in line {line[:200]!r}{where}"
-                    ) from None
-                if row is not None:
-                    rows.append(row)
-            if rows:
-                arrays = [
-                    pa.array([r[i] for r in rows], type=fld.type)
-                    for i, fld in enumerate(arrow_schema)
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+            if rejects and not permissive:
+                line, src, err = rejects[0]
+                where = f" in file {src!r}" if has_file else ""
+                raise NTParseError(f"{err} in line {line[:200]!r}{where}")
+            yield from good
 
-    use_jvm = NT_DECODE_JVM_FAST if jvm_fast is None else jvm_fast
-    if not use_jvm:
-        return with_keys(
-            lines.mapInArrow(_parse_batches, schema=S.TRIPLE_SCHEMA)
-        )
-    r = lines.withColumn(
-        "_r", F.regexp_replace(F.col("value"), _JVM_LINE_PATTERN, _JVM_REPL)
-    )
-    ok = F.contains(F.col("_r"), F.lit(_JVM_CTL)) & ~F.contains(
-        F.col("value"), F.lit(_JVM_CTL)
-    )
-    fast = _jvm_fast_triples(r.where(ok))
-    slow = r.where(~ok).drop("_r").mapInArrow(
-        _parse_batches, schema=S.TRIPLE_SCHEMA
-    )
-    return with_keys(fast.unionByName(slow))
+    return with_keys(lines.mapInArrow(_parse_batches, schema=S.TRIPLE_SCHEMA))
+
+
+# the triple columns of a quarantine row
+_REJECT_TRIPLE = ("", False, "", "", "", "", "")
 
 
 def decode_lines_quarantine(
@@ -640,73 +474,35 @@ def decode_lines_quarantine(
     and samplable instead of silently dropped.
 
     Both outputs share one parse lineage; cache `lines` upstream if
-    both will be consumed (two actions = two scans otherwise).
-
-    Same Arrow-batch hot path as decode_lines_df (RE2 extract_regex +
-    vectorized assembly; only grammar-rejected lines hit the Python
-    state machine), so keeping the quarantine costs nothing on the
-    clean 99%."""
+    both will be consumed (two actions = two scans otherwise). Same
+    parse_nt_arrow batch parser as decode_lines_df, so keeping the
+    quarantine costs nothing on the clean lines."""
     from pyspark.sql import types as T
 
-    trimmed = F.ltrim(F.col(col))
-    cols = [F.col(col).alias("value")]
-    src_expr = F.col(file_col) if file_col is not None else F.lit("")
-    cols.append(src_expr.alias("_src"))
-    pruned = lines.where(
-        (F.length(trimmed) > 0) & (F.substring(trimmed, 1, 1) != "#")
-    ).select(*cols)
-
+    src = F.col(file_col) if file_col is not None else F.lit("")
+    pruned = _content_lines(lines, col, src)
+    reject_fields = ("_line", "_source_file", "_error")
     full_schema = T.StructType(
         S.TRIPLE_SCHEMA.fields
-        + [
-            T.StructField("_line", T.StringType()),
-            T.StructField("_source_file", T.StringType()),
-            T.StructField("_error", T.StringType()),
-        ]
+        + [T.StructField(n, T.StringType()) for n in reject_fields]
     )
-    blank = ("", False, "", "", "", "", "")
 
     def _parse_batches(it: Iterator) -> Iterator:
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        arrow_schema = pa.schema(
-            [pa.field(f.name, pa.bool_() if f.name == "subject_is_bnode"
-                      else pa.string())
-             for f in full_schema.fields]
-        )
-        def _nulls(n):
-            return pa.nulls(n, type=pa.string())
-
+        arrow_schema = _arrow_triple_schema()
+        for n in reject_fields:
+            arrow_schema = arrow_schema.append(pa.field(n, pa.string()))
         for batch in it:
-            vals = batch.column(0)
-            cols_f, valid = _vectorized_parse(vals)
-            if len(cols_f[0]):
-                n_ok = len(cols_f[0])
+            good, rejects = parse_nt_arrow(batch.column(0), batch.column(1))
+            for b in good:
+                nulls = [pa.nulls(b.num_rows, type=pa.string())] * 3
                 yield pa.RecordBatch.from_arrays(
-                    list(cols_f) + [_nulls(n_ok)] * 3, schema=arrow_schema
+                    b.columns + nulls, schema=arrow_schema
                 )
-            if len(cols_f[0]) == len(vals):
-                continue
-            inv = pc.invert(valid)
-            bad_lines = pc.filter(vals, inv).to_pylist()
-            bad_srcs = pc.filter(batch.column(1), inv).to_pylist()
-            rows = []
-            for line, src in zip(bad_lines, bad_srcs):
-                try:
-                    row = parse_nt_line(line.lstrip(" \t"))
-                except NTParseError as e:
-                    rows.append(blank + (line, src, str(e)))
-                    continue
-                if row is not None:
-                    rows.append(row + (None, None, None))
-            if rows:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([r[i] for r in rows], type=fld.type)
-                        for i, fld in enumerate(arrow_schema)
-                    ],
-                    schema=arrow_schema,
+            if rejects:
+                yield _rows_batch(
+                    [_REJECT_TRIPLE + r for r in rejects], arrow_schema
                 )
 
     parsed = pruned.mapInArrow(_parse_batches, schema=full_schema)
@@ -721,6 +517,19 @@ def decode_lines_quarantine(
     return good, bad
 
 
+def nt_text_lines(reader, path: str) -> DataFrame:
+    """(value, _src) text lines of the NT files under `path`, read with
+    `reader` (spark.read or spark.readStream). Lines split the way the
+    reference splits them (bufio.ScanLines, mirrored by parse_nt_text):
+    on '\\n' only, with one trailing '\\r' dropped. Spark's default text
+    reader also breaks lines at a bare '\\r', which is a valid character
+    inside a lenient literal."""
+    return reader.text(path, lineSep="\n").select(
+        F.regexp_replace("value", "\r\\z", "").alias("value"),
+        F.input_file_name().alias("_src"),
+    )
+
+
 def read_ntriples(
     spark: SparkSession, path: str, mode: str = "FAILFAST"
 ) -> DataFrame:
@@ -728,10 +537,7 @@ def read_ntriples(
     analog of the reference's goroutine-per-reader DatasetDecoder
     (reference decode.go:241-295). Parse failures name the offending
     file (decode.go:258-279)."""
-    text = spark.read.text(path).select(
-        "value", F.input_file_name().alias("_src")
-    )
-    return decode_lines_df(text, mode=mode, file_col="_src")
+    return decode_lines_df(nt_text_lines(spark.read, path), mode=mode, file_col="_src")
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from triplestore_spark.sources.ntriples import decode_lines_df
+from triplestore_spark.sources.ntriples import decode_lines_df, nt_text_lines
 
 DEFAULT_BUCKETS = 64
 _BUCKET = "tkey_bucket"
@@ -101,9 +101,8 @@ def bucket_expr(n_buckets: int = DEFAULT_BUCKETS):
 
 def stream_ntriples(spark: SparkSession, path: str) -> DataFrame:
     """readStream over a directory of .nt files -> streaming keyed
-    triple DataFrame (same decode UDF as batch)."""
-    lines = spark.readStream.format("text").load(path)
-    return decode_lines_df(lines)
+    triple DataFrame (same line split and decode as read_ntriples)."""
+    return decode_lines_df(nt_text_lines(spark.readStream, path), file_col="_src")
 
 
 def merge_batch_into_sink(
