@@ -976,7 +976,8 @@ def test_kleene_bad_quantifiers_refused(hand_graph):
 
 def test_kleene_max_depth_raises(spark):
     """A long chain past closure_max_depth raises instead of silently
-    truncating the closure."""
+    truncating the closure; a closure complete at exactly the bound is
+    accepted (one confirming level finds nothing new)."""
     rows = [
         (f"n{i}", False, "p", "res", f"n{i+1}", "", "") for i in range(12)
     ]
@@ -986,6 +987,11 @@ def test_kleene_max_depth_raises(spark):
     # and a depth that fits succeeds with the full reachable set
     got = _path_rows(g, ["p+"], start="n0", closure_max_depth=16)
     assert len(got) == 12
+    # the chain is 12 levels deep: 12 is the exact bound, 11 one short
+    got = _path_rows(g, ["p*"], start="n0", closure_max_depth=12)
+    assert len(got) == 13
+    with pytest.raises(ValueError, match="closure_max_depth"):
+        property_path(g, ["p*"], start="n0", closure_max_depth=11).collect()
 
 
 def test_closure_failed_level_releases_edge_cache(spark):

@@ -1,28 +1,33 @@
-"""Triangle counting + PageRank differentials: Spark vs a DuckDB
-3-way self-join oracle (exact integers) and an independent dense
-NumPy power iteration (same math, no Spark), plus closed-form
-invariants on known graphs."""
+"""Edge-view analytics differentials: triangles vs a DuckDB 3-way
+self-join oracle (exact integers), components vs a union-find, BFS
+vs a queue BFS, plus closed-form cases on known graphs."""
 
 import random
 
-import numpy as np
 import pytest
 
 from triplestore_spark import schema as S
+from triplestore_spark.operators.dedup import connected_components_star
 from triplestore_spark.operators.graph import RDFGraph
-from triplestore_spark.operators.graph_algos import (
-    connected_components,
-    degree_stats,
-    edge_view,
-    pagerank,
-    triangle_count,
-)
+from triplestore_spark.operators.graph_algos import edge_view, triangle_count
 
 from oracles import union_find_components
 
 
 def _edges_df(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
+
+
+def _components(edges, **kw):
+    """{node: component} of an edge view through the dedup CC:
+    direction ignored, self-loops dropped."""
+    pairs = edges.where("src <> dst").selectExpr(
+        "src AS doc_a", "dst AS doc_b"
+    )
+    return {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components_star(pairs, **kw).collect()
+    }
 
 
 def _duck_triangles(pairs):
@@ -61,23 +66,6 @@ def _duck_triangles(pairs):
         ).fetchall()
     )
     return total, per_node
-
-
-def _numpy_pagerank(pairs, damping=0.85, iterations=20):
-    nodes = sorted({a for a, _ in pairs} | {b for _, b in pairs})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    out = np.zeros(n)
-    for a, _ in pairs:
-        out[idx[a]] += 1
-    rank = np.full(n, 1.0 / n)
-    for _ in range(iterations):
-        inflow = np.zeros(n)
-        for a, b in pairs:
-            inflow[idx[b]] += rank[idx[a]] / out[idx[a]]
-        dangling = rank[out == 0].sum()
-        rank = (1 - damping) / n + damping * (dangling / n + inflow)
-    return dict(zip(nodes, rank))
 
 
 def test_triangles_complete_k5(spark):
@@ -125,58 +113,6 @@ def test_triangles_random_vs_duckdb(spark):
         assert got_per == want_per, round_i
 
 
-def test_degree_stats(spark):
-    pairs = [("a", "b"), ("a", "c"), ("b", "c")]
-    got = {
-        r["node"]: (r["out_degree"], r["in_degree"], r["degree"])
-        for r in degree_stats(_edges_df(spark, pairs)).collect()
-    }
-    assert got == {"a": (2, 0, 2), "b": (1, 1, 2), "c": (0, 2, 2)}
-
-
-def test_pagerank_cycle_is_uniform(spark):
-    """On a directed cycle every node has rank exactly 1/n at every
-    iteration — closed form."""
-    n = 6
-    pairs = [(f"c{i}", f"c{(i + 1) % n}") for i in range(n)]
-    ranks = {
-        r["node"]: r["rank"]
-        for r in pagerank(_edges_df(spark, pairs), iterations=7).collect()
-    }
-    for v in ranks.values():
-        assert v == pytest.approx(1.0 / n, abs=1e-12)
-
-
-def test_pagerank_mass_conserved_with_dangling(spark):
-    """Dangling nodes redistribute uniformly: total mass stays 1."""
-    pairs = [("a", "b"), ("b", "c"), ("a", "c"), ("d", "a")]
-    # c is dangling (no out-edges)
-    df = pagerank(_edges_df(spark, pairs), iterations=9)
-    total = sum(r["rank"] for r in df.collect())
-    assert total == pytest.approx(1.0, abs=1e-9)
-
-
-def test_pagerank_vs_numpy(spark):
-    """Seeded random digraph: Spark == independent dense NumPy power
-    iteration to 1e-9 (same math, no Spark)."""
-    rng = random.Random(7)
-    pairs = sorted(
-        {
-            (f"v{rng.randrange(18)}", f"v{rng.randrange(18)}")
-            for _ in range(70)
-        }
-    )
-    pairs = [(a, b) for a, b in pairs if a != b]
-    want = _numpy_pagerank(pairs)
-    got = {
-        r["node"]: r["rank"]
-        for r in pagerank(_edges_df(spark, pairs)).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], abs=1e-9), k
-
-
 def test_edge_view_from_graph(spark):
     """edge_view filters predicate + resource objects out of the
     canonical triple table (literals excluded)."""
@@ -203,11 +139,7 @@ def test_connected_components_vs_union_find(spark):
             }
         )
         want = union_find_components(pairs)
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(_edges_df(spark, pairs)).collect()
-        }
-        assert got == want, round_i
+        assert _components(_edges_df(spark, pairs)) == want, round_i
 
 
 def test_connected_components_chain(spark):
@@ -215,149 +147,9 @@ def test_connected_components_chain(spark):
     one component labeled by the min node in few star rounds."""
     pairs = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(39)]
     stats = {}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            _edges_df(spark, pairs), stats=stats
-        ).collect()
-    }
+    got = _components(_edges_df(spark, pairs), stats=stats)
     assert set(got.values()) == {"c00"} and len(got) == 40
     assert stats["converged"] and stats["rounds"] <= 12
-
-
-def test_pagerank_validations(spark):
-    with pytest.raises(ValueError, match="iterations"):
-        pagerank(_edges_df(spark, [("a", "b")]), iterations=0)
-    empty = _edges_df(spark, []).where("src <> src")
-    assert pagerank(empty, iterations=3).count() == 0
-
-
-def _py_kcore(pairs, k):
-    adj: dict[str, set] = {}
-    for a, b in pairs:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    changed = True
-    while changed:
-        changed = False
-        for n in [n for n, s in adj.items() if len(s) < k]:
-            for p in adj.pop(n):
-                adj[p].discard(n)
-            changed = True
-    return set(adj)
-
-
-def test_k_core_known_and_random(spark):
-    """K4 plus a pendant chain: the 3-core is exactly the K4; seeded
-    random graphs match an independent pure-python peeling."""
-    from triplestore_spark.operators.graph_algos import k_core
-
-    k4 = [(f"k{i}", f"k{j}") for i in range(4) for j in range(4) if i < j]
-    chain = [("k0", "p1"), ("p1", "p2")]
-    got = {
-        r["node"]
-        for r in k_core(_edges_df(spark, k4 + chain), 3).collect()
-    }
-    assert got == {"k0", "k1", "k2", "k3"}
-    rng = random.Random(13)
-    for round_i in range(2):
-        pairs = sorted(
-            {
-                (f"v{rng.randrange(18)}", f"v{rng.randrange(18)}")
-                for _ in range(45)
-            }
-        )
-        pairs = [(a, b) for a, b in pairs if a != b]
-        for k in (2, 3):
-            got = {
-                r["node"]
-                for r in k_core(_edges_df(spark, pairs), k).collect()
-            }
-            assert got == _py_kcore(pairs, k), (round_i, k)
-
-
-def _py_link_scores(pairs):
-    import math
-
-    adj: dict[str, set] = {}
-    for a, b in pairs:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    out = {}
-    nodes = sorted(adj)
-    for i, a in enumerate(nodes):
-        for b in nodes[i + 1:]:
-            if b in adj[a]:
-                continue
-            common = adj[a] & adj[b]
-            if not common:
-                continue
-            cn = len(common)
-            out[(a, b)] = (
-                cn,
-                cn / (len(adj[a]) + len(adj[b]) - cn),
-                sum(1.0 / math.log(len(adj[m])) for m in common),
-            )
-    return out
-
-
-def test_link_prediction_vs_python(spark):
-    """Seeded random graphs: (pair set, all three metrics) match an
-    independent pure-python computation to 1e-12."""
-    from triplestore_spark.operators.graph_algos import (
-        link_prediction_scores,
-    )
-
-    rng = random.Random(23)
-    for round_i in range(2):
-        pairs = sorted(
-            {
-                (f"v{rng.randrange(14)}", f"v{rng.randrange(14)}")
-                for _ in range(40)
-            }
-        )
-        pairs = [(a, b) for a, b in pairs if a != b]
-        want = _py_link_scores(pairs)
-        got = {
-            (r["a"], r["b"]): (
-                r["common_neighbors"],
-                r["jaccard"],
-                r["adamic_adar"],
-            )
-            for r in link_prediction_scores(
-                _edges_df(spark, pairs)
-            ).collect()
-        }
-        assert set(got) == set(want), round_i
-        for key in want:
-            assert got[key][0] == want[key][0], key
-            assert got[key][1] == pytest.approx(want[key][1], abs=1e-12)
-            assert got[key][2] == pytest.approx(want[key][2], abs=1e-12)
-
-
-def test_link_prediction_excludes_existing_edges(spark):
-    """A triangle has no candidate pairs (all pairs are edges); a
-    path a-m-b yields exactly (a, b)."""
-    from triplestore_spark.operators.graph_algos import (
-        link_prediction_scores,
-    )
-
-    tri = [("a", "b"), ("b", "c"), ("a", "c")]
-    assert link_prediction_scores(_edges_df(spark, tri)).count() == 0
-    path = [("a", "m"), ("m", "b")]
-    rows = link_prediction_scores(_edges_df(spark, path)).collect()
-    assert len(rows) == 1 and (rows[0]["a"], rows[0]["b"]) == ("a", "b")
-    assert rows[0]["common_neighbors"] == 1
-    assert rows[0]["jaccard"] == pytest.approx(1.0)
-
-
-def test_k_core_validations(spark):
-    from triplestore_spark.operators.graph_algos import k_core
-
-    with pytest.raises(ValueError, match="k must be"):
-        k_core(_edges_df(spark, [("a", "b")]), 0)
 
 
 def _py_bfs(pairs, seeds, direction, max_depth):

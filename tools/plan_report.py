@@ -269,28 +269,6 @@ def main():
         )
     )
 
-    # round-6: GNN neighborhood sampling — the per-node top-fanout
-    # must run as a rank-LIMITED window (WindowGroupLimit), never a
-    # full per-adjacency sort
-    from triplestore_spark.operators.graph_sample import (
-        sample_neighborhoods,
-    )
-
-    sections.append(
-        (
-            "GNN neighborhood sampling (rank-limited window — "
-            "WindowGroupLimit prunes each node's adjacency to the "
-            "fanout before the sort completes; hub-safe)",
-            fmt(
-                sample_neighborhoods(
-                    edge_view(g, "kg:mentions"),
-                    ["<doc:1>", "<doc:2>"],
-                    [5, 3],
-                )
-            ),
-        )
-    )
-
     # round-6: LM perplexity scoring — the model-count joins must
     # broadcast (model is the small trusted side) so candidate text
     # never shuffles

@@ -40,14 +40,14 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark.dsl import Obj
 from triplestore_spark.functions.keys import okey_expr
 from triplestore_spark.operators.graph import RDFGraph, object_predicate
 from triplestore_spark.schema import KIND_RESOURCE
-from triplestore_spark.session import local_frame
+from triplestore_spark.session import checkpoint_level, local_frame
 
 Term = Union[str, Obj]
 Pattern = tuple[Term, Term, Term]
@@ -1518,20 +1518,17 @@ def _reach(
     state: DataFrame, edges: DataFrame, levels: int
 ) -> tuple[DataFrame, bool]:
     """Up to `levels` _reach_level steps from `state` (its rows at
-    `_l` 0) over a checkpointed `edges` leaf. Each level is one eager
-    localCheckpoint whose own job counts the keys it newly reached (an
-    observed metric, no separate probe job), so the plan is flat at
-    every depth; the first level that reaches nothing new stops the
-    loop. Returns the state and whether its last level still grew."""
+    `_l` 0) over a checkpointed `edges` leaf. Each level is one
+    checkpoint_level whose own job counts the keys it newly reached,
+    so the plan is flat at every depth; the first level that reaches
+    nothing new stops the loop. Returns the state and whether its
+    last level still grew."""
     for level in range(1, levels + 1):
-        found = Observation()
-        new = F.count(F.when(F.col("_l") == level, 1)).alias("n")
-        state = (
-            _reach_level(state, edges, level)
-            .observe(found, new)
-            .localCheckpoint(eager=True)
+        state, found = checkpoint_level(
+            _reach_level(state, edges, level),
+            F.count(F.when(F.col("_l") == level, 1)),
         )
-        if found.get["n"] == 0:
+        if found == 0:
             return state, False
     return state, levels > 0
 
@@ -1555,8 +1552,10 @@ def _closure_pairs(
     `lo` exact hops (deduplicated between hops, localCheckpoint'ed every
     _PREFIX_HOPS_PER_CHECKPOINT hops), then up to
     hi-lo _reach levels — set semantics per SPARQL, so a cyclic graph
-    terminates in <= |reachable nodes| levels; an unbounded closure
-    still growing after `max_depth` levels raises. The seed set is
+    terminates in <= |reachable nodes| levels. An unbounded closure
+    may take `max_depth` levels; like the CC rounds it confirms a
+    fixed point reached at that bound with one more level, and raises
+    only if that level still finds new pairs. The seed set is
     the BOUND frontier (pinned endpoint or the chain's bindings so
     far), never all nodes — an unrooted all-pairs closure is refused
     upstream because it is quadratic in components at 100 TB. With
@@ -1581,7 +1580,7 @@ def _closure_pairs(
     pairs, expanding = _reach(
         cur.withColumn("_l", F.lit(0)),
         edges,
-        max_depth if hi is None else hi - lo,
+        max_depth + 1 if hi is None else hi - lo,
     )
     if hi is None and expanding:
         raise ValueError(

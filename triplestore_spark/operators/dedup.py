@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark.operators.textstats import tokens_col
+from triplestore_spark.session import checkpoint_level
 
 
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
@@ -257,12 +258,13 @@ def connected_components_star(
     the round count the way min-label propagation's O(diameter) rounds
     would: a 200-node chain converges in ~5 alternating rounds.
 
-    Every operation is an equi-join/groupBy on node ids; rounds are
-    materialized with localCheckpoint and convergence is edge-set
-    stability of the small-star output (count match + empty
-    difference — both sides deduped). Equality with a union-find
-    oracle is locked by tests/test_dataops.py on chains, stars, cliques
-    and seeded random graphs.
+    Every operation is an equi-join/groupBy on node ids; each round is
+    one checkpoint_level whose own job counts its edges. Convergence
+    is edge-set stability of the small-star output: equal counts, then
+    an empty difference (both sides deduped), whose job runs only when
+    the counts match. Equality with a union-find oracle is locked by
+    tests/test_dataops.py on chains, stars, cliques and seeded random
+    graphs.
 
     If the loop exits at max_iter with the edge set still changing,
     the result is NOT a valid clustering; `on_nonconverged` controls
@@ -288,31 +290,23 @@ def connected_components_star(
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).localCheckpoint()
-    prev = None
-    prev_count = -1
+    # the input pairs are no star-step output: round 1 never matches
+    n_edges = -1
     converged = False
     rounds = 0
-    for _i in range(max_iter):
-        edges = _small_star(_large_star(edges)).localCheckpoint()
+    # one round past max_iter: a fixed point reached in the last
+    # allowed round is only observable one round later, so that round
+    # confirms it rather than failing
+    while rounds <= max_iter and not converged:
+        nxt, n_nxt = checkpoint_level(
+            _small_star(_large_star(edges)), F.count(F.lit(1))
+        )
         rounds += 1
-        cnt = edges.count()
-        if prev is not None and cnt == prev_count:
-            if edges.exceptAll(prev).limit(1).count() == 0:
-                converged = True
-                break
-        prev, prev_count = edges, cnt
-    if not converged:
-        # the loop's LAST round may itself have been the fixed point
-        # (stability is only observable one round later) — confirm with
-        # one extra alternating round before failing
-        new_edges = _small_star(_large_star(edges)).localCheckpoint()
-        rounds += 1
-        if (
-            new_edges.count() == prev_count
-            and new_edges.exceptAll(edges).limit(1).count() == 0
-        ):
-            converged = True
-        edges = new_edges
+        converged = (
+            n_nxt == n_edges
+            and nxt.exceptAll(edges).limit(1).count() == 0
+        )
+        edges, n_edges = nxt, n_nxt
     if stats is not None:
         stats["rounds"] = rounds
         stats["converged"] = converged

@@ -240,9 +240,10 @@ def graph_text_index(
 def tfidf_vectors(index: TextIndex, dim: int = 256) -> DataFrame:
     """Hashed TF-IDF document vectors (the feature-hashing trick):
     term t adds ``tf(t, d) * idf(t)`` to slot ``md5(t) % dim`` ->
-    (id, vector array<double>). The hash is the repo's
-    engine-portable md5 draw (graph_sample.py uses the same), so the
-    pure-Python twin in tests is bit-exact; idf is the same
+    (id, vector array<double>). The hash is the first 32 bits of
+    md5(t) as a non-negative integer, which any engine and Python's
+    hashlib compute alike, so the pure-Python twin in tests is
+    bit-exact; idf is the same
     always-positive variant bm25_search uses. Output feeds the
     similarity family directly (operators/similarity.brute_force_topk
     / lsh_topk / ivf_topk with id_col='id', vec_col='vector') — text

@@ -22,12 +22,12 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark.operators.graph import RDFGraph
 from triplestore_spark.schema import KIND_RESOURCE
-from triplestore_spark.session import local_frame
+from triplestore_spark.session import checkpoint_level, local_frame
 
 
 class Tree:
@@ -69,9 +69,8 @@ class Tree:
         """Frontier join per level along `src` -> `dst` edges, every
         path kept (a tree has one path per node). The edge set is
         localCheckpoint'ed once, a plan leaf each level joins; each
-        level is one eager localCheckpoint whose own job counts its
-        rows (an observed metric, no separate emptiness probe), so
-        the plan stays flat at any depth and no cache outlives the
+        level is one checkpoint_level whose own job counts its rows,
+        so the plan stays flat at any depth and no cache outlives the
         call."""
         edges = self.edges().localCheckpoint(eager=True)
         frontier = local_frame(
@@ -81,20 +80,17 @@ class Tree:
         )
         out = frontier
         for _ in range(max_depth):
-            found = Observation()
-            frontier = (
-                frontier.join(edges, frontier["node"] == edges[src])
-                .select(
+            frontier, found = checkpoint_level(
+                frontier.join(edges, frontier["node"] == edges[src]).select(
                     F.col(dst).alias("node"),
                     (F.col("depth") + 1).alias("depth"),
                     F.concat(F.col("path"), F.array(F.col(dst))).alias(
                         "path"
                     ),
-                )
-                .observe(found, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+                ),
+                F.count(F.lit(1)),
             )
-            if found.get["n"] == 0:
+            if found == 0:
                 break
             out = out.unionByName(frontier)
         return out

@@ -2,16 +2,15 @@
 
 Defaults chosen for the 100 TB design point (AQE on, skew-join on,
 Arrow batching for the pandas-UDF codec paths) while remaining correct
-on local[N]. Parallelism comes from SPARK_GRAFT_CPUS when set.
+on local[N]. Parallelism comes from SPARK_GRAFT_CPUS when set, else
+from the CPUs this process may use.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
+from pyspark.sql import Observation, SparkSession
 
 # path -> (mtime, inferred StructType). METADATA-only memo:
 # re-inferring a parquet schema costs a footer read + analysis
@@ -63,6 +62,22 @@ def local_frame(spark: SparkSession, rows, schema):
     return spark.createDataFrame(table, schema)
 
 
+def checkpoint_level(df, metric):
+    """One level of an iterative loop: `df` as an eager
+    localCheckpoint, plus the value of `metric` (an aggregate Column
+    over its rows) observed by the checkpoint's own job.
+
+    The closure levels (bgp._reach), Tree._walk and the CC rounds
+    (dedup.connected_components_star) all step through this. The
+    checkpoint makes the level a plan leaf, so the plan stays flat at
+    any depth; the observed metric is the loop's stop signal, read
+    without a second job over the level (no separate count() or
+    isEmpty() probe)."""
+    seen = Observation()
+    out = df.observe(seen, metric.alias("v")).localCheckpoint(eager=True)
+    return out, seen.get["v"]
+
+
 def get_spark(
     app_name: str = "triplestore-spark",
     cpus: int | None = None,
@@ -70,17 +85,16 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{env}]" if env else "local[*]"
-    else:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(
+            os.sched_getaffinity(0)
         )
+    cpus = int(cpus)
+    if shuffle_partitions is None:
+        # one shuffle partition per core unless the caller sizes it
+        shuffle_partitions = cpus
 
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
