@@ -76,3 +76,24 @@ def test_input_fingerprint_changes_with_input(spark, sf_dir, tmp_path):
     p.write_bytes(b"123")
     fp3 = input_fingerprint(spark, str(p))
     assert fp3 != fp1
+
+
+def test_checkpoint_root_at_file_uri(spark, tmp_path, sf_dir, monkeypatch):
+    """A checkpoint root given as a file:// URI keeps `_lineage.json`
+    under that root (not under the driver's working directory), and a
+    resume after a lost stage 2 still skips stage 1."""
+    import shutil
+
+    (tmp_path / "cwd").mkdir()
+    monkeypatch.chdir(tmp_path / "cwd")
+    root = tmp_path / "cp"
+    uri = "file://" + str(root)
+    run_pipeline_checkpointed(spark, sf_dir, uri)
+    s1 = root / "s1_candidates" / "_lineage.json"
+    before = json.loads(s1.read_text())
+
+    shutil.rmtree(root / "s2_canonical")
+    run_pipeline_checkpointed(spark, sf_dir, uri)
+    assert json.loads(s1.read_text())["completed_at"] == before["completed_at"]
+    stages = [d["stage"] for d in CheckpointedPipeline(spark, uri).lineage()]
+    assert stages == ["s1_candidates", "s2_canonical"]

@@ -1270,6 +1270,28 @@ def test_connected_components_counts_edges_in_round_checkpoint(spark):
     assert len(jobs) <= 55, len(jobs)
 
 
+def test_connected_components_evaluates_pairs_once(spark):
+    """The input pairs lineage runs once: the node set comes from the
+    edge checkpoint, not from a second evaluation of `pairs` (in the
+    dedup funnel that input is the LSH candidate-pair plan)."""
+    from pyspark.sql.types import LongType
+
+    from triplestore_spark.operators.dedup import connected_components_star
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        evaluated.add(1)
+        return x
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    ).select(F.udf(tap, LongType())("doc_a").alias("doc_a"), "doc_b")
+    cc = connected_components_star(pairs)
+    assert {r["cluster_id"] for r in cc.collect()} == {0}
+    assert evaluated.value == 12
+
+
 def test_connected_components_star_nonconvergence_raises(spark):
     from triplestore_spark.operators.dedup import (
         ConvergenceError,

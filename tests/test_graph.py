@@ -157,6 +157,95 @@ def test_materialized_layouts(spark, tmp_path, snap):
     assert g.equal(snap)
 
 
+def test_materialized_snapshot_at_file_uri(spark, tmp_path, snap, monkeypatch):
+    """A snapshot rooted at a file:// URI keeps its manifest next to its
+    layouts (not under the driver's working directory), reopens from
+    another working directory, and memoizes on the manifest it wrote."""
+    import json
+    import os
+
+    from triplestore_spark.operators.materialize import (
+        MaterializedGraph,
+        materialize_graph,
+    )
+
+    for cwd in ("a", "b"):
+        (tmp_path / cwd).mkdir()
+    monkeypatch.chdir(tmp_path / "a")
+    root = tmp_path / "graph"
+    uri = "file://" + str(root)
+    m1 = materialize_graph(snap.df, uri, num_partitions=2)
+    assert json.loads((root / "_manifest.json").read_text()) == m1
+
+    def layout_mtimes():
+        return {
+            (layout, f): os.stat(root / layout / f).st_mtime_ns
+            for layout in m1["layouts"]
+            for f in os.listdir(root / layout)
+        }
+
+    written = layout_mtimes()
+    monkeypatch.chdir(tmp_path / "b")
+    g = MaterializedGraph(spark, uri)
+    assert g.manifest == m1
+    assert g.equal(snap)
+    # memo hit: the old manifest comes back and no layout is rewritten
+    assert materialize_graph(snap.df, uri, num_partitions=2) == m1
+    assert layout_mtimes() == written
+
+
+def test_materialize_failed_write_releases_cache(
+    spark, tmp_path, monkeypatch, uncheckpointed_persisted
+):
+    """A layout write that raises leaves no cached frame behind, and the
+    previous snapshot's manifest still reads back unchanged."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from triplestore_spark.dsl import triples_to_df
+    from triplestore_spark.operators.materialize import (
+        MaterializedGraph,
+        materialize_graph,
+    )
+
+    df = triples_to_df(
+        spark, [subj_pred(f"s{i}", "p").integer_literal(i) for i in range(20)]
+    )
+    path = str(tmp_path / "graph")
+    m1 = materialize_graph(df, path, num_partitions=2)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, p, *args, **kwargs):
+        if p.endswith("/pos"):
+            raise IOError("injected pos write failure")
+        return real_parquet(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(IOError, match="injected"):
+        materialize_graph(df, path, num_partitions=2, force=True)
+    assert uncheckpointed_persisted() == []
+    assert MaterializedGraph(spark, path).manifest == m1
+
+
+def test_layout_partitions_follow_size_and_parallelism():
+    """Up to 8 MiB per core the count is one partition per 8 MiB (the
+    sizes every benchmark and gate writes); past it one partition per
+    core, up to 512 MiB partitions, so 100 TiB stays bounded."""
+    from triplestore_spark.operators.materialize import layout_partitions
+
+    mib = 1 << 20
+    for par in (1, 4, 32):
+        for nbytes in (0, 1, 8 * mib, 8 * mib + 1, 8 * mib * par):
+            if nbytes > 8 * mib * par:
+                continue
+            assert layout_partitions({"nbytes": nbytes}, par) == max(
+                1, -(-nbytes // (8 * mib))
+            )
+    assert layout_partitions({"nbytes": 100 * mib * 32}, 32) == 32
+    for par in (4, 1000):
+        assert layout_partitions({"nbytes": 100 << 40}, par) == 204_800
+
+
 def test_snapshot_at_time_travel(spark):
     """snapshot_at(n) reconstructs the graph after the first n ops of
     the log: 0 = empty, len = snapshot(), removes respected mid-log,

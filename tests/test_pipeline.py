@@ -1,5 +1,7 @@
 """Pipeline correctness: span invariant + P/R vs the pure-Python oracle."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -343,3 +345,42 @@ def test_curate_lm_screen_stage(spark, sf_dir):
     assert res.funnel_counts()["lm_screened"] == len(kept)
     with pytest.raises(ValueError, match="go together"):
         curate(df, lm_reference=ref)
+
+
+@pytest.mark.parametrize("max_bytes", [128 << 20, 16 << 10])
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_under_split_guard_needs_no_rdd(spark, sf_dir, sf, max_bytes, monkeypatch):
+    """read_documents' under-split guard sizes the scan from the file
+    listing alone, never through DataFrame.rdd, and repartitions exactly
+    when the per-file rule sum(ceil(size / maxPartitionBytes)) is below
+    the session's parallelism."""
+    from pyspark.sql import DataFrame
+
+    d = os.path.join(os.path.dirname(sf_dir), sf)
+    path = os.path.join(d, "documents.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no {sf} test data")
+    if os.path.isdir(path):
+        files = [
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if not f.startswith(("_", "."))
+        ]
+    else:
+        files = [path]
+    est = sum(max(1, -(-os.path.getsize(f) // max_bytes)) for f in files)
+
+    def no_rdd(self):
+        raise AssertionError("the under-split guard converted to an RDD")
+
+    monkeypatch.setattr(DataFrame, "rdd", property(no_rdd))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(max_bytes))
+    try:
+        docs = read_documents(spark, d)
+    finally:
+        spark.conf.set(key, old)
+    plan = docs._jdf.queryExecution().logical().toString()
+    repartitioned = "RepartitionByExpression" in plan
+    assert repartitioned == (est < spark.sparkContext.defaultParallelism)

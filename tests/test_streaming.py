@@ -7,11 +7,11 @@ from pyspark.sql import functions as F
 
 from triplestore_spark.dsl import subj_pred, triples_to_df
 from triplestore_spark.sources.ntriples import encode_triples
+from triplestore_spark.storage import fs_exists
 from triplestore_spark.streaming.ingest import (
     _BUCKET,
     bucket_expr,
     compact_sink,
-    fs_exists,
     merge_batch_into_sink,
     read_sink,
     stream_into_source,
@@ -523,8 +523,8 @@ def test_renew_lock_advances_mtime_even_without_settimes(spark, tmp_path):
     """ADVICE r4: fs.setTimes is an empty base-class method on some
     FileSystems — renewal must verify and fall back to rewriting the
     lock file."""
+    from triplestore_spark.storage import _hadoop_fs
     from triplestore_spark.streaming.ingest import (
-        _hadoop_fs,
         _lock_is_live,
         _renew_lock,
     )
@@ -658,9 +658,9 @@ def test_lock_is_live_counts_inflight_reclaim_probe(spark, tmp_path):
     expired probe does not, and recover_sink clears it."""
     import time
 
+    from triplestore_spark.storage import _hadoop_fs
     from triplestore_spark.streaming.ingest import (
         _LOCK_SUFFIX,
-        _hadoop_fs,
         _lock_is_live,
         merge_batch_into_sink,
         recover_sink,

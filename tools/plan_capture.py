@@ -66,7 +66,7 @@ def main():
     if "nbytes" in fp:
         from triplestore_spark.operators.materialize import layout_partitions
 
-        np_ = layout_partitions(fp)
+        np_ = layout_partitions(fp, spark.sparkContext.defaultParallelism)
     else:
         np_ = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     bare = canon.select(*S.TRIPLE_FIELDS)

@@ -22,7 +22,6 @@ contract as the snapshot layouts (operators/materialize.py).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,17 +33,7 @@ from triplestore_spark.operators.similarity import (
     nearest_centroid_col,
 )
 from triplestore_spark.session import local_frame
-# index.json goes through the Hadoop FileSystem API — the same
-# storage-agnostic route the vectors take; a driver-local open() would
-# put it on the driver's disk when `path` is an HDFS/S3 URI while the
-# vectors land remotely (round-2 defect). Helpers shared with the
-# split-reader coverage manifest.
-from triplestore_spark.streaming.ingest import (
-    fs_read_text as _fs_read_text,
-)
-from triplestore_spark.streaming.ingest import (
-    fs_write_text as _fs_write_text,
-)
+from triplestore_spark.storage import read_json, write_json
 
 INDEX_FILE = "index.json"
 VECTORS_DIR = "vectors"
@@ -93,18 +82,16 @@ class IVFIndex:
             "dim": int(centroids.shape[1]),
             "centroids": [[float(x) for x in c] for c in centroids],
         }
-        # metadata goes through the same FileSystem as the vectors
-        # (HDFS/S3-safe; a file:-scheme path round-trips in tests)
-        _fs_write_text(
-            spark, path.rstrip("/") + "/" + INDEX_FILE, json.dumps(meta)
-        )
+        # index.json lands on the same store as the vectors
+        write_json(spark, path.rstrip("/") + "/" + INDEX_FILE, meta)
         return IVFIndex(spark, path, meta)
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "IVFIndex":
-        meta = json.loads(
-            _fs_read_text(spark, path.rstrip("/") + "/" + INDEX_FILE)
-        )
+        loc = path.rstrip("/") + "/" + INDEX_FILE
+        meta = read_json(spark, loc)
+        if meta is None:
+            raise FileNotFoundError(f"no IVF index at {loc}")
         return IVFIndex(spark, path, meta)
 
     # -- query --------------------------------------------------------

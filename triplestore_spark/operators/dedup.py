@@ -278,18 +278,19 @@ def connected_components_star(
     O(log^2 n) expectation."""
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged={on_nonconverged!r}")
-    nodes = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .unionByName(pairs.select(F.col("doc_b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
     # directed input suffices: _large_star symmetrizes (and dedups)
     # its input itself every round — pre-symmetrizing here would just
-    # add a redundant shuffle before round 1
+    # add a redundant shuffle before round 1. The node set is derived
+    # from this checkpoint, so the `pairs` lineage runs once.
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).localCheckpoint()
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
     # the input pairs are no star-step output: round 1 never matches
     n_edges = -1
     converged = False

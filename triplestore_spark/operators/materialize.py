@@ -24,7 +24,6 @@ a no-op.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Optional
 
@@ -34,6 +33,7 @@ from pyspark.sql import functions as F
 from triplestore_spark import schema as S
 from triplestore_spark.dsl import Obj
 from triplestore_spark.operators.graph import RDFGraph, dedup_triples
+from triplestore_spark.storage import read_json, write_json
 
 # Sort/partition keys are the COMPONENT columns, not the derived
 # okey/tkey strings: the object components induce an equally valid
@@ -73,28 +73,25 @@ def graph_fingerprint(df: DataFrame) -> dict:
     }
 
 
-def layout_partitions(fp: dict) -> int:
+def layout_partitions(fp: dict, parallelism: int) -> int:
     """Derive the layout write's partition count from the DATA SIZE,
     not a constant (guide §2/§6: scale-adaptive partitioning, output
-    file sizing): one partition per TARGET logical bytes of triple
+    file sizing): one partition per `target` logical bytes of triple
     text (`nbytes` from graph_fingerprint), so a 10x corpus gets 10x
     the files and a tiny corpus is not sprayed across 32 near-empty
     sorted files (measured: 3-layout write of the sf1.0-sim corpus
     3.3 s at the old constant 32 vs 2.6 s size-derived; 2.7 s -> 1.4 s
-    at sf0.1 — OPTIMIZATION_r07.md). The default target is
-    local-sized; production deployments set
-    SPARK_GRAFT_MATERIALIZE_PARTITION_BYTES to ~512 MB (logical) for
-    100-200 MB zstd parquet files per guide §6, or move the writer to
-    Iceberg write.target-file-size-bytes. Shared with
-    tools/plan_capture.py so the captured write plans always match the
-    real writer's partitioning."""
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_MATERIALIZE_PARTITION_BYTES",
-            str(8 * 1024 * 1024),
-        )
-    )
-    return max(1, -(-int(fp.get("nbytes", 0)) // max(1, target)))
+    at sf0.1 — OPTIMIZATION_r07.md).
+
+    target = nbytes / parallelism, clamped to [8 MiB, 512 MiB]: up to
+    8 MiB per core every partition holds 8 MiB; from there to 512 MiB
+    per core there is one partition per core; beyond it each holds
+    512 MiB (100-200 MB zstd parquet files, guide §6), so 100 TiB is
+    204,800 partitions. Shared with tools/plan_capture.py so the
+    captured write plans always match the real writer's partitioning."""
+    nbytes = int(fp.get("nbytes", 0))
+    target = min(max(nbytes // max(1, parallelism), 8 << 20), 512 << 20)
+    return max(1, -(-nbytes // target))
 
 
 def materialize_graph(
@@ -122,12 +119,11 @@ def materialize_graph(
     canon = src.select(*S.TRIPLE_FIELDS).cache()
     from triplestore_spark.functions.keys import with_keys
 
-    fp = graph_fingerprint(with_keys(canon))
-
+    spark = canon.sparkSession
     manifest_path = os.path.join(path, MANIFEST)
-    if not force and os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            old = json.load(f)
+    try:
+        fp = graph_fingerprint(with_keys(canon))
+        old = None if force else read_json(spark, manifest_path)
         # content identity is (count, hx, hx2) — compare exactly those
         # keys so manifests written before the fingerprint grew its
         # `nbytes` sizing field still memoize instead of re-writing an
@@ -135,39 +131,45 @@ def materialize_graph(
         def _core(d: dict) -> tuple:
             return (d.get("count"), d.get("hx"), d.get("hx2"))
 
-        if _core(old.get("fingerprint", {})) == _core(fp) and set(
-            old.get("layouts", [])
-        ) >= set(layouts):
-            canon.unpersist()
+        if (
+            old is not None
+            and _core(old.get("fingerprint", {})) == _core(fp)
+            and set(old.get("layouts", [])) >= set(layouts)
+        ):
             return old
 
-    if num_partitions is None:
-        num_partitions = layout_partitions(fp)
+        if num_partitions is None:
+            num_partitions = layout_partitions(
+                fp, spark.sparkContext.defaultParallelism
+            )
 
-    bare = canon
+        def write_layout(layout: str) -> None:
+            keys = LAYOUTS[layout]
+            (
+                # store the 7 component columns ONLY: the derived okey/
+                # tkey strings (~150 B/row x 3 layout copies) are pure
+                # redundancy — they are derived at scan time by a
+                # codegen concat, and every lookup pushes down
+                # component equality
+                canon.repartitionByRange(
+                    num_partitions, *[F.col(k) for k in keys]
+                )
+                .sortWithinPartitions(*keys)
+                .write.mode("overwrite")
+                .parquet(os.path.join(path, layout))
+            )
 
-    def write_layout(layout: str) -> None:
-        keys = LAYOUTS[layout]
-        (
-            # store the 7 component columns ONLY: the derived okey/
-            # tkey strings (~150 B/row x 3 layout copies) are pure
-            # redundancy — they are derived at scan time by a codegen
-            # concat, and every lookup pushes down component equality
-            bare.repartitionByRange(num_partitions, *[F.col(k) for k in keys])
-            .sortWithinPartitions(*keys)
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, layout))
-        )
+        # submit the three layout jobs concurrently: they read the same
+        # cached canon, and overlapping their shuffle-read tails and
+        # commit phases keeps cores busy (measured 1.7x on the write
+        # phase at local[32]; on a cluster concurrent jobs share
+        # executors via the scheduler the same way)
+        from concurrent.futures import ThreadPoolExecutor
 
-    # submit the three layout jobs concurrently: they read the same
-    # cached canon, and overlapping their shuffle-read tails and
-    # commit phases keeps cores busy (measured 1.7x on the write
-    # phase at local[32]; on a cluster concurrent jobs share
-    # executors via the scheduler the same way)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(layouts)) as ex:
-        list(ex.map(write_layout, layouts))
+        with ThreadPoolExecutor(max_workers=len(layouts)) as ex:
+            list(ex.map(write_layout, layouts))
+    finally:
+        canon.unpersist()
 
     manifest = {
         "version": 1,
@@ -176,10 +178,7 @@ def materialize_graph(
         "num_partitions": num_partitions,
         "sort_specs": {layout: LAYOUTS[layout] for layout in layouts},
     }
-    os.makedirs(path, exist_ok=True)
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f, indent=2)
-    canon.unpersist()
+    write_json(spark, manifest_path, manifest)
     return manifest
 
 
@@ -191,8 +190,10 @@ class MaterializedGraph(RDFGraph):
     def __init__(self, spark: SparkSession, path: str):
         self._spark = spark
         self._path = path
-        with open(os.path.join(path, MANIFEST)) as f:
-            self.manifest = json.load(f)
+        manifest_path = os.path.join(path, MANIFEST)
+        self.manifest = read_json(spark, manifest_path)
+        if self.manifest is None:
+            raise FileNotFoundError(f"no snapshot manifest at {manifest_path}")
         self._layout_cache: dict[str, DataFrame] = {}
         base = self.layout("spo")
         super().__init__(base, cache=False)

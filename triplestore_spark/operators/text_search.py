@@ -57,6 +57,7 @@ from pyspark.sql.window import Window
 
 from triplestore_spark.schema import KIND_LITERAL
 from triplestore_spark.session import local_frame
+from triplestore_spark.storage import read_json, write_json
 
 # Case-folded alphanumeric runs. Kept deliberately simple and
 # portable: the oracle, the Spark expression, and any SQL twin agree
@@ -420,10 +421,6 @@ def save_text_index(
     """Materialize an index for build-once/query-many serving. Scalars
     travel through the Hadoop FileSystem API like the data (an
     HDFS/S3 `path` keeps everything together)."""
-    import json
-
-    from triplestore_spark.streaming.ingest import fs_write_text
-
     spark = index.postings.sparkSession
     (
         index.postings.withColumn("bucket", _bucket_col(n_buckets))
@@ -446,7 +443,7 @@ def save_text_index(
         "n_buckets": n_buckets,
         "token_pattern": TOKEN_PATTERN,
     }
-    fs_write_text(spark, os.path.join(path, INDEX_FILE), json.dumps(meta))
+    write_json(spark, os.path.join(path, INDEX_FILE), meta)
     return PersistedTextIndex(spark, path, meta)
 
 
@@ -469,10 +466,6 @@ def update_text_index(
     (default) refuses on overlap — one semi-join against the
     (id, dl)-distinct side, skippable when the caller's pipeline
     already guarantees fresh ids."""
-    import json
-
-    from triplestore_spark.streaming.ingest import fs_write_text
-
     spark = index._spark
     delta = build_text_index(new_docs, id_col=id_col, text_col=text_col)
     if delta.n_docs == 0:
@@ -531,18 +524,15 @@ def update_text_index(
     meta = dict(index.meta)
     meta["n_docs"] = n0 + n1
     meta["avgdl"] = (index.avgdl * n0 + delta.avgdl * n1) / (n0 + n1)
-    fs_write_text(
-        spark, os.path.join(index._path, INDEX_FILE), json.dumps(meta)
-    )
+    write_json(spark, os.path.join(index._path, INDEX_FILE), meta)
     return PersistedTextIndex(spark, index._path, meta)
 
 
 def load_text_index(spark: SparkSession, path: str) -> PersistedTextIndex:
-    import json
-
-    from triplestore_spark.streaming.ingest import fs_read_text
-
-    meta = json.loads(fs_read_text(spark, os.path.join(path, INDEX_FILE)))
+    loc = os.path.join(path, INDEX_FILE)
+    meta = read_json(spark, loc)
+    if meta is None:
+        raise FileNotFoundError(f"no text index at {loc}")
     if meta.get("token_pattern") != TOKEN_PATTERN:
         raise ValueError(
             "text index was built with token_pattern="

@@ -19,13 +19,14 @@ is the Spark-native addition its Snapshot memoization
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from triplestore_spark.storage import list_files, list_names, read_json, write_json
 
 LINEAGE = "_lineage.json"
 PARTITIONS = "_partitions.parquet"
@@ -50,7 +51,6 @@ class CheckpointedPipeline:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        os.makedirs(root, exist_ok=True)
 
     def _stage_dir(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -68,14 +68,13 @@ class CheckpointedPipeline:
         lineage_path = os.path.join(d, LINEAGE)
         data_path = os.path.join(d, "data.parquet")
 
-        if os.path.exists(lineage_path):
-            with open(lineage_path) as f:
-                lineage = json.load(f)
-            if (
-                lineage.get("input_fingerprint") == input_fingerprint
-                and lineage.get("status") == "complete"
-            ):
-                return self.spark.read.parquet(data_path)
+        lineage = read_json(self.spark, lineage_path)
+        if (
+            lineage is not None
+            and lineage.get("input_fingerprint") == input_fingerprint
+            and lineage.get("status") == "complete"
+        ):
+            return self.spark.read.parquet(data_path)
 
         t0 = time.time()
         out = compute()
@@ -91,38 +90,29 @@ class CheckpointedPipeline:
             "status": "complete",
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        os.makedirs(d, exist_ok=True)
-        with open(lineage_path, "w") as f:
-            json.dump(lineage, f, indent=2)
+        write_json(self.spark, lineage_path, lineage)
         return written
 
     def lineage(self) -> list[dict]:
         out = []
-        for name in sorted(os.listdir(self.root)):
-            p = os.path.join(self.root, name, LINEAGE)
-            if os.path.exists(p):
-                with open(p) as f:
-                    out.append(json.load(f))
+        for name in list_names(self.spark, self.root):
+            doc = read_json(self.spark, os.path.join(self.root, name, LINEAGE))
+            if doc is not None:
+                out.append(doc)
         return out
 
 
 def input_fingerprint(spark: SparkSession, *paths: str) -> dict:
     """Cheap deterministic fingerprint of input files (name, size,
-    mtime) — no data scan; used as the stage invalidation key."""
-    entries = []
-    for path in paths:
-        if os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if not f.startswith(("_", "."))
-            )
-        else:
-            files = [path]
-        for f in files:
-            st = os.stat(f)
-            entries.append([os.path.basename(f), st.st_size, int(st.st_mtime)])
-    return {"files": entries}
+    mtime in seconds) — no data scan; used as the stage invalidation
+    key."""
+    return {
+        "files": [
+            [f.rsplit("/", 1)[-1], size, mtime_ms // 1000]
+            for path in paths
+            for f, size, mtime_ms in list_files(spark, path)
+        ]
+    }
 
 
 def run_pipeline_checkpointed(

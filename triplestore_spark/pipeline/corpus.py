@@ -17,15 +17,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from triplestore_spark.pipeline import spec
+from triplestore_spark.storage import list_files
 
 
-def _estimated_scan_partitions(spark: SparkSession, docs: DataFrame) -> int:
+def _estimated_scan_partitions(spark: SparkSession, path: str) -> int:
     """Estimate the scan's task count from file sizes (ceil(bytes /
     maxPartitionBytes) summed per file). Matches Spark's split packing
-    closely enough for the under-split test below, and costs one cheap
-    file listing instead of the `df.rdd` plan conversion (~50 ms per
-    pipeline construction, measured). Non-local files fall back to the
-    exact `.rdd.getNumPartitions()`."""
+    closely enough for the under-split test below, and costs one file
+    listing instead of converting the plan to an RDD (~50 ms per
+    pipeline construction, measured)."""
     import re
 
     raw = spark.conf.get(
@@ -37,26 +37,17 @@ def _estimated_scan_partitions(spark: SparkSession, docs: DataFrame) -> int:
         max_bytes = int(m.group(1)) * mult[m.group(2)]
     else:
         max_bytes = 128 * 1024 * 1024
-    total = 0
-    for uri in docs.inputFiles():
-        if not uri.startswith("file:"):
-            return docs.rdd.getNumPartitions()
-        path = uri[len("file:") :]
-        while path.startswith("//"):
-            path = path[1:]
-        try:
-            total += max(1, -(-os.path.getsize(path) // max_bytes))
-        except OSError:
-            return docs.rdd.getNumPartitions()
+    total = sum(
+        max(1, -(-size // max_bytes)) for _, size, _ in list_files(spark, path)
+    )
     return max(1, total)
 
 
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from triplestore_spark.session import read_parquet_table
 
-    docs = read_parquet_table(
-        spark, os.path.join(sf_dir, "documents.parquet")
-    )
+    path = os.path.join(sf_dir, "documents.parquet")
+    docs = read_parquet_table(spark, path)
     # The synthetic corpus ships as ONE parquet row group, so the scan
     # cannot be split by maxPartitionBytes and everything before the
     # first exchange would run on one core. Repartition to the
@@ -71,7 +62,7 @@ def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here — while a deterministic key needs no sort and cannot
     # duplicate/lose rows under fetch-failure replays.
     target = spark.sparkContext.defaultParallelism
-    if _estimated_scan_partitions(spark, docs) < target:
+    if _estimated_scan_partitions(spark, path) < target:
         docs = docs.repartition(target, F.col("doc_id"))
     return docs
 

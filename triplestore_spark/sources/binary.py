@@ -23,7 +23,7 @@ sink for scale.
 
 from __future__ import annotations
 
-import json
+import posixpath
 import re
 import struct
 from typing import Iterator, Optional
@@ -38,6 +38,7 @@ from triplestore_spark.sources.ntriples import (
     escape_string_literal,
     unescape_string_literal,
 )
+from triplestore_spark.storage import is_dir, list_files, read_json, write_json
 
 RESOURCE_TAG = 0
 LITERAL_TAG = 1
@@ -436,34 +437,6 @@ def _decode_file_range(
     )[0]
 
 
-def _list_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
-    """(path, length, mtime_ms) of every data file under `path`
-    (Hadoop FS listing — dir, glob, or single file)."""
-    from triplestore_spark.streaming.ingest import _hadoop_fs
-
-    fs, jpath = _hadoop_fs(spark, path)
-    files: list[tuple[str, int, int]] = []
-
-    def _add(status):
-        if status.isDirectory():
-            for st in fs.listStatus(status.getPath()):
-                _add(st)
-        else:
-            name = status.getPath().getName()
-            if not name.startswith(("_", ".")):
-                files.append(
-                    (
-                        status.getPath().toString(),
-                        status.getLen(),
-                        status.getModificationTime(),
-                    )
-                )
-
-    for st in fs.globStatus(jpath) or []:
-        _add(st)
-    return sorted(files)
-
-
 def _list_ranges(
     spark: SparkSession,
     path: str,
@@ -473,7 +446,7 @@ def _list_ranges(
     """(path, start, end, file_length) ranges of `split_size` bytes
     over the given files (default: every data file under `path`)."""
     if files is None:
-        files = _list_files(spark, path)
+        files = list_files(spark, path)
     ranges = []
     for p, flen, _mtime in files:
         start = 0
@@ -513,19 +486,10 @@ COVERAGE_MANIFEST_NAME = "_split_coverage.json"
 def _manifest_location(spark: SparkSession, path: str) -> str:
     """Where the coverage manifest for `path` lives: inside the
     directory being read, or next to a single file / glob. The name
-    starts with '_' so _list_files never treats it as data."""
-    from triplestore_spark.streaming.ingest import _hadoop_fs
-
-    fs, jpath = _hadoop_fs(spark, path)
-    try:
-        if fs.getFileStatus(jpath).isDirectory():
-            return path.rstrip("/") + "/" + COVERAGE_MANIFEST_NAME
-    except Exception:  # noqa: BLE001 - glob patterns have no status
-        pass
-    parent = jpath.getParent()
-    if parent is None:
-        return COVERAGE_MANIFEST_NAME
-    return parent.toString() + "/" + COVERAGE_MANIFEST_NAME
+    starts with '_' so the file listing never treats it as data."""
+    if is_dir(spark, path):
+        return path.rstrip("/") + "/" + COVERAGE_MANIFEST_NAME
+    return posixpath.join(posixpath.dirname(path), COVERAGE_MANIFEST_NAME)
 
 
 def _coverage_key(split_size: int, validate_records: int, max_word: int) -> str:
@@ -535,12 +499,8 @@ def _coverage_key(split_size: int, validate_records: int, max_word: int) -> str:
 
 
 def _load_coverage_manifest(spark: SparkSession, loc: str) -> dict:
-    from triplestore_spark.streaming.ingest import fs_exists, fs_read_text
-
     try:
-        if not fs_exists(spark, loc):
-            return {}
-        doc = json.loads(fs_read_text(spark, loc))
+        doc = read_json(spark, loc)
         return doc if isinstance(doc, dict) else {}
     except Exception:  # noqa: BLE001 - a broken manifest just re-verifies
         return {}
@@ -558,8 +518,6 @@ def _save_coverage_manifest(spark: SparkSession, loc: str, doc: dict) -> None:
     and rename can still be dropped; the window is now one small-file
     write rather than the whole verification pass. Read-only stores
     simply don't amortize — verification already succeeded this run."""
-    from triplestore_spark.streaming.ingest import _hadoop_fs, fs_write_text
-
     try:
         current = _load_coverage_manifest(spark, loc)
         for path, ent in doc.items():
@@ -569,13 +527,7 @@ def _save_coverage_manifest(spark: SparkSession, loc: str, doc: dict) -> None:
                 or cur.get("mtime", -1) <= ent.get("mtime", -1)
             ):
                 current[path] = ent
-        tmp = loc + ".tmp"
-        fs_write_text(spark, tmp, json.dumps(current, sort_keys=True))
-        fs, jtmp = _hadoop_fs(spark, tmp)
-        jloc = _hadoop_fs(spark, loc)[1]
-        fs.delete(jloc, False)
-        if not fs.rename(jtmp, jloc):
-            fs.delete(jtmp, False)
+        write_json(spark, loc, current)
     except Exception:  # noqa: BLE001 - amortization is optional
         pass
 
@@ -656,7 +608,7 @@ def read_binary_split(
             f"verify_coverage={verify_coverage!r} (use True, False or "
             "'always')"
         )
-    files = _list_files(spark, path)
+    files = list_files(spark, path)
     if verify_coverage and files:
         ckey = _coverage_key(split_size, validate_records, max_word_bytes)
         loc = _manifest_location(spark, path)

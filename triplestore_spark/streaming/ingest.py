@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from triplestore_spark.sources.ntriples import decode_lines_df, nt_text_lines
+from triplestore_spark.storage import _hadoop_fs, _rename_or_raise, fs_exists
 
 DEFAULT_BUCKETS = 64
 _BUCKET = "tkey_bucket"
@@ -56,43 +57,6 @@ _LOCK_SUFFIX = "._compacting_lock"
 # safer for slow rewrites, longer worst-case merge outage after a
 # compactor crash. See INTEGRATION.md.
 COMPACTION_LOCK_LEASE_MS = 60 * 60 * 1000
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    """Storage-agnostic existence check (os.path.exists breaks on
-    HDFS/S3 paths; the Hadoop FileSystem API does not)."""
-    fs, jpath = _hadoop_fs(spark, path)
-    return fs.exists(jpath)
-
-
-def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Write a small text file through the Hadoop FileSystem API — a
-    driver-local open() would land on the driver's disk when `path` is
-    an HDFS/S3 URI. Shared by the IVF index metadata and the split-
-    reader coverage manifest."""
-    fs, jpath = _hadoop_fs(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def fs_read_text(spark: SparkSession, path: str) -> str:
-    fs, jpath = _hadoop_fs(spark, path)
-    stream = fs.open(jpath)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
 
 
 def bucket_expr(n_buckets: int = DEFAULT_BUCKETS):
@@ -226,15 +190,6 @@ def read_sink(spark: SparkSession, table_dir: str) -> DataFrame:
 
 def _jpath(spark: SparkSession, path: str):
     return _hadoop_fs(spark, path)[1]
-
-
-def _rename_or_raise(fs, src, dst) -> None:
-    """Hadoop FileSystem#rename reports most failures by returning
-    FALSE, not by throwing — an unchecked rename followed by a delete
-    of the old copy would be silent data loss, so every swap rename
-    goes through here."""
-    if not fs.rename(src, dst):
-        raise IOError(f"rename failed: {src} -> {dst}")
 
 
 def _bucket_dirs(fs, jpath) -> list[str]:
