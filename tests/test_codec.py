@@ -88,6 +88,28 @@ def test_binary_multi_document():
     assert rows_to_keyset(rows) == {t.tkey() for t in CORPUS}
 
 
+def test_binary_invalid_utf8_word_raises_decode_error(tmp_path):
+    """Invalid UTF-8 inside a word is a malformed record, reported as
+    BinaryDecodeError by the whole-blob decoder exactly as by the split
+    reader's parser — not as a bare UnicodeDecodeError."""
+    from triplestore_spark.sources.binary import (
+        BinaryDecodeError,
+        _scan_file_range,
+    )
+
+    blob = bytearray(
+        encode_triple_bytes(("subj", False, "pred", "res", "obj", "", ""))
+    )
+    blob[blob.index(b"pred")] = 0xFF
+    blob = bytes(blob)
+    with pytest.raises(BinaryDecodeError):
+        decode_binary_bytes(blob)
+    p = tmp_path / "bad.bin"
+    p.write_bytes(blob)
+    with pytest.raises(BinaryDecodeError):
+        _scan_file_range(str(p), 0, len(blob), len(blob))
+
+
 def test_spark_nt_roundtrip(spark, tmp_path):
     from triplestore_spark.sources.ntriples import read_ntriples, write_ntriples
 
@@ -640,7 +662,7 @@ def test_context_encode_plan_has_no_python(spark):
 def test_context_encode_expr_randomized_differential(spark):
     """Seeded randomized differential for the Catalyst context encoder:
     200 random triples (ASCII punctuation, unicode, URL-escape edge
-    chars, random kinds/langs/types) through nt_encode_context_expr
+    chars, random kinds/langs/types) through nt_encode_expr(ctx)
     must equal encode_triple_py byte for byte under prefix+base
     contexts — one Spark job per context, not per example."""
     import random

@@ -157,6 +157,61 @@ def test_materialized_layouts(spark, tmp_path, snap):
     assert g.equal(snap)
 
 
+def test_materialized_lookups_read_only_their_layout(
+    spark, tmp_path, snap, monkeypatch
+):
+    """Routing pin: each lookup reads only the files of the layout the
+    reference's index choice names (subject bound -> SPO, else
+    predicate -> POS, else object -> OSP), and returns the rows the
+    in-memory graph of the same triples returns."""
+    from triplestore_spark import schema as S
+    from triplestore_spark.dsl import lit_int
+    from triplestore_spark.operators.materialize import (
+        MaterializedGraph,
+        materialize_graph,
+    )
+
+    path = str(tmp_path / "graph")
+    materialize_graph(snap.df, path, num_partitions=2)
+    g = MaterializedGraph(spark, path)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*S.TRIPLE_FIELDS).collect())
+
+    seven = resource("seven")
+    for layout, lookup, args in [
+        ("spo", "with_subject", ("one",)),
+        ("spo", "with_subj_pred", ("one", "six")),
+        ("spo", "with_subj_obj", ("one", seven)),
+        ("pos", "with_predicate", ("two",)),
+        ("pos", "with_pred_obj", ("two", lit_int(42))),
+        ("osp", "with_object", (seven,)),
+    ]:
+        got = getattr(g, lookup)(*args)
+        files = got.inputFiles()
+        assert files and all(f"/{layout}/" in f for f in files), (
+            lookup,
+            files,
+        )
+        want = rows(getattr(snap, lookup)(*args))
+        assert want and rows(got) == want, lookup
+
+    # contains answers a bool: pin the files of the frame it takes from
+    read = []
+    take = type(g.df).take
+
+    def spy(df, n):
+        read.extend(df.inputFiles())
+        return take(df, n)
+
+    monkeypatch.setattr(type(g.df), "take", spy)
+    hit = subj_pred("four", "two").integer_literal(42)
+    miss = subj_pred("four", "two").integer_literal(43)
+    assert g.contains(hit) and snap.contains(hit)
+    assert not g.contains(miss) and not snap.contains(miss)
+    assert read and all("/spo/" in f for f in read), read
+
+
 def test_materialized_snapshot_at_file_uri(spark, tmp_path, snap, monkeypatch):
     """A snapshot rooted at a file:// URI keeps its manifest next to its
     layouts (not under the driver's working directory), reopens from

@@ -84,7 +84,7 @@ def test_pos_layout_splits_hot_predicate(spark, sf_dir, tmp_path):
 
     canon = run_pipeline(spark, sf_dir)
     path = str(tmp_path / "g")
-    materialize_graph(canon, path, layouts=("pos",), num_partitions=8)
+    materialize_graph(canon, path, num_partitions=8)
     pos = spark.read.parquet(os.path.join(path, "pos"))
     total = pos.count()
     sizes = sorted(

@@ -111,7 +111,6 @@ def main():
         # a plan-size one.
         from triplestore_spark.sources.ntriples import (
             CONTEXT_UNROLL_MAX_PREFIXES as _CAP,
-            nt_encode_context_expr,
         )
 
         for n_pref in (_CAP, _CAP + 1, 64):
@@ -126,7 +125,7 @@ def main():
             best = None
             for _t in range(max(2, args.trials - 1)):
                 t0 = time.time()
-                big.select(nt_encode_context_expr(ctx).alias("v")).agg(
+                big.select(nt_encode_expr(ctx).alias("v")).agg(
                     F.max(F.length("v"))
                 ).collect()
                 el = time.time() - t0

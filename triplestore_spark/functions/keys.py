@@ -57,6 +57,20 @@ def okey_expr(
     )
 
 
+def subject_key_expr(
+    subject: Column | str = "subject",
+    subject_is_bnode: Column | str = "subject_is_bnode",
+) -> Column:
+    """Subject node key: '_:' + sub for a bnode, else '<' + sub + '>'
+    (the subject part of the tkey, and the NT subject term)."""
+    subject = F.col(subject) if isinstance(subject, str) else subject
+    if isinstance(subject_is_bnode, str):
+        subject_is_bnode = F.col(subject_is_bnode)
+    return F.when(
+        subject_is_bnode, F.concat(F.lit("_:"), subject)
+    ).otherwise(F.concat(F.lit("<"), subject, F.lit(">")))
+
+
 def tkey_expr(
     subject: Column | str = "subject",
     subject_is_bnode: Column | str = "subject_is_bnode",
@@ -64,16 +78,16 @@ def tkey_expr(
     okey: Column | None = None,
 ) -> Column:
     """Canonical triple key (reference rdf.go:46-58)."""
-    subject = F.col(subject) if isinstance(subject, str) else subject
     predicate = F.col(predicate) if isinstance(predicate, str) else predicate
-    if isinstance(subject_is_bnode, str):
-        subject_is_bnode = F.col(subject_is_bnode)
     if okey is None:
         okey = okey_expr()
-    sub_part = F.when(
-        subject_is_bnode, F.concat(F.lit("_:"), subject)
-    ).otherwise(F.concat(F.lit("<"), subject, F.lit(">")))
-    return F.concat(sub_part, F.lit("<"), predicate, F.lit(">"), okey)
+    return F.concat(
+        subject_key_expr(subject, subject_is_bnode),
+        F.lit("<"),
+        predicate,
+        F.lit(">"),
+        okey,
+    )
 
 
 def with_keys(df: DataFrame) -> DataFrame:

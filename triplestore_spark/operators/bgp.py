@@ -44,8 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark.dsl import Obj
-from triplestore_spark.functions.keys import okey_expr
-from triplestore_spark.operators.graph import RDFGraph, object_predicate
+from triplestore_spark.functions.keys import okey_expr, subject_key_expr
+from triplestore_spark.operators.graph import RDFGraph, route, term_filter
 from triplestore_spark.schema import KIND_RESOURCE
 from triplestore_spark.session import checkpoint_level, local_frame
 
@@ -132,12 +132,6 @@ def _as_obj(t: Term) -> Obj:
     """A bare string in object position is an IRI constant — the same
     convenience the Tree edge view applies (resource objects)."""
     return t if isinstance(t, Obj) else Obj(KIND_RESOURCE, t)
-
-
-def _subject_key() -> Column:
-    return F.when(
-        F.col("subject_is_bnode"), F.concat(F.lit("_:"), F.col("subject"))
-    ).otherwise(F.concat(F.lit("<"), F.col("subject"), F.lit(">")))
 
 
 def _object_key(df: DataFrame) -> Column:
@@ -275,21 +269,28 @@ def bgp_construct(
     return dedup_triples(out)
 
 
-def _pattern_scan(df: DataFrame, pat: Pattern) -> tuple[DataFrame, list[str]]:
+def _pattern_scan(
+    src: RDFGraph | DataFrame, pat: Pattern
+) -> tuple[DataFrame, list[str]]:
     """One pattern -> (bindings DataFrame, variable names).
 
-    Constants become component filters (pushdown-friendly, like the
-    WithX lookups in operators/graph.py); variables project node-key
-    columns. A variable repeated inside one pattern adds the implied
-    equality filter.
+    Over an RDFGraph the scan reads the layout `route` picks for the
+    pattern's constant positions (the WithX index routing, so every
+    constant lands on the sort prefix of a materialized copy); a plain
+    DataFrame is scanned as is. Constants become the same component
+    filters the WithX lookups use (`term_filter`); variables project
+    node-key columns. A variable repeated inside one pattern adds the
+    implied equality filter.
     """
     s, p, o = pat
-    cond = F.lit(True)
+    cs, cp, co = (None if _is_var(t) else t for t in pat)
+    if co is not None:
+        co = _as_obj(co)
+    df = src.layout(route(cs, cp, co)) if isinstance(src, RDFGraph) else src
+    cond = term_filter(cs, cp, co)
     bindings: dict[str, Column] = {}
     if _is_var(s):
-        bindings[_var(s)] = _subject_key()
-    else:
-        cond = cond & (F.col("subject") == s)
+        bindings[_var(s)] = subject_key_expr()
     if _is_var(p):
         v = _var(p)
         key = F.concat(F.lit("<"), F.col("predicate"), F.lit(">"))
@@ -297,8 +298,6 @@ def _pattern_scan(df: DataFrame, pat: Pattern) -> tuple[DataFrame, list[str]]:
             cond = cond & (bindings[v] == key)
         else:
             bindings[v] = key
-    else:
-        cond = cond & (F.col("predicate") == p)
     if _is_var(o):
         v = _var(o)
         key = _object_key(df)
@@ -306,32 +305,10 @@ def _pattern_scan(df: DataFrame, pat: Pattern) -> tuple[DataFrame, list[str]]:
             cond = cond & (bindings[v] == key)
         else:
             bindings[v] = key
-    else:
-        cond = cond & object_predicate(_as_obj(o))
     out = df.where(cond).select(
         *[expr.alias(name) for name, expr in bindings.items()]
     )
     return out, list(bindings)
-
-
-def _layout_for(graph, default_df: DataFrame, pat: Pattern) -> DataFrame:
-    """Best materialized layout for one pattern's constant positions
-    (falls through to the graph's own frame for plain RDFGraphs /
-    DataFrames): subject const -> SPO, else predicate const -> POS
-    (predicate+object constants are BOTH on the POS sort prefix),
-    else object const -> OSP."""
-    from triplestore_spark.operators.materialize import MaterializedGraph
-
-    if not isinstance(graph, MaterializedGraph):
-        return default_df
-    s, p, o = pat
-    if not _is_var(s):
-        return graph.layout("spo")
-    if not _is_var(p):
-        return graph.layout("pos")
-    if not _is_var(o):
-        return graph.layout("osp")
-    return graph.layout("spo")
 
 
 _FILTER_OPS = {
@@ -919,7 +896,7 @@ def bgp_match(
                     rel = rel.select(F.lit(1).alias("_w"))
             scans.append((rel, vars_, 3 - len(vars_)))
             continue
-        scan, vars_ = _pattern_scan(_layout_for(graph, df, pat), pat)
+        scan, vars_ = _pattern_scan(graph, pat)
         n_const = 3 - sum(_is_var(t) for t in pat)
         scans.append((scan, vars_, n_const))
 

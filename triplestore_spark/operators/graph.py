@@ -10,18 +10,23 @@ Spark realization:
   folds it into one deduped, cached DataFrame. Add = unionByName +
   last-writer-wins on tkey; Remove = left-anti join on tkey — the
   exact observable semantics of the reference's map upsert/delete.
-- The 7 hash indexes become filters over the canonical table (and,
-  when materialized, over the best-sorted SPO/POS/OSP layout — see
-  operators/materialize.py). Multi-column equality also fixes the
-  reference's unseparated-concat index ambiguity (source.go:148-155
-  concatenates sub+pred without a separator, so "ab"+"c" == "a"+"bc").
+- The 7 hash indexes become component filters (`term_filter`) over
+  the layout `route` picks for the bound positions: SPO, POS or OSP.
+  An in-memory graph serves every layout from its one frame; a
+  MaterializedGraph (operators/materialize.py) reads the copy sorted
+  for it. bgp_match and SHACL route their scans the same way.
+  Multi-column equality also fixes the reference's unseparated-concat
+  index ambiguity (source.go:148-155 concatenates sub+pred without a
+  separator, so "ab"+"c" == "a"+"bc").
 - Snapshot memoization (the reference's dirty flag, source.go:87-97)
   maps to: no ops since last snapshot -> return the cached graph.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+import operator
+from functools import reduce
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +59,44 @@ def object_predicate(o: Obj) -> "F.Column":
     if o.kind == "lit" and not o.lang:
         cond = cond & (F.col("object_type") == o.typ)
     return cond
+
+
+def route(s, p, o) -> str:
+    """The layout that serves a pattern, from its bound positions (a
+    position is bound when its term is not None): subject bound ->
+    SPO, else predicate bound -> POS (predicate and object are both on
+    its sort prefix), else object bound -> OSP. This is the
+    reference's index choice (source.go:130-164); a pattern with
+    nothing bound scans SPO."""
+    if s is not None:
+        return "spo"
+    if p is not None:
+        return "pos"
+    if o is not None:
+        return "osp"
+    return "spo"
+
+
+def term_filter(
+    s: Optional[str] = None,
+    p: Optional[str] = None,
+    o: Optional[Obj] = None,
+    subject_is_bnode: Optional[bool] = None,
+) -> "F.Column":
+    """The constant positions of a pattern as component equality
+    filters, ANDed in subject, predicate, object order; unbound
+    (None) positions add nothing. `subject_is_bnode` pins the subject's
+    bnode flag too, for full canonical identity (Contains)."""
+    conds = []
+    if s is not None:
+        conds.append(F.col("subject") == s)
+    if subject_is_bnode is not None:
+        conds.append(F.col("subject_is_bnode") == subject_is_bnode)
+    if p is not None:
+        conds.append(F.col("predicate") == p)
+    if o is not None:
+        conds.append(object_predicate(o))
+    return reduce(operator.and_, conds) if conds else F.lit(True)
 
 
 def dedup_triples(df: DataFrame) -> DataFrame:
@@ -239,31 +282,37 @@ class RDFGraph:
 
     # -- the six point lookups (reference source.go:203-220) --
 
+    def layout(self, name: str) -> DataFrame:
+        """The frame that serves patterns routed to layout `name`
+        ('spo'/'pos'/'osp', see `route`). An in-memory graph has one
+        frame, so it serves every order; MaterializedGraph returns the
+        copy sorted for it."""
+        return self._df
+
+    def _match(self, s=None, p=None, o=None, subject_is_bnode=None):
+        return self.layout(route(s, p, o)).where(
+            term_filter(s, p, o, subject_is_bnode)
+        )
+
     def with_subject(self, s: str) -> DataFrame:
-        return self._df.where(F.col("subject") == s)
+        return self._match(s=s)
 
     def with_predicate(self, p: str) -> DataFrame:
-        return self._df.where(F.col("predicate") == p)
+        return self._match(p=p)
 
     def with_object(self, o: Obj) -> DataFrame:
-        return self._df.where(object_predicate(o))
+        return self._match(o=o)
 
     def with_subj_obj(self, s: str, o: Obj) -> DataFrame:
         # the reference 'so' index keys on the raw subject string
         # regardless of bnode-ness (source.go:151-152)
-        return self._df.where(
-            (F.col("subject") == s) & object_predicate(o)
-        )
+        return self._match(s=s, o=o)
 
     def with_subj_pred(self, s: str, p: str) -> DataFrame:
-        return self._df.where(
-            (F.col("subject") == s) & (F.col("predicate") == p)
-        )
+        return self._match(s=s, p=p)
 
     def with_pred_obj(self, p: str, o: Obj) -> DataFrame:
-        return self._df.where(
-            (F.col("predicate") == p) & object_predicate(o)
-        )
+        return self._match(p=p, o=o)
 
     # -- membership / set ops --
 
@@ -271,16 +320,8 @@ class RDFGraph:
         """Membership by canonical identity (reference source.go:186-189).
         Component-equality filter so the predicate pushes down onto
         parquet stats even where tkey is a derived column."""
-        return bool(
-            self._df.where(
-                (F.col("subject") == t.subject)
-                & (F.col("subject_is_bnode") == t.subject_is_bnode)
-                & (F.col("predicate") == t.predicate)
-                & object_predicate(t.obj)
-            )
-            .limit(1)
-            .take(1)
-        )
+        m = self._match(t.subject, t.predicate, t.obj, t.subject_is_bnode)
+        return bool(m.limit(1).take(1))
 
     def contains_batch(self, other: DataFrame) -> DataFrame:
         """Batch Contains: the subset of `other` present in this graph

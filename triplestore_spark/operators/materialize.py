@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from triplestore_spark import schema as S
-from triplestore_spark.dsl import Obj
 from triplestore_spark.operators.graph import RDFGraph, dedup_triples
 from triplestore_spark.storage import read_json, write_json
 
@@ -97,11 +96,10 @@ def layout_partitions(fp: dict, parallelism: int) -> int:
 def materialize_graph(
     df: DataFrame,
     path: str,
-    layouts: tuple[str, ...] = ("spo", "pos", "osp"),
     num_partitions: Optional[int] = None,
     force: bool = False,
 ) -> dict:
-    """Write a deduped canonical triple set in the requested layouts.
+    """Write a deduped canonical triple set in all three layouts.
 
     Returns the manifest. Skips the write when the fingerprint matches
     the existing manifest (snapshot memoization)."""
@@ -131,11 +129,7 @@ def materialize_graph(
         def _core(d: dict) -> tuple:
             return (d.get("count"), d.get("hx"), d.get("hx2"))
 
-        if (
-            old is not None
-            and _core(old.get("fingerprint", {})) == _core(fp)
-            and set(old.get("layouts", [])) >= set(layouts)
-        ):
+        if old is not None and _core(old.get("fingerprint", {})) == _core(fp):
             return old
 
         if num_partitions is None:
@@ -166,26 +160,27 @@ def materialize_graph(
         # executors via the scheduler the same way)
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(layouts)) as ex:
-            list(ex.map(write_layout, layouts))
+        with ThreadPoolExecutor(max_workers=len(LAYOUTS)) as ex:
+            list(ex.map(write_layout, LAYOUTS))
     finally:
         canon.unpersist()
 
     manifest = {
         "version": 1,
         "fingerprint": fp,
-        "layouts": list(layouts),
+        "layouts": list(LAYOUTS),
         "num_partitions": num_partitions,
-        "sort_specs": {layout: LAYOUTS[layout] for layout in layouts},
+        "sort_specs": LAYOUTS,
     }
     write_json(spark, manifest_path, manifest)
     return manifest
 
 
 class MaterializedGraph(RDFGraph):
-    """RDFGraph over materialized layouts: every lookup reads the
-    layout whose sort prefix matches the predicate, so Parquet
-    min/max stats skip non-matching files/row-groups."""
+    """RDFGraph over materialized layouts. It only says where each
+    layout is: RDFGraph routes every lookup to the layout whose sort
+    prefix matches the bound positions, so Parquet min/max stats skip
+    non-matching files/row-groups."""
 
     def __init__(self, spark: SparkSession, path: str):
         self._spark = spark
@@ -200,13 +195,10 @@ class MaterializedGraph(RDFGraph):
         self._count = self.manifest["fingerprint"]["count"]
 
     def layout(self, name: str) -> DataFrame:
-        """The keyed frame of one sorted layout ('spo'/'pos'/'osp');
-        falls back to the first materialized layout when the requested
-        one was not written. Public: BGP pattern routing
-        (operators/bgp.py) picks its scan source here."""
+        """The keyed frame of one sorted layout ('spo'/'pos'/'osp').
+        RDFGraph routes every lookup, BGP pattern and SHACL scan
+        through here (operators/graph.route)."""
         if name not in self._layout_cache:
-            if name not in self.manifest["layouts"]:
-                name = self.manifest["layouts"][0]
             from triplestore_spark.functions.keys import with_keys
 
             # okey/tkey are derived at scan time (whole-stage-codegen
@@ -215,34 +207,3 @@ class MaterializedGraph(RDFGraph):
                 self._spark.read.parquet(os.path.join(self._path, name))
             )
         return self._layout_cache[name]
-
-    # route each lookup to the best-sorted copy
-    def with_subject(self, s: str) -> DataFrame:
-        return self.layout("spo").where(F.col("subject") == s)
-
-    def with_subj_pred(self, s: str, p: str) -> DataFrame:
-        return self.layout("spo").where(
-            (F.col("subject") == s) & (F.col("predicate") == p)
-        )
-
-    def with_subj_obj(self, s: str, o: Obj) -> DataFrame:
-        from triplestore_spark.operators.graph import object_predicate
-
-        return self.layout("spo").where(
-            (F.col("subject") == s) & object_predicate(o)
-        )
-
-    def with_predicate(self, p: str) -> DataFrame:
-        return self.layout("pos").where(F.col("predicate") == p)
-
-    def with_pred_obj(self, p: str, o: Obj) -> DataFrame:
-        from triplestore_spark.operators.graph import object_predicate
-
-        return self.layout("pos").where(
-            (F.col("predicate") == p) & object_predicate(o)
-        )
-
-    def with_object(self, o: Obj) -> DataFrame:
-        from triplestore_spark.operators.graph import object_predicate
-
-        return self.layout("osp").where(object_predicate(o))

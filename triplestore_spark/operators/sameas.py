@@ -37,14 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark import schema as S
+from triplestore_spark.functions.keys import subject_key_expr
 
 __all__ = ["equivalence_classes", "merge_equivalents"]
-
-
-def _subject_key_col() -> F.Column:
-    return F.when(
-        F.col("subject_is_bnode"), F.concat(F.lit("_:"), F.col("subject"))
-    ).otherwise(F.concat(F.lit("<"), F.col("subject"), F.lit(">")))
 
 
 def _object_key_col() -> F.Column:
@@ -77,7 +72,7 @@ def equivalence_classes(
             "object — equivalence links resources/bnodes only"
         )
     pairs = edges.select(
-        _subject_key_col().alias("doc_a"),
+        subject_key_expr().alias("doc_a"),
         _object_key_col().alias("doc_b"),
     ).where(F.col("doc_a") != F.col("doc_b"))
     labels = connected_components_star(pairs, max_iter=max_iter)
@@ -114,7 +109,7 @@ def merge_equivalents(
     smap = classes.select(
         F.col("node_key").alias("__sk"), F.col("rep_key").alias("__srep")
     )
-    out = facts.withColumn("__sk", _subject_key_col()).join(
+    out = facts.withColumn("__sk", subject_key_expr()).join(
         smap, on="__sk", how="left"
     )
     s_is_b = F.col("__srep").startswith("_:")

@@ -118,13 +118,10 @@ def validate(
     node key, or the observed count for count constraints."""
     from triplestore_spark.functions.typed import parse_typed_col
 
-    df = graph.df if isinstance(graph, RDFGraph) else graph
-    # every SHACL scan filters on a constant predicate — over a
-    # MaterializedGraph, read the POS layout so the constant lands on
-    # parquet min/max stats of the copy sorted for it (same routing
-    # as bgp_match's per-pattern layout choice)
-    if hasattr(graph, "layout"):
-        df = graph.layout("pos")
+    # every SHACL scan filters on a constant predicate: read the POS
+    # layout, so over a MaterializedGraph the constant lands on parquet
+    # min/max stats of the copy sorted for it (operators/graph.route)
+    df = graph.layout("pos") if isinstance(graph, RDFGraph) else graph
     okey = (
         F.col("okey")
         if "okey" in df.columns

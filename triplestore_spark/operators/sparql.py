@@ -1802,12 +1802,10 @@ def _ask_group(graph, g: dict) -> bool:
     """One ASK arm. A group whose patterns are ALL constant is the
     reference's Contains check (source.go's point lookup) — bgp_match
     deliberately refuses it (nothing to join), so each pattern runs as
-    a direct limit-1 component-filter scan instead; any variable makes
-    it a normal limit-1 BGP."""
-    from pyspark.sql import functions as F
-
+    a limit-1 lookup instead, on the routed layout of an RDFGraph;
+    any variable makes it a normal limit-1 BGP."""
     from triplestore_spark.operators.bgp import _as_obj, _is_var, bgp_match
-    from triplestore_spark.operators.graph import RDFGraph, object_predicate
+    from triplestore_spark.operators.graph import RDFGraph, term_filter
 
     kw = _match_kwargs(g, graph)
     has_var = any(
@@ -1816,13 +1814,12 @@ def _ask_group(graph, g: dict) -> bool:
     if has_var or kw:
         m = bgp_match(graph, g["patterns"], distinct=False, **kw)
         return bool(m.limit(1).take(1))
-    df = graph.df if isinstance(graph, RDFGraph) else graph
     for s, p, o in g["patterns"]:
-        scan = df.where(
-            (F.col("subject") == s)
-            & (F.col("predicate") == p)
-            & object_predicate(_as_obj(o))
-        )
+        o = _as_obj(o)
+        if isinstance(graph, RDFGraph):
+            scan = graph._match(s, p, o)
+        else:
+            scan = graph.where(term_filter(s, p, o))
         if not scan.limit(1).take(1):
             return False
     return True

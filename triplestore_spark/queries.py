@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from triplestore_spark import schema as S
 from triplestore_spark.functions.keys import with_keys
+from triplestore_spark.operators.bgp import _sql_str
 from triplestore_spark.operators.graph import dedup_triples
 from triplestore_spark.operators.struct_melt import MeltField, melt_df
 from triplestore_spark.pipeline import spec
@@ -1197,7 +1198,7 @@ def registry() -> dict[str, tuple[Callable, str | None]]:
 
     q["nt_encode_context"] = (
         # S9: context-driven encode (prefix expansion + QueryEscape +
-        # base prepend) through the distributed mapInPandas path; the
+        # base prepend) through nt_encode_expr's context path; the
         # expected lines are the reference's own golden output
         # (reference codec_test.go:282-316, encode.go:230-246)
         lambda spark, sf: _context_encode(spark),
@@ -1542,10 +1543,6 @@ _CONTEXT_GOLDEN = [
     '<http://test.url#co%3Cmplex> <http://test.url#%22with%3E> "with"special<chars." .',
     '<http://test.url#one> <http://test.url#with+spaces> <http://test.url#10+inbound-smtp.eu-west-1.amazonaws.com.> .',
 ]
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
 
 
 def _context_encode(spark: SparkSession) -> DataFrame:

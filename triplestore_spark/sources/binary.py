@@ -15,10 +15,10 @@ with an empty datatype tag (decode.go:192-198) — identity is
 unaffected since lang keys omit the type.
 
 Spark integration: decode reads `binaryFile` rows and cursor-decodes
-each blob inside `mapInPandas` (one file -> many triples); encode
-produces a BinaryType column per triple via mapInPandas, with a
-driver-side concatenator for golden tests and a per-partition file
-sink for scale.
+each blob inside `mapInPandas` (one file -> many triples), or splits
+large files on record boundaries (read_binary_split); both parse with
+the one record parser, _scan_records. Encode is the driver-side
+concatenator encode_binary_triples (golden tests / CLI).
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 import posixpath
 import re
 import struct
+from itertools import islice
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +45,8 @@ RESOURCE_TAG = 0
 LITERAL_TAG = 1
 BNODE_TAG = 2
 LITERAL_LANG_TAG = 3
+
+_U32 = struct.Struct(">I")
 
 
 def encode_triple_bytes(row: tuple) -> bytes:
@@ -82,51 +85,11 @@ class BinaryDecodeError(ValueError):
 
 
 def decode_binary_bytes(blob: bytes) -> list[tuple]:
-    """Decode a whole binary document into TRIPLE_FIELDS tuples."""
-    out = []
-    pos = 0
+    """Decode a whole binary document into TRIPLE_FIELDS tuples: the
+    split reader's record parser (_scan_records, uncapped) run over a
+    window on the blob itself."""
     n = len(blob)
-
-    def word():
-        nonlocal pos
-        if pos + 4 > n:
-            raise BinaryDecodeError("truncated word length")
-        (ln,) = struct.unpack_from(">I", blob, pos)
-        pos += 4
-        if pos + ln > n:
-            raise BinaryDecodeError(f"cannot decode word of length {ln}")
-        w = blob[pos : pos + ln].decode("utf-8")
-        pos += ln
-        return w
-
-    while pos < n:
-        is_bnode = blob[pos] != 0
-        pos += 1
-        sub = word()
-        pred = word()
-        if pos >= n:
-            raise BinaryDecodeError("truncated object type")
-        obj_type = blob[pos]
-        pos += 1
-        if obj_type == RESOURCE_TAG:
-            out.append((sub, is_bnode, pred, S.KIND_RESOURCE, word(), "", ""))
-        elif obj_type == BNODE_TAG:
-            out.append((sub, is_bnode, pred, S.KIND_BNODE, word(), "", ""))
-        elif obj_type == LITERAL_LANG_TAG:
-            lang = word()
-            val = unescape_string_literal(word())
-            # decoded lang literal keeps an empty datatype
-            # (reference decode.go:192-198)
-            out.append((sub, is_bnode, pred, S.KIND_LITERAL, val, "", lang))
-        elif obj_type == LITERAL_TAG:
-            typ = word()
-            val = word()
-            if typ == S.XSD_STRING:
-                val = unescape_string_literal(val)
-            out.append((sub, is_bnode, pred, S.KIND_LITERAL, val, typ, ""))
-        else:
-            raise BinaryDecodeError(f"unknown object tag {obj_type}")
-    return out
+    return [row for row, _ in _scan_records(_BlobWindow(blob), 0, n, n)]
 
 
 def read_binary(spark: SparkSession, path: str) -> DataFrame:
@@ -160,31 +123,6 @@ def decode_binary_blobs_df(df: DataFrame, col: str = "bin") -> DataFrame:
     return with_keys(df.select(col).mapInPandas(_decode, schema=S.TRIPLE_SCHEMA))
 
 
-def encode_binary_df(df: DataFrame) -> DataFrame:
-    """Triples -> one BinaryType blob per triple."""
-
-    def _encode(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            blobs = [
-                encode_triple_bytes(row)
-                for row in zip(
-                    pdf["subject"],
-                    pdf["subject_is_bnode"],
-                    pdf["predicate"],
-                    pdf["object_kind"],
-                    pdf["object_value"],
-                    pdf["object_type"],
-                    pdf["object_lang"],
-                )
-            ]
-            yield pd.DataFrame({"bin": blobs})
-
-    out_schema = T.StructType([T.StructField("bin", T.BinaryType())])
-    return df.select(*S.TRIPLE_FIELDS).mapInPandas(_encode, out_schema)
-
-
 def encode_binary_triples(df: DataFrame) -> bytes:
     """Driver-side concatenated binary document (golden tests / CLI),
     sorted by tkey descending for determinism."""
@@ -199,6 +137,19 @@ def encode_binary_triples(df: DataFrame) -> bytes:
     return b"".join(encode_triple_bytes(tuple(r)) for r in rows)
 
 
+class _BlobWindow:
+    """_FileWindow's interface over bytes already in memory: the blob
+    itself is the buffer, so there is no copy and no file read."""
+
+    def __init__(self, blob: bytes):
+        self._blob = blob
+
+    def buffer(self, off: int, n: int) -> tuple[bytes, int]:
+        if off + n > len(self._blob):
+            raise BinaryDecodeError("read past end of blob")
+        return self._blob, 0
+
+
 class _FileWindow:
     """Forward-moving byte window over a seekable file: absolute-offset
     reads backed by chunked buffering, so the split scanner below never
@@ -211,7 +162,9 @@ class _FileWindow:
         self._start = 0
         self._buf = b""
 
-    def bytes_at(self, off: int, n: int) -> bytes:
+    def buffer(self, off: int, n: int) -> tuple[bytes, int]:
+        """(buf, base): buf holds the file bytes from absolute offset
+        `base` on, at least through [off, off + n)."""
         if off + n > self._flen:
             raise BinaryDecodeError("read past end of file")
         if off < self._start:
@@ -230,8 +183,7 @@ class _FileWindow:
         if off - self._start > 4 * self._chunk:
             self._buf = self._buf[off - self._start :]
             self._start = off
-        rel = off - self._start
-        return self._buf[rel : rel + n]
+        return self._buf, self._start
 
 
 # Word-length sanity cap for the split scanner: the reference's own
@@ -243,68 +195,93 @@ class _FileWindow:
 DEFAULT_MAX_WORD_BYTES = 64 << 20
 
 
-def _scan_record(
-    w: _FileWindow,
+def _scan_records(
+    w: _BlobWindow | _FileWindow,
     off: int,
+    stop: int,
     flen: int,
     max_word: Optional[int] = None,
-) -> tuple[tuple, int]:
-    """Parse ONE record at absolute offset `off`; returns (triple
-    fields, next offset). Raises BinaryDecodeError on anything that is
-    not a well-formed record — the resync scanner treats that as
-    'off is not a boundary'.
+) -> Iterator[tuple[tuple, int]]:
+    """Parse consecutive records from absolute offset `off` while the
+    next one starts before `stop`; yields (triple fields, next offset)
+    per record. Raises BinaryDecodeError on anything that is not a
+    well-formed record — the resync scanner treats that as 'off is not
+    a boundary'. The one record parser: whole-blob reads
+    (decode_binary_bytes), split reads and resync validation all run
+    it.
 
     The bool byte is LENIENT in every mode — any nonzero byte is a
-    bnode subject, exactly like decode_binary_bytes above and the
-    reference (Go binary.Read into bool, decode.go:152) — so split
-    parsing and resync validation accept precisely the records the
-    whole-file reader accepts (a stricter validator here silently
-    DROPPED lenient records near range boundaries). Resync selectivity
-    comes from the object tag (4/256), length sanity (`max_word`,
-    validation only), and utf-8 validity of every word across the
-    chain. `max_word=None` means uncapped (parse mode — the wire
-    format allows words up to 4 GiB and the whole-file reader imposes
-    no cap)."""
-    b0 = w.bytes_at(off, 1)[0]
-    pos = off + 1
+    bnode subject, like the reference (Go binary.Read into bool,
+    decode.go:152) — so split parsing and resync validation accept
+    precisely the records the whole-blob reader accepts (a stricter
+    validator here silently DROPPED lenient records near range
+    boundaries). Resync selectivity comes from the object tag (4/256),
+    length sanity (`max_word`, validation only), and utf-8 validity of
+    every word across the chain. `max_word=None` means uncapped (parse
+    mode — the wire format allows words up to 4 GiB).
+
+    Reads index the window's buffer directly and ask the window for
+    more only when the buffer runs out; a blob window's buffer is the
+    whole blob, so a whole-blob parse never calls back. One generator
+    per run of records, not one call per record: the per-record
+    closure setup doubled the whole-blob decode time."""
+    buf, base, end = b"", off, off
+    pos = off
     if max_word is None:
         max_word = flen
 
     def word() -> str:
-        nonlocal pos
-        (ln,) = struct.unpack(">I", w.bytes_at(pos, 4))
+        nonlocal pos, buf, base, end
+        if pos + 4 > end:
+            buf, base = w.buffer(pos, 4)
+            end = base + len(buf)
+        (ln,) = _U32.unpack_from(buf, pos - base)
         pos += 4
         if ln > flen - pos or ln > max_word:
             raise BinaryDecodeError(f"cannot decode word of length {ln}")
+        if pos + ln > end:
+            buf, base = w.buffer(pos, ln)
+            end = base + len(buf)
+        i = pos - base
         try:
-            s = w.bytes_at(pos, ln).decode("utf-8")
+            s = buf[i : i + ln].decode("utf-8")
         except UnicodeDecodeError as e:
             raise BinaryDecodeError(str(e)) from e
         pos += ln
         return s
 
-    is_bnode = b0 != 0
-    sub = word()
-    pred = word()
-    tag = w.bytes_at(pos, 1)[0]
-    pos += 1
-    if tag == RESOURCE_TAG:
-        row = (sub, is_bnode, pred, S.KIND_RESOURCE, word(), "", "")
-    elif tag == BNODE_TAG:
-        row = (sub, is_bnode, pred, S.KIND_BNODE, word(), "", "")
-    elif tag == LITERAL_LANG_TAG:
-        lang = word()
-        row = (sub, is_bnode, pred, S.KIND_LITERAL,
-               unescape_string_literal(word()), "", lang)
-    elif tag == LITERAL_TAG:
-        typ = word()
-        val = word()
-        if typ == S.XSD_STRING:
-            val = unescape_string_literal(val)
-        row = (sub, is_bnode, pred, S.KIND_LITERAL, val, typ, "")
-    else:
-        raise BinaryDecodeError(f"unknown object tag {tag}")
-    return row, pos
+    while pos < stop:
+        if pos >= end:
+            buf, base = w.buffer(pos, 1)
+            end = base + len(buf)
+        is_bnode = buf[pos - base] != 0
+        pos += 1
+        sub = word()
+        pred = word()
+        if pos >= end:
+            buf, base = w.buffer(pos, 1)
+            end = base + len(buf)
+        tag = buf[pos - base]
+        pos += 1
+        if tag == RESOURCE_TAG:
+            row = (sub, is_bnode, pred, S.KIND_RESOURCE, word(), "", "")
+        elif tag == BNODE_TAG:
+            row = (sub, is_bnode, pred, S.KIND_BNODE, word(), "", "")
+        elif tag == LITERAL_LANG_TAG:
+            lang = word()
+            # decoded lang literal keeps an empty datatype
+            # (reference decode.go:192-198)
+            row = (sub, is_bnode, pred, S.KIND_LITERAL,
+                   unescape_string_literal(word()), "", lang)
+        elif tag == LITERAL_TAG:
+            typ = word()
+            val = word()
+            if typ == S.XSD_STRING:
+                val = unescape_string_literal(val)
+            row = (sub, is_bnode, pred, S.KIND_LITERAL, val, typ, "")
+        else:
+            raise BinaryDecodeError(f"unknown object tag {tag}")
+        yield row, pos
 
 
 def _find_boundary(
@@ -327,11 +304,9 @@ def _find_boundary(
     o = start
     while o < min(end, flen):
         try:
-            pos = o
-            for _ in range(validate_records):
-                _, pos = _scan_record(w, pos, flen, max_word)
-                if pos >= flen:
-                    break
+            chain = _scan_records(w, o, flen, flen, max_word)
+            for _ in islice(chain, validate_records):
+                pass
             return o
         except BinaryDecodeError:
             o += 1
@@ -408,33 +383,18 @@ def _scan_file_range(
         if o is None:
             return rows, None, start, 0
         pos = o
-        while pos < min(end, flen):
-            try:
-                row, pos = _scan_record(w, pos, flen)
-            except BinaryDecodeError:
-                if not tolerant:
-                    raise
-                # diagnostic mode: report how far the chain reached —
-                # the driver-side coverage walk turns the shortfall
-                # into a precise gap error
-                break
-            n += 1
-            if keep_rows:
-                rows.append(row)
+        try:
+            for row, pos in _scan_records(w, o, min(end, flen), flen):
+                n += 1
+                if keep_rows:
+                    rows.append(row)
+        except BinaryDecodeError:
+            if not tolerant:
+                raise
+            # diagnostic mode: report how far the chain reached — the
+            # driver-side coverage walk turns the shortfall into a
+            # precise gap error
     return rows, o, pos, n
-
-
-def _decode_file_range(
-    path: str,
-    start: int,
-    end: int,
-    flen: int,
-    validate_records: int = 4,
-    max_word: int = DEFAULT_MAX_WORD_BYTES,
-) -> list[tuple]:
-    return _scan_file_range(
-        path, start, end, flen, validate_records, max_word=max_word
-    )[0]
 
 
 def _list_ranges(
@@ -657,7 +617,9 @@ def read_binary_split(
                 pdf["path"], pdf["start"], pdf["end"], pdf["flen"]
             ):
                 rows.extend(
-                    _decode_file_range(p, int(s), int(e), int(fl), vr, mw)
+                    _scan_file_range(
+                        p, int(s), int(e), int(fl), vr, max_word=mw
+                    )[0]
                 )
             yield pd.DataFrame(rows, columns=S.TRIPLE_FIELDS)
 

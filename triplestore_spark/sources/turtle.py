@@ -56,6 +56,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from triplestore_spark import schema as S
+from triplestore_spark.functions.keys import subject_key_expr
 
 RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _XSD_NS = S.XML_SCHEMA_NAMESPACE + "#"
@@ -525,13 +526,9 @@ def turtle_lines(df: DataFrame) -> DataFrame:
         .groupBy("subject", "subject_is_bnode")
         .agg(F.array_sort(F.collect_list("_po")).alias("_pos"))
     )
-    subj = F.when(
-        F.col("subject_is_bnode"),
-        F.concat(F.lit("_:"), F.col("subject")),
-    ).otherwise(F.concat(F.lit("<"), F.col("subject"), F.lit(">")))
     return per_subj.select(
         F.concat(
-            subj, F.lit(" "),
+            subject_key_expr(), F.lit(" "),
             F.array_join("_pos", " ;\n    "), F.lit(" ."),
         ).alias("value")
     )
