@@ -1138,10 +1138,10 @@ def test_kind_tests_drop_null_bindings(spark):
 def test_empty_path_group_named_error():
     """'()' inside a path alternative raises a named parse error, not
     a bare NoneType crash from the edge composer (ADVICE r6, low)."""
-    from triplestore_spark.operators.bgp import _seq_alt_steps
+    from triplestore_spark.operators.bgp import _parse_path_step
 
     with pytest.raises(ValueError, match="empty group"):
-        _seq_alt_steps("()")
+        _parse_path_step("kg:a|()*")
 
 
 def test_bgp_filter_multi_pattern_var_post_join(priced_graph):

@@ -110,6 +110,28 @@ def test_binary_invalid_utf8_word_raises_decode_error(tmp_path):
         _scan_file_range(str(p), 0, len(blob), len(blob))
 
 
+def test_binary_word_past_listed_length_raises(tmp_path):
+    """A word that runs past the length the file was listed with is a
+    truncated record, even when the file on disk has grown since: the
+    split reader's window holds no byte past that length."""
+    from triplestore_spark.sources.binary import (
+        BinaryDecodeError,
+        _scan_file_range,
+    )
+
+    blob = b"".join(
+        encode_triple_bytes((f"s{i}", False, "p", "res", f"o{i}", "", ""))
+        for i in range(2)
+    )
+    p = tmp_path / "grown.bin"
+    p.write_bytes(blob)
+    listed = len(blob) - 2
+    with pytest.raises(BinaryDecodeError, match="word of length"):
+        _scan_file_range(str(p), 0, listed, listed)
+    rows, _, end, n = _scan_file_range(str(p), 0, len(blob), len(blob))
+    assert (end, n) == (len(blob), 2)
+
+
 def test_spark_nt_roundtrip(spark, tmp_path):
     from triplestore_spark.sources.ntriples import read_ntriples, write_ntriples
 

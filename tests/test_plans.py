@@ -364,7 +364,7 @@ def test_seq_closure_edge_relation_composed_once(mat_graph):
     from triplestore_spark.operators.bgp import _seq_edges, _parse_path_step
 
     alts, lo, hi = _parse_path_step("(kg:mentions/kg:source)*")
-    edges = _seq_edges(mat_graph, alts.steps)
+    edges = _seq_edges(mat_graph, alts[0].steps)
     opt = optimized_str(edges)
     # the composition is a single two-scan join, aggregated distinct
     assert opt.count("Join") == 1, opt

@@ -15,9 +15,11 @@ from triplestore_spark import schema as S
 from triplestore_spark.dsl import Obj
 from triplestore_spark.operators.bgp import (
     PathExpr,
+    _parse_path_steps,
     bgp_construct,
     bgp_match,
     property_path,
+    property_path_sql,
 )
 from triplestore_spark.operators.bgp_agg import bgp_select, bgp_union
 from triplestore_spark.operators.graph import RDFGraph
@@ -317,16 +319,23 @@ def test_path_inverse_and_alternation(g):
 
 
 def test_path_grouped_quantifier_and_inverse_group():
+    """SPARQL compiles a path to the parsed steps the engine's string
+    syntax parses to: both describe the same path."""
     q = parse_sparql("SELECT * WHERE { <e:x> (kg:a|^kg:b)* ?y }")
     pred = q["where"]["patterns"][0][1]
-    assert isinstance(pred, PathExpr) and pred.steps == ["kg:a|^kg:b*"]
+    assert isinstance(pred, PathExpr)
+    assert pred.steps == _parse_path_steps(["kg:a|^kg:b*"])
     q2 = parse_sparql("SELECT * WHERE { ?x ^(kg:a/kg:b) ?y }")
     pred2 = q2["where"]["patterns"][0][1]
-    assert pred2.steps == ["^kg:b", "^kg:a"]
+    assert pred2.steps == _parse_path_steps(["^kg:b", "^kg:a"])
     q3 = parse_sparql("SELECT * WHERE { ?x kg:a? ?y }")
-    assert q3["where"]["patterns"][0][1].steps == ["kg:a{0,1}"]
+    assert q3["where"]["patterns"][0][1].steps == _parse_path_steps(
+        ["kg:a{0,1}"]
+    )
     q4 = parse_sparql("SELECT * WHERE { ?x !(kg:a|kg:b)+ ?y }")
-    assert q4["where"]["patterns"][0][1].steps == ["!kg:a|kg:b+"]
+    assert q4["where"]["patterns"][0][1].steps == _parse_path_steps(
+        ["!kg:a|kg:b+"]
+    )
 
 
 def test_path_closure_matches_property_path(g):
@@ -1102,6 +1111,79 @@ def test_path_alt_of_sequences_closure(g):
             g,
             "SELECT ?c WHERE { kg:Engine (kg:sub|(kg:sub/kg:sub)) ?c }",
         )
+
+
+# n1 -a-> n2 -b-> n3 -a-> n4 -b-> n5, n3 -c-> n6, n1 -d-> n7: one
+# graph, once with compact names and once with full IRIs
+PATH_EDGES = [
+    ("n1", "a", "n2"), ("n2", "b", "n3"), ("n3", "a", "n4"),
+    ("n4", "b", "n5"), ("n3", "c", "n6"), ("n1", "d", "n7"),
+]
+
+
+def _named_graph(spark, ns):
+    rows = [
+        (ns + s, False, ns + p, "res", ns + o, "", "")
+        for s, p, o in PATH_EDGES
+    ]
+    return rows, RDFGraph(
+        spark.createDataFrame(rows, S.TRIPLE_SCHEMA), cache=False
+    )
+
+
+def test_full_iri_paths_match_compact_paths(spark):
+    """Every path shape answers the same over full IRIs as over compact
+    names: SPARQL hands the engine parsed steps, so the '/' inside
+    'http://ex.org/a' is never read as a hop. (A printed '(a/b)' group
+    used to split there, into hops 'http:', 'ex.org', 'a', ...)"""
+    import duckdb
+    import pandas as pd
+
+    _, compact = _named_graph(spark, "kg:")
+    iri_rows, iri = _named_graph(spark, "http://ex.org/")
+    shapes = [
+        ("?x", "{p}a/{p}b"),
+        ("{p}n1", "({p}a/{p}b)*"),
+        ("{p}n5", "^({p}a/{p}b)*"),
+        ("{p}n1", "({p}a|({p}b/{p}c))+"),
+        ("?x", "!({p}a|{p}b)"),
+        ("{p}n1", "{p}a?"),
+        ("?x", "^({p}a|{p}b)"),
+    ]
+    answers = []
+    for subj, path in shapes:
+        want = rows(sparql_query(
+            compact,
+            "SELECT * WHERE { %s %s ?y }"
+            % (subj.format(p="kg:"), path.format(p="kg:")),
+        ))
+        got = rows(sparql_query(
+            iri,
+            "PREFIX ex: <http://ex.org/> SELECT * WHERE { %s %s ?y }"
+            % (subj.format(p="ex:"), path.format(p="ex:")),
+        ))
+        got = [
+            tuple(v.replace("<http://ex.org/", "<kg:") for v in r)
+            for r in got
+        ]
+        assert got == want, (subj, path)
+        answers.append(want)
+    assert all(answers)
+    assert answers[1] == [("<kg:n1>",), ("<kg:n3>",), ("<kg:n5>",)]
+    assert answers[2] == [("<kg:n1>",), ("<kg:n3>",), ("<kg:n5>",)]
+    # (a/b)* over full IRIs against DuckDB's recursive CTE
+    pred = parse_sparql(
+        "PREFIX ex: <http://ex.org/> "
+        "SELECT * WHERE { ex:n1 (ex:a/ex:b)* ?y }"
+    )["where"]["patterns"][0][1]
+    con = duckdb.connect()
+    con.register("triples", pd.DataFrame(iri_rows, columns=S.TRIPLE_FIELDS))
+    sql = property_path_sql(pred.steps, start="http://ex.org/n1")
+    duck = sorted(tuple(r) for r in con.execute(sql).fetchall())
+    assert duck == [
+        ("<http://ex.org/n1>",), ("<http://ex.org/n3>",),
+        ("<http://ex.org/n5>",),
+    ]
 
 
 def test_select_expressions(g):

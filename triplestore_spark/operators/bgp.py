@@ -38,7 +38,8 @@ Scale notes (the part the reference's in-memory maps never face):
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence, Union
+from dataclasses import dataclass
+from typing import Mapping, NamedTuple, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -59,11 +60,13 @@ class PathExpr:
     form splits steps on '/' outside parentheses; each step takes the
     full property_path step syntax (inverse '^p', alternation 'p1|p2',
     quantifiers 'p*'/'p+'/'p{m,n}', and a quantified SEQUENCE group
-    '(p1/p2)*' — closure over the composed relation). Plain string
-    predicates containing path metacharacters ('|', '^', '*', '+',
-    '{', '!', '(', or '/' outside '://') are auto-detected — PathExpr
-    exists for explicit control and for the rare IRI that would
-    misdetect."""
+    '(p1/p2)*' — closure over the composed relation). A step may also
+    be an already parsed _Step, which is how SPARQL hands over its
+    paths: parsed, so an IRI's own '/' is never read as a hop. Plain
+    string predicates containing path metacharacters ('|', '^', '*',
+    '+', '{', '!', '(', or '/' outside '://') are auto-detected —
+    PathExpr exists for explicit control and for the rare IRI that
+    would misdetect."""
 
     __slots__ = ("steps",)
 
@@ -1195,44 +1198,66 @@ def _split_path_alt(expr: str) -> list[str]:
     return out
 
 
-def _path_step_alternatives(step) -> list[str]:
-    """Normalize one path step to its alternative list: 'p', '^p'
+class _Step(NamedTuple):
+    """One parsed path step: `alts` is a tuple of alternatives, each a
+    predicate with an optional '^' (inverse) or '!' (negated set
+    member) prefix, or a _SeqGroup; `lo`/`hi` bound the hop count
+    (1, 1 for a plain hop, hi None for an unbounded closure)."""
+
+    alts: tuple
+    lo: int = 1
+    hi: int | None = 1
+
+
+@dataclass(frozen=True)
+class _SeqGroup:
+    """A parenthesized SEQUENCE alternative '(p1/p2)', as inner _Steps.
+    Under a quantifier it closes over a FIXED-LENGTH sequence: the
+    closure composes the inner hops into one (src, dst) edge relation
+    and walks THAT, so per closure level the walk joins the
+    precomposed relation instead of re-deriving the chain. A step
+    whose only alternative is an unquantified group is pure grouping;
+    _parse_path_steps splices its steps inline."""
+
+    steps: tuple[_Step, ...]
+
+
+def _negated(alts) -> bool:
+    """A negated property set: its alternatives are all '!'-prefixed."""
+    return isinstance(alts[0], str) and alts[0].startswith("!")
+
+
+def _path_step_alternatives(step) -> tuple:
+    """Normalize one path step to its alternatives: 'p', '^p'
     (inverse), 'p1|p2|^p3' (alternation), or an explicit list. An
-    alternative may itself be a parenthesized SEQUENCE '(p1/p2)' —
-    valid only under a quantifier, where the closure's edge set
-    becomes the union of the plain hops and the composed sequence
-    relations (SPARQL (p0|(p1/p2))*)."""
+    alternative may itself be a parenthesized SEQUENCE '(p1/p2)',
+    parsed here into a _SeqGroup — valid only under a quantifier,
+    where the closure's edge set becomes the union of the plain hops
+    and the composed sequence relations (SPARQL (p0|(p1/p2))*)."""
     if isinstance(step, str):
-        alts = [a.strip() for a in _split_path_alt(step)]
+        raw = [a.strip() for a in _split_path_alt(step)]
     else:
-        alts = [str(a).strip() for a in step]
-    if not alts or any(not a or a == "^" for a in alts):
+        raw = [str(a).strip() for a in step]
+    if not raw or any(not a or a == "^" for a in raw):
         raise ValueError(f"property_path: bad step {step!r}")
-    for a in alts:
+    alts: list = []
+    for a in raw:
         if a.startswith("(") != a.endswith(")"):
             raise ValueError(
                 f"property_path: bad group alternative {a!r}"
             )
-        if _is_var(a.lstrip("^")):
+        if a.startswith("("):
+            inner = [_parse_path_step(s) for s in _split_path_expr(a[1:-1])]
+            if not inner:
+                # '()' / '()*' would otherwise crash later with a bare
+                # NoneType error from the edge composer (ADVICE r6, low)
+                raise ValueError(f"property_path: empty group {a!r}")
+            alts.append(_SeqGroup(tuple(inner)))
+        elif _is_var(a.lstrip("^")):
             raise ValueError("property_path: predicates must be constants")
-    return alts
-
-
-def _seq_alt_steps(a: str) -> list[tuple]:
-    """Parse one '(p1/p2)' group ALTERNATIVE into its fixed-length
-    inner steps (shared by the closure edge builders)."""
-    inner = [_parse_path_step(s) for s in _split_path_expr(a[1:-1])]
-    if not inner:
-        # '()' / '()*' would otherwise crash later with a bare
-        # NoneType error from the edge composer (ADVICE r6, low)
-        raise ValueError(f"property_path: empty group — {a!r}")
-    for in_alts, in_lo, in_hi in inner:
-        if isinstance(in_alts, _SeqGroup) or (in_lo, in_hi) != (1, 1):
-            raise ValueError(
-                "property_path: a sequence alternative closes over a "
-                f"fixed-length sequence only — {a!r}"
-            )
-    return inner
+        else:
+            alts.append(a)
+    return tuple(alts)
 
 
 # Trailing quantifier on a string step: p*, p+, p{n}, p{m,}, p{m,n}.
@@ -1241,40 +1266,31 @@ def _seq_alt_steps(a: str) -> list[tuple]:
 _QUANT_RE = __import__("re").compile(r"^(.*?)(\*|\+|\{(\d+)(?:,(\d*))?\})$")
 
 
-class _SeqGroup:
-    """A parenthesized SEQUENCE under one quantifier — '(p1/p2)*'.
-    Carries the parsed inner steps (each an (alts, 1, 1) hop — the
-    group closes over a FIXED-LENGTH sequence; nested quantifiers are
-    refused by name). The closure composes the inner hops into one
-    (src, dst) edge relation and walks THAT, so per closure level the
-    walk joins the precomposed relation instead of re-deriving the
-    chain."""
-
-    __slots__ = ("steps",)
-
-    def __init__(self, steps):
-        self.steps = steps
-
-
-def _parse_path_steps(path) -> list[tuple]:
-    """Parse a path's step list; a parenthesized group WITHOUT a
-    quantifier is pure grouping and splices its steps inline."""
-    steps: list[tuple] = []
+def _parse_path_steps(path) -> list[_Step]:
+    """The one parser of the engine's path syntax: string and list
+    steps parse, _Steps pass through. A step that is one unquantified
+    group is pure grouping and splices its steps inline."""
+    steps: list[_Step] = []
     for s in path:
-        alts, lo, hi = _parse_path_step(s)
-        if isinstance(alts, _SeqGroup) and (lo, hi) == (1, 1):
-            steps.extend(alts.steps)
+        st = s if isinstance(s, _Step) else _parse_path_step(s)
+        if (
+            st[1:] == (1, 1)
+            and len(st.alts) == 1
+            and isinstance(st.alts[0], _SeqGroup)
+        ):
+            steps.extend(_parse_path_steps(st.alts[0].steps))
         else:
-            steps.append((alts, lo, hi))
+            steps.append(st)
     if not steps:
         raise ValueError("property_path: empty path")
     return steps
 
 
-def _parse_path_step(step) -> tuple[list[str], int, int | None]:
-    """-> (alternatives, min_hops, max_hops|None). A plain step is
-    (alts, 1, 1); 'p*' -> (['p'], 0, None); 'p+' -> (['p'], 1, None);
-    'p{2,4}' -> (['p'], 2, 4); 'p{3,}' -> (['p'], 3, None).
+def _parse_path_step(step) -> _Step:
+    """One string (or explicit alternatives list) step -> _Step. A
+    plain step is (alts, 1, 1); 'p*' -> (('p',), 0, None); 'p+' ->
+    (('p',), 1, None); 'p{2,4}' -> (('p',), 2, 4); 'p{3,}' ->
+    (('p',), 3, None).
 
     A step starting with '!' is a NEGATED PROPERTY SET (SPARQL
     !(p1|p2)): one forward hop whose predicate is NOT in the listed
@@ -1283,102 +1299,90 @@ def _parse_path_step(step) -> tuple[list[str], int, int | None]:
     quantifiers compose ('!p*' = closure over the complement).
 
     A parenthesized SEQUENCE with a quantifier — '(p1/p2)*' — parses
-    to (_SeqGroup(inner_steps), lo, hi): closure over the composed
-    inner relation. Inner steps must be fixed-length (alternation and
-    inverse fine; a nested quantifier raises by name)."""
-    if isinstance(step, str):
-        base = step.strip()
-        lo, hi = 1, 1
-        m = _QUANT_RE.match(base)
-        if m and m.group(1):
-            base, q = m.group(1), m.group(2)
-            if q == "*":
-                lo, hi = 0, None
-            elif q == "+":
-                lo, hi = 1, None
-            else:
-                lo = int(m.group(3))
-                hi = (
-                    (int(m.group(4)) if m.group(4) else None)
-                    if m.group(4) is not None
-                    else lo
-                )
-            if hi is not None and hi < lo:
-                raise ValueError(f"property_path: bad quantifier {q!r}")
-        if base.startswith("(") and base.endswith(")"):
-            inner = _split_path_expr(base[1:-1])
-            if not inner:
-                raise ValueError(f"property_path: empty group {step!r}")
-            if len(inner) == 1:
-                # pure alternation/precedence parens: (p1|p2)* is the
-                # existing whole-step quantifier semantics
-                in_alts, in_lo, in_hi = _parse_path_step(inner[0])
-                if (lo, hi) == (1, 1):
-                    return in_alts, in_lo, in_hi
-                if (in_lo, in_hi) != (1, 1):
-                    raise ValueError(
-                        "property_path: nested quantifiers "
-                        f"({step!r}) are not supported"
-                    )
-                return in_alts, lo, hi
-            inner_steps = [_parse_path_step(s) for s in inner]
-            if (lo, hi) != (1, 1):
-                for in_alts, in_lo, in_hi in inner_steps:
-                    if isinstance(in_alts, _SeqGroup) \
-                            or (in_lo, in_hi) != (1, 1):
-                        raise ValueError(
-                            "property_path: a quantified group closes "
-                            "over a FIXED-LENGTH sequence only — "
-                            f"nested quantifiers/groups in {step!r} "
-                            "are refused"
-                        )
-            return _SeqGroup(inner_steps), lo, hi
-        if base.startswith("!"):
-            preds = [a.strip() for a in base[1:].split("|")]
-            if not preds or any(
-                (not a) or a.startswith("^") or _is_var(a) for a in preds
-            ):
-                raise ValueError(
-                    f"property_path: bad negated property set {step!r} "
-                    "(forward constant predicates only)"
-                )
-            return ["!" + a for a in preds], lo, hi
-        return _path_step_alternatives(base), lo, hi
-    return _path_step_alternatives(step), 1, 1
+    to ((_SeqGroup(inner_steps),), lo, hi): closure over the composed
+    inner relation. Parentheses around ONE step are precedence only:
+    '(p1|p2)*' quantifies the whole alternation."""
+    if not isinstance(step, str):
+        return _Step(_path_step_alternatives(step))
+    base = step.strip()
+    lo, hi = 1, 1
+    m = _QUANT_RE.match(base)
+    if m and m.group(1):
+        base, q = m.group(1), m.group(2)
+        if q == "*":
+            lo, hi = 0, None
+        elif q == "+":
+            lo, hi = 1, None
+        else:
+            lo = int(m.group(3))
+            hi = (
+                (int(m.group(4)) if m.group(4) else None)
+                if m.group(4) is not None
+                else lo
+            )
+        if hi is not None and hi < lo:
+            raise ValueError(f"property_path: bad quantifier {q!r}")
+    if base.startswith("!"):
+        preds = [a.strip() for a in base[1:].split("|")]
+        if not preds or any(
+            (not a) or a.startswith("^") or _is_var(a) for a in preds
+        ):
+            raise ValueError(
+                f"property_path: bad negated property set {step!r} "
+                "(forward constant predicates only)"
+            )
+        return _Step(tuple("!" + a for a in preds), lo, hi)
+    alts = _path_step_alternatives(base)
+    if (
+        len(alts) == 1
+        and isinstance(alts[0], _SeqGroup)
+        and len(alts[0].steps) == 1
+    ):
+        inner = alts[0].steps[0]
+        if (lo, hi) == (1, 1):
+            return inner
+        if inner[1:] != (1, 1):
+            raise ValueError(
+                "property_path: nested quantifiers "
+                f"({step!r}) are not supported"
+            )
+        alts = inner.alts
+    return _Step(alts, lo, hi)
 
 
-def _invert_alt(a: str) -> str:
-    if a.startswith("!"):
-        raise ValueError(
-            "property_path: a negated property set cannot be walked "
-            "backward — pin the start of the chain instead"
-        )
-    if a.startswith("("):
-        # ^((a/b)) == (^b/^a): reverse the hops, invert each one's
-        # alternatives
-        inner = _split_path_expr(a[1:-1])
-        rev = "/".join(
-            "|".join(_invert_alt(x) for x in _split_path_alt(s))
-            for s in reversed(inner)
-        )
-        return "(" + rev + ")"
-    return a[1:] if a.startswith("^") else "^" + a
+def _fixed_hops(steps: Sequence[_Step]) -> Sequence[_Step]:
+    """A sequence group's inner steps, each of which must be one hop:
+    the group's closure is over a FIXED-LENGTH sequence."""
+    for st in steps:
+        if st[1:] != (1, 1):
+            raise ValueError(
+                "property_path: a quantified group closes over a "
+                "FIXED-LENGTH sequence only (nested quantifiers are "
+                "refused)"
+            )
+    return steps
 
 
-def _invert_parsed_step(step: tuple) -> tuple:
-    """^(step): invert every alternative, keep the quantifier; a
-    sequence group reverses its hops and inverts each ( ^((a/b)*) ==
-    (^b/^a)* )."""
-    alts, lo, hi = step
-    if isinstance(alts, _SeqGroup):
-        return (
-            _SeqGroup(
-                [_invert_parsed_step(s) for s in reversed(alts.steps)]
-            ),
-            lo,
-            hi,
-        )
-    return [_invert_alt(a) for a in alts], lo, hi
+def _invert_parsed_step(step: _Step) -> _Step:
+    """^(step): invert every alternative, keep the quantifier — inverse
+    distributes over closure and alternation ( ^(p*) == (^p)*,
+    ^(p|q) == ^p|^q ); a sequence group reverses its hops and inverts
+    each ( ^((a/b)*) == (^b/^a)* )."""
+    alts = []
+    for a in step.alts:
+        if isinstance(a, _SeqGroup):
+            a = _SeqGroup(
+                tuple(_invert_parsed_step(s) for s in reversed(a.steps))
+            )
+        elif a.startswith("!"):
+            raise ValueError(
+                "property_path: a negated property set cannot be walked "
+                "backward — pin the start of the chain instead"
+            )
+        else:
+            a = a[1:] if a.startswith("^") else "^" + a
+        alts.append(a)
+    return _Step(tuple(alts), step.lo, step.hi)
 
 
 def _negated_hop_frame(graph, excluded: Sequence[str], src_t, dst_t):
@@ -1398,15 +1402,14 @@ def _term_key(t: Term) -> str:
     return t.okey() if isinstance(t, Obj) else f"<{t}>"
 
 
-def _closure_edges(
-    graph, alts: Sequence[str]
-) -> DataFrame:
+def _closure_edges(graph, alts: Sequence) -> DataFrame:
     """One-hop edge set (_cs, _cd) for a quantified step: union of the
     alternatives' single-pattern scans, every branch's predicate
     filter pushed down before the union (same shape the fixed-length
-    alternation uses). A negated set ('!'-prefixed alts) is one
-    complement scan."""
-    if alts and alts[0].startswith("!"):
+    alternation uses), plus the composed relation of each _SeqGroup
+    alternative. A negated set ('!'-prefixed alts) is one complement
+    scan."""
+    if _negated(alts):
         edges = _negated_hop_frame(
             graph, [a[1:] for a in alts], "?__cs", "?__cd"
         )
@@ -1416,10 +1419,10 @@ def _closure_edges(
     frames = []
     seq_frames = []
     for a in alts:
-        if a.startswith("("):
+        if isinstance(a, _SeqGroup):
             # a sequence-group alternative '(p1/p2)': its composed
             # relation unions into the edge set alongside plain hops
-            seq_frames.append(_seq_edges(graph, _seq_alt_steps(a)))
+            seq_frames.append(_seq_edges(graph, a.steps))
             continue
         if a.startswith("^"):
             pat: Pattern = ("?__cd", a[1:], "?__cs")
@@ -1439,7 +1442,7 @@ def _closure_edges(
     return edges
 
 
-def _seq_edges(graph, inner_steps: Sequence[tuple]) -> DataFrame:
+def _seq_edges(graph, inner_steps: Sequence[_Step]) -> DataFrame:
     """(_cs, _cd) edge relation of a FIXED-LENGTH sequence group —
     '(p1/p2)*' closes over THIS. Each hop's edge frame (alternation /
     inverse / negated handled by _closure_edges) composes left-to-
@@ -1448,12 +1451,7 @@ def _seq_edges(graph, inner_steps: Sequence[tuple]) -> DataFrame:
     edge set before the walk). Composing ONCE and checkpointing beats
     deriving the chain again at every closure level."""
     cur: DataFrame | None = None
-    for alts, lo, hi in inner_steps:
-        if isinstance(alts, _SeqGroup) or (lo, hi) != (1, 1):
-            raise ValueError(
-                "property_path: a quantified group closes over a "
-                "fixed-length sequence only (no nested quantifiers)"
-            )
+    for alts, _, _ in _fixed_hops(inner_steps):
         hop = _closure_edges(graph, alts)
         if cur is None:
             cur = hop
@@ -1578,7 +1576,9 @@ def property_path(
     closure_max_depth: int = 64,
 ) -> DataFrame:
     """Predicate chain p1/p2/.../pk -> (src, dst) node keys. Each step
-    is a predicate IRI, an INVERSE step '^p' (walked object ->
+    is a parsed _Step (what SPARQL compiles a path to) or a string or
+    list step in the syntax below, parsed once by _parse_path_steps:
+    a predicate IRI, an INVERSE step '^p' (walked object ->
     subject), an ALTERNATION 'p1|p2' / ['p1', '^p2'] (SPARQL alt
     semantics: union of the alternatives' hops), or a QUANTIFIED step
     'p*' / 'p+' / 'p{m,n}' / 'p{m,}' (Kleene closure — a trailing
@@ -1646,11 +1646,7 @@ def property_path(
     for i, (alts, lo, hi) in enumerate(steps):
         src_t, dst_t = terms[i], terms[i + 1]
         if (lo, hi) != (1, 1):
-            edges = (
-                _seq_edges(graph, alts.steps)
-                if isinstance(alts, _SeqGroup)
-                else _closure_edges(graph, alts)
-            )
+            edges = _closure_edges(graph, alts)
             if cur is None:
                 # first step: seed from the pinned start constant
                 seed = local_frame(
@@ -1672,7 +1668,14 @@ def property_path(
                 # both endpoints pinned: witness rows only
                 cols = [F.lit(1).alias("_w")]
             step_df = pairs.select(*cols)
-        elif alts[0].startswith("!"):
+        elif any(isinstance(a, _SeqGroup) for a in alts):
+            raise ValueError(
+                "property_path: a sequence alternative "
+                "('p0|(p1/p2)') needs a quantifier on the step — "
+                "unquantified, write the plain sequence or a "
+                "UNION of path patterns"
+            )
+        elif _negated(alts):
             # negated property set: one complement hop (forward)
             if isinstance(src_t, Obj) and src_t.kind != KIND_RESOURCE:
                 raise ValueError(
@@ -1683,13 +1686,6 @@ def property_path(
                 graph, [a[1:] for a in alts], src_t, dst_t
             )
         else:
-            if any(a.startswith("(") for a in alts):
-                raise ValueError(
-                    "property_path: a sequence alternative "
-                    "('p0|(p1/p2)') needs a quantifier on the step — "
-                    "unquantified, write the plain sequence or a "
-                    "UNION of path patterns"
-                )
             frames = []
             for a in alts:
                 if a.startswith("^"):
@@ -2156,28 +2152,7 @@ def property_path_sql(
     def edge_sql(alts) -> str:
         skey = _SKEY_SQL.format(a="t")
         okey = _OKEY_SQL.format(a="t")
-        if isinstance(alts, _SeqGroup):
-            # sequence group: compose the inner hops' edge subqueries
-            # with one join per hop — the twin of _seq_edges
-            subs = []
-            for in_alts, in_lo, in_hi in alts.steps:
-                if isinstance(in_alts, _SeqGroup) \
-                        or (in_lo, in_hi) != (1, 1):
-                    raise ValueError(
-                        "property_path_sql: a quantified group closes "
-                        "over a fixed-length sequence only"
-                    )
-                subs.append(edge_sql(in_alts))
-            frm = f"({subs[0]}) h0"
-            for k in range(1, len(subs)):
-                frm += (
-                    f" JOIN ({subs[k]}) h{k} ON h{k-1}.ed = h{k}.es"
-                )
-            return (
-                f"SELECT DISTINCT h0.es AS es, "
-                f"h{len(subs) - 1}.ed AS ed FROM {frm}"
-            )
-        if alts and alts[0].startswith("!"):
+        if _negated(alts):
             # negated property set: one complement scan
             excl = ", ".join(_sql_str(a[1:]) for a in alts)
             return (
@@ -2186,13 +2161,12 @@ def property_path_sql(
             )
         parts = []
         for a in alts:
-            if a.startswith("("):
-                # sequence alternative: its composed relation unions
-                # in alongside the plain hops (twin of _closure_edges)
-                subs = [
-                    edge_sql(in_alts)
-                    for in_alts, _, _ in _seq_alt_steps(a)
-                ]
+            if isinstance(a, _SeqGroup):
+                # sequence group: compose the inner hops' edge
+                # subqueries with one join per hop, unioned in
+                # alongside the plain hops (twin of _closure_edges and
+                # _seq_edges)
+                subs = [edge_sql(st.alts) for st in _fixed_hops(a.steps)]
                 frm = f"({subs[0]}) h0"
                 for k in range(1, len(subs)):
                     frm += (
@@ -2221,8 +2195,7 @@ def property_path_sql(
         e = f"e{i}"
         ctes.append(f"{e} AS ({edge_sql(alts)})")
         if (lo, hi) == (1, 1):
-            if any(isinstance(a, str) and a.startswith("(")
-                   for a in alts):
+            if any(isinstance(a, _SeqGroup) for a in alts):
                 # mirror the engine's refusal for twin parity
                 raise ValueError(
                     "property_path_sql: a sequence alternative needs "

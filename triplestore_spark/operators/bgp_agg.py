@@ -199,13 +199,18 @@ def _aggregate_df(df, group_by, aggregates, having) -> DataFrame:
     return df
 
 
-def _modify_df(df, order_by, limit) -> DataFrame:
-    """Solution modifiers (ORDER BY / LIMIT), shared."""
+def _modify_df(df, order_by, limit, offset=None) -> DataFrame:
+    """Solution modifiers (ORDER BY / OFFSET / LIMIT), shared by
+    bgp_select, bgp_union and every SPARQL SELECT tail."""
     if order_by:
         cols = []
         for o in order_by:
             name, direction, typ = _norm_order(o)
             name = _var(name) if _is_var(name) else name
+            if name not in df.columns:
+                raise ValueError(
+                    f"ORDER BY variable ?{name} is not bound by the query"
+                )
             c = (
                 _typed_binding(name, typ)
                 if typ is not None
@@ -213,6 +218,8 @@ def _modify_df(df, order_by, limit) -> DataFrame:
             )
             cols.append(c.asc() if direction == "asc" else c.desc())
         df = df.orderBy(*cols)
+    if offset is not None:
+        df = df.offset(offset)
     if limit is not None:
         df = df.limit(int(limit))
     return df

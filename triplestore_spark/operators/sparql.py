@@ -61,7 +61,10 @@ Supported grammar (case-insensitive keywords)::
     triples  := s p o [, o ...] [; p o ...] .  with property paths
                 in the predicate position: p1/p2, ^p, p1|p2, p*, p+,
                 p?, p{m,n}, !(p1|p2), (p1|p2)*, (p1/p2)* (closure
-                over the composed sequence relation), a  (rdf:type)
+                over the composed sequence relation), a  (rdf:type);
+                a path compiles straight to the engine's parsed
+                steps (bgp._Step / bgp._SeqGroup), never to its
+                string syntax, so an IRI's own '/' is never a hop
     constraint := operand op operand where an operand is ?v,
                 xsd:T(?v), or a literal (at least one a variable);
                 op in < <= > >= = != ; regex(?v, "re").
@@ -111,7 +114,13 @@ from typing import Sequence
 
 from triplestore_spark import schema as S
 from triplestore_spark.dsl import Obj
-from triplestore_spark.operators.bgp import PathExpr
+from triplestore_spark.operators.bgp import (
+    PathExpr,
+    _invert_parsed_step,
+    _is_path_pred,
+    _SeqGroup,
+    _Step,
+)
 
 __all__ = [
     "SparqlParseError",
@@ -1378,14 +1387,12 @@ class _Parser:
         if k == "VAR":
             self.next()
             return "?" + v[1:]
-        ast = self._parse_path_alt()
-        steps = _compile_path(ast, self.error)
-        if (
-            len(steps) == 1
-            and re.fullmatch(r"[^\s!^|*+{]+", steps[0])
-            and ("/" not in steps[0] or "://" in steps[0])
-        ):
-            return steps[0]  # plain predicate: best-layout routing
+        steps = _compile_path(self._parse_path_alt(), self.error)
+        alts, lo, hi = steps[0]
+        if len(steps) == 1 and len(alts) == 1 and (lo, hi) == (1, 1):
+            p = alts[0]
+            if isinstance(p, str) and not _is_path_pred(p):
+                return p  # plain predicate: best-layout routing
         return PathExpr(steps)
 
     def _parse_path_alt(self):
@@ -1471,60 +1478,22 @@ class _Parser:
         return None
 
 
-# The engine quantifier suffix a compiled step may already carry.
-_STEP_QUANT_RE = re.compile(r"(?:\*|\+|\{\d+(?:,\d*)?\})$")
-
-
-def _quant_suffix(lo: int, hi: int | None) -> str:
-    if (lo, hi) == (0, None):
-        return "*"
-    if (lo, hi) == (1, None):
-        return "+"
-    if hi is None:
-        return f"{{{lo},}}"
-    if hi == lo:
-        return f"{{{lo}}}"
-    return f"{{{lo},{hi}}}"
-
-
-def _invert_step(step: str, err) -> str:
-    """^(step) for one compiled engine step: invert every alternative,
-    keep the quantifier — inverse distributes over closure and
-    alternation ( ^(p*) == (^p)* , ^(p|q) == ^p|^q ); a sequence
-    group reverses its hops and inverts each ( ^((a/b)*) ==
-    (^b/^a)* )."""
-    m = _STEP_QUANT_RE.search(step)
-    base, quant = (step[: m.start()], m.group()) if m else (step, "")
-    if base.startswith("(") and base.endswith(")"):
-        inner = base[1:-1].split("/")
-        rev = "/".join(_invert_step(s, err) for s in reversed(inner))
-        return "(" + rev + ")" + quant
-    alts = []
-    for a in base.split("|"):
-        if a.startswith("!"):
-            raise err(
-                "inverse of a negated property set is not supported"
-            )
-        alts.append(a[1:] if a.startswith("^") else "^" + a)
-    return "|".join(alts) + quant
-
-
-def _compile_path(node, err) -> list[str]:
-    """Path AST -> the engine's step list (property_path syntax):
-    each step is an alternation of (possibly inverse / negated)
-    predicates with one shared trailing quantifier. Shapes that don't
-    factor this way — closure over a multi-step sequence, alternation
-    of sequences, mixed negated/plain alternation — raise with the
-    construct named rather than approximating."""
+def _compile_path(node, err) -> list[_Step]:
+    """Path AST -> the engine's parsed steps (bgp._Step): each step is
+    an alternation of (possibly inverse / negated) predicates or
+    sequence groups with one shared quantifier. Shapes that don't
+    factor this way — nested quantifiers, alternation branches with
+    their own quantifier, mixed negated/plain alternation — raise
+    with the construct named rather than approximating."""
     kind = node[0]
     if kind == "iri":
-        return [node[1]]
+        return [_Step((node[1],))]
     if kind == "neg":
-        return ["!" + "|".join(node[1])]
+        return [_Step(tuple("!" + p for p in node[1]))]
     if kind == "seq":
         return [s for elt in node[1] for s in _compile_path(elt, err)]
     if kind == "alt":
-        parts: list[str] = []
+        parts: list = []
         for b in node[1]:
             ss = _compile_path(b, err)
             if len(ss) != 1:
@@ -1533,49 +1502,50 @@ def _compile_path(node, err) -> list[str]:
                 # where the closure's edge set unions the composed
                 # relation with the plain hops; the engine refuses
                 # the unquantified form by name
-                for s in ss:
-                    if _STEP_QUANT_RE.search(s) or s.startswith("("):
-                        raise err(
-                            "nested quantifiers/groups inside an "
-                            "alternation branch are not supported"
-                        )
-                parts.append("(" + "/".join(ss) + ")")
+                if any(s[1:] != (1, 1) for s in ss):
+                    raise err(
+                        "nested quantifiers/groups inside an "
+                        "alternation branch are not supported"
+                    )
+                parts.append(_SeqGroup(tuple(ss)))
                 continue
-            if _STEP_QUANT_RE.search(ss[0]):
+            if ss[0][1:] != (1, 1):
                 raise err(
                     "alternation branches with their own quantifiers "
                     "(p*|q) are not supported — quantify the whole "
                     "group: (p|q)*"
                 )
-            parts.extend(ss[0].split("|"))
-        neg = [p.startswith("!") for p in parts]
-        if any(neg):
+            parts.extend(ss[0].alts)
+        if any(isinstance(p, str) and p.startswith("!") for p in parts):
             raise err(
                 "alternation mixing negated property sets with plain "
                 "predicates is not supported"
             )
-        return ["|".join(parts)]
+        return [_Step(tuple(parts))]
     if kind == "inv":
         ss = _compile_path(node[1], err)
-        return [_invert_step(s, err) for s in reversed(ss)]
+        try:
+            return [_invert_parsed_step(s) for s in reversed(ss)]
+        except ValueError:
+            raise err(
+                "inverse of a negated property set is not supported"
+            ) from None
     if kind == "quant":
         _, child, lo, hi = node
         ss = _compile_path(child, err)
         if len(ss) != 1:
             # closure over a SEQUENCE: the engine composes the inner
-            # hops into one edge relation and walks that — emit its
-            # group syntax '(p/q)*'
-            for s in ss:
-                if _STEP_QUANT_RE.search(s) or s.startswith("("):
-                    raise err(
-                        "nested path quantifiers inside a quantified "
-                        "group are not supported (the group closes "
-                        "over a fixed-length sequence)"
-                    )
-            return ["(" + "/".join(ss) + ")" + _quant_suffix(lo, hi)]
-        if _STEP_QUANT_RE.search(ss[0]):
+            # hops into one edge relation and walks that
+            if any(s[1:] != (1, 1) for s in ss):
+                raise err(
+                    "nested path quantifiers inside a quantified "
+                    "group are not supported (the group closes "
+                    "over a fixed-length sequence)"
+                )
+            return [_Step((_SeqGroup(tuple(ss)),), lo, hi)]
+        if ss[0][1:] != (1, 1):
             raise err("nested path quantifiers are not supported")
-        return [ss[0] + _quant_suffix(lo, hi)]
+        return [_Step(ss[0].alts, lo, hi)]
     raise err(f"internal: unknown path node {kind!r}")
 
 
@@ -1769,35 +1739,6 @@ def _subquery_df(graph, sq: dict):
     return df
 
 
-def _apply_order_limit(df, order_by, limit, offset=None):
-    from pyspark.sql import functions as F
-
-    from triplestore_spark.operators.bgp_agg import (
-        _norm_order,
-        _typed_binding,
-    )
-
-    if order_by:
-        cols = []
-        for o in order_by:
-            name, direction, typ = _norm_order(o)
-            missing = name not in df.columns
-            if missing:
-                raise SparqlParseError(
-                    f"sparql: ORDER BY variable ?{name} is not bound "
-                    "by the query"
-                )
-            c = _typed_binding(name, typ) if typ else F.col(name)
-            cols.append(c.asc() if direction == "asc" else c.desc())
-        df = df.orderBy(*cols)
-    if offset is not None:
-        # the parser guarantees an ORDER BY accompanies any OFFSET
-        df = df.offset(offset)
-    if limit is not None:
-        df = df.limit(limit)
-    return df
-
-
 def _ask_group(graph, g: dict) -> bool:
     """One ASK arm. A group whose patterns are ALL constant is the
     reference's Contains check (source.go's point lookup) — bgp_match
@@ -1917,7 +1858,11 @@ def _select_df(graph, q: dict):
     DataFrame. Subqueries recurse through here via _match_kwargs, so
     nesting depth is bounded only by the parser's input."""
     from triplestore_spark.operators.bgp import bgp_match
-    from triplestore_spark.operators.bgp_agg import bgp_select, bgp_union
+    from triplestore_spark.operators.bgp_agg import (
+        _modify_df,
+        bgp_select,
+        bgp_union,
+    )
 
     where = q["where"]
     arms = where.get("union")
@@ -1948,63 +1893,11 @@ def _select_df(graph, q: dict):
         union_arms = [
             {"patterns": g["patterns"], **_match_kwargs(g)} for g in arms
         ]
-        if aggregates or group_by:
-            # aggregation over the unioned solution MULTISET (bag
-            # union per SPARQL); mirrors the single-group branch below
-            plain = [
-                v for v in (q["projection"] or []) if v not in aggregates
-            ]
-            stray = [v for v in plain if v not in group_by]
-            if stray:
-                raise SparqlParseError(
-                    f"sparql: projected variables {stray} must appear "
-                    "in GROUP BY (or inside an aggregate)"
-                )
-            late_mods = (
-                bool(q["distinct"] and (q["order_by"] or q["limit"]))
-                or q["offset"] is not None
-            )
-            df = bgp_union(
-                graph,
-                union_arms,
-                group_by=["?" + v for v in group_by],
-                aggregates=aggregates,
-                having=q["having"] or None,
-                order_by=None if late_mods else (q["order_by"] or None),
-                limit=None if late_mods else q["limit"],
-            )
-            proj = q["projection"]
-            if proj:
-                missing = [v for v in proj if v not in df.columns]
-                if missing:
-                    raise SparqlParseError(
-                        f"sparql: projected names {missing} are not "
-                        "produced by GROUP BY / aggregates"
-                    )
-                df = df.select(*proj)
-            if q["distinct"]:
-                df = df.distinct()
-            if late_mods:
-                df = _apply_order_limit(
-                    df, q["order_by"], q["limit"], q["offset"]
-                )
-            return df
-        df = bgp_union(graph, union_arms, distinct=q["distinct"])
-        proj = q["projection"]
-        if proj:
-            missing = [v for v in proj if v not in df.columns]
-            if missing:
-                raise SparqlParseError(
-                    f"sparql: projected variables {missing} are not "
-                    "bound by any UNION arm"
-                )
-            df = df.select(*proj)
-            if q["distinct"]:
-                df = df.distinct()
-        return _apply_order_limit(df, q["order_by"], q["limit"], q["offset"])
-
-    kw = _match_kwargs(where, graph)
+    else:
+        kw = _match_kwargs(where, graph)
     if aggregates or group_by:
+        # aggregation over one group, or over the unioned solution
+        # MULTISET (bag union per SPARQL)
         plain = [
             v for v in (q["projection"] or []) if v not in aggregates
         ]
@@ -2016,21 +1909,22 @@ def _select_df(graph, q: dict):
             )
         # DISTINCT over aggregates dedupes the PROJECTED rows, so the
         # modifiers must run after the projection+distinct, not inside
-        # bgp_select (ordering before a .distinct() would be undone)
+        # the aggregation (ordering before a .distinct() is undone)
         late_mods = (
             bool(q["distinct"] and (q["order_by"] or q["limit"]))
             or q["offset"] is not None
         )
-        df = bgp_select(
-            graph,
-            where["patterns"],
+        agg = dict(
             group_by=["?" + v for v in group_by],
             aggregates=aggregates,
             having=q["having"] or None,
             order_by=None if late_mods else (q["order_by"] or None),
             limit=None if late_mods else q["limit"],
-            **kw,
         )
+        if arms:
+            df = bgp_union(graph, union_arms, **agg)
+        else:
+            df = bgp_select(graph, where["patterns"], **agg, **kw)
         proj = q["projection"]
         if proj:
             missing = [v for v in proj if v not in df.columns]
@@ -2043,8 +1937,23 @@ def _select_df(graph, q: dict):
         if q["distinct"]:
             df = df.distinct()
         if late_mods:
-            df = _apply_order_limit(df, q["order_by"], q["limit"], q["offset"])
+            df = _modify_df(df, q["order_by"], q["limit"], q["offset"])
         return df
+
+    if arms:
+        df = bgp_union(graph, union_arms, distinct=q["distinct"])
+        proj = q["projection"]
+        if proj:
+            missing = [v for v in proj if v not in df.columns]
+            if missing:
+                raise SparqlParseError(
+                    f"sparql: projected variables {missing} are not "
+                    "bound by any UNION arm"
+                )
+            df = df.select(*proj)
+            if q["distinct"]:
+                df = df.distinct()
+        return _modify_df(df, q["order_by"], q["limit"], q["offset"])
 
     if q["having"]:
         raise SparqlParseError("sparql: HAVING requires aggregates")
@@ -2061,8 +1970,8 @@ def _select_df(graph, q: dict):
         if proj:
             df = df.select(*proj)
         df = df.distinct()
-        return _apply_order_limit(df, q["order_by"], q["limit"], q["offset"])
-    df = _apply_order_limit(df, q["order_by"], None, q["offset"])
+        return _modify_df(df, q["order_by"], q["limit"], q["offset"])
+    df = _modify_df(df, q["order_by"], None, q["offset"])
     if proj:
         df = df.select(*proj)
     if q["limit"] is not None:

@@ -175,7 +175,10 @@ class _FileWindow:
             self._start, self._buf, have_end = off, b"", off
         while have_end < off + n:
             self._f.seek(have_end)
-            data = self._f.read(max(self._chunk, off + n - have_end))
+            # never past flen: _scan_records checks a word against the
+            # file end only when the word runs past the buffer
+            want = max(self._chunk, off + n - have_end)
+            data = self._f.read(min(want, self._flen - have_end))
             if not data:
                 raise BinaryDecodeError("unexpected EOF")
             self._buf += data
@@ -220,49 +223,61 @@ def _scan_records(
     every word across the chain. `max_word=None` means uncapped (parse
     mode — the wire format allows words up to 4 GiB).
 
-    Reads index the window's buffer directly and ask the window for
-    more only when the buffer runs out; a blob window's buffer is the
-    whole blob, so a whole-blob parse never calls back. One generator
-    per run of records, not one call per record: the per-record
-    closure setup doubled the whole-blob decode time."""
-    buf, base, end = b"", off, off
-    pos = off
+    Reads index the window's buffer directly, in buffer-relative
+    positions, and ask the window for more only when the buffer runs
+    out; a blob window's buffer is the whole blob, so a whole-blob
+    parse never calls back. A word inside the buffer costs two bound
+    checks (its length prefix, its body) and the `max_word` cap; the
+    end-of-file check runs only when the buffer runs out, since the
+    buffer itself never extends past the file. One generator per run
+    of records, not one call per record: the per-record closure setup
+    doubled the whole-blob decode time."""
+    buf, base = b"", off  # buf holds the bytes from absolute `base` on
+    i = n = lim = 0  # parse position, len(buf), `stop`, all in buf
     if max_word is None:
         max_word = flen
+    unpack = _U32.unpack_from
+
+    def fill(k: int) -> None:
+        # make buf hold at least k bytes from the parse position on
+        nonlocal buf, base, i, n, lim
+        pos = base + i
+        buf, base = w.buffer(pos, k)
+        i, n, lim = pos - base, len(buf), stop - base
 
     def word() -> str:
-        nonlocal pos, buf, base, end
-        if pos + 4 > end:
-            buf, base = w.buffer(pos, 4)
-            end = base + len(buf)
-        (ln,) = _U32.unpack_from(buf, pos - base)
-        pos += 4
-        if ln > flen - pos or ln > max_word:
-            raise BinaryDecodeError(f"cannot decode word of length {ln}")
-        if pos + ln > end:
-            buf, base = w.buffer(pos, ln)
-            end = base + len(buf)
-        i = pos - base
+        nonlocal i
+        j = i + 4
+        if j > n:
+            fill(4)
+            j = i + 4
+        (ln,) = unpack(buf, i)
+        k = j + ln
+        if k > n or ln > max_word:
+            if ln > max_word or ln > flen - (base + j):
+                raise BinaryDecodeError(f"cannot decode word of length {ln}")
+            i = j
+            fill(ln)
+            j, k = i, i + ln
         try:
-            s = buf[i : i + ln].decode("utf-8")
+            s = buf[j:k].decode("utf-8")
         except UnicodeDecodeError as e:
             raise BinaryDecodeError(str(e)) from e
-        pos += ln
+        i = k
         return s
 
-    while pos < stop:
-        if pos >= end:
-            buf, base = w.buffer(pos, 1)
-            end = base + len(buf)
-        is_bnode = buf[pos - base] != 0
-        pos += 1
+    fill(0)
+    while i < lim:
+        if i >= n:
+            fill(1)
+        is_bnode = buf[i] != 0
+        i += 1
         sub = word()
         pred = word()
-        if pos >= end:
-            buf, base = w.buffer(pos, 1)
-            end = base + len(buf)
-        tag = buf[pos - base]
-        pos += 1
+        if i >= n:
+            fill(1)
+        tag = buf[i]
+        i += 1
         if tag == RESOURCE_TAG:
             row = (sub, is_bnode, pred, S.KIND_RESOURCE, word(), "", "")
         elif tag == BNODE_TAG:
@@ -281,7 +296,7 @@ def _scan_records(
             row = (sub, is_bnode, pred, S.KIND_LITERAL, val, typ, "")
         else:
             raise BinaryDecodeError(f"unknown object tag {tag}")
-        yield row, pos
+        yield row, base + i
 
 
 def _find_boundary(
