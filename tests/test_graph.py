@@ -212,6 +212,122 @@ def test_materialized_lookups_read_only_their_layout(
     assert read and all("/spo/" in f for f in read), read
 
 
+def test_materialized_operators_read_only_their_layout(
+    spark, tmp_path, monkeypatch
+):
+    """Routing pin for the operators: every predicate-scoped read (the
+    edge view, Tree.edges, encode_dot's edge and rdf:type scans, the
+    RDFS schema and type scans, the property-graph labels, a
+    predicate-restricted text index) reads only POS files of a
+    MaterializedGraph; describe reads SPO (subject side) and OSP
+    (object side); and each returns what the in-memory graph of the
+    same triples returns."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from triplestore_spark import schema as S
+    from triplestore_spark.dsl import bnode, triples_to_df
+    from triplestore_spark.operators.dot import encode_dot
+    from triplestore_spark.operators.graph_algos import edge_view
+    from triplestore_spark.operators.infer import rdfs_expand_types
+    from triplestore_spark.operators.materialize import (
+        MaterializedGraph,
+        materialize_graph,
+    )
+    from triplestore_spark.operators.property_graph import to_property_graph
+    from triplestore_spark.operators.text_search import graph_text_index
+    from triplestore_spark.operators.tree import Tree
+
+    df = triples_to_df(
+        spark,
+        [
+            subj_pred("a", "kg:link").resource("b"),
+            subj_pred("b", "kg:link").resource("c"),
+            subj_pred("a", "kg:link").string_literal("not a node"),
+            subj_pred("c", "kg:link").bnode("a"),
+            subj_pred("a", "rdf:type").resource("kg:Sub"),
+            subj_pred("c", "rdf:type").resource("kg:Cls"),
+            subj_pred("kg:Sub", "rdfs:subClassOf").resource("kg:Cls"),
+            subj_pred("a", "rdfs:label").string_literal("alpha beta"),
+            subj_pred("b", "rdfs:label").string_literal("beta gamma"),
+            subj_pred("b", "kg:note").string_literal("alpha"),
+            subj_pred("d", "kg:ref").resource("a"),
+        ],
+    )
+    path = str(tmp_path / "graph")
+    materialize_graph(df, path, num_partitions=2)
+    mg = MaterializedGraph(spark, path)
+    mem = RDFGraph(df, cache=False)
+
+    def layouts(frame):
+        files = frame.inputFiles()
+        assert files
+        return {f.rstrip("/").split("/")[-2] for f in files}
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    for name, read in [
+        ("edge_view", lambda g: edge_view(g, "kg:link")),
+        ("Tree.edges", lambda g: Tree(g, "kg:link").edges()),
+    ]:
+        assert layouts(read(mg)) == {"pos"}, name
+        assert rows(read(mg)) == rows(read(mem)) == [("a", "b"), ("b", "c")]
+
+    # the label scan is the one predicate-scoped read of the property
+    # graph; its other reads (edges, props, subjects) scan SPO
+    verts = to_property_graph(mg)[0]
+    assert layouts(verts) == {"spo", "pos"}
+    labelled = "size(labels) > 0"
+    assert rows(verts.where(labelled)) == rows(
+        to_property_graph(mem)[0].where(labelled)
+    )
+
+    # collected frames (DOT's scans, the RDFS schema): spy on what
+    # they read
+    collect = DataFrame.collect
+
+    def reading_collects(run):
+        seen = []
+
+        def spy(frame):
+            seen.append(layouts(frame))
+            return collect(frame)
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "collect", spy)
+            return run(), seen
+
+    dot, seen = reading_collects(lambda: encode_dot(mg, "kg:link"))
+    assert seen and all(r == {"pos"} for r in seen)
+    assert dot == encode_dot(mem, "kg:link") and '"a" -> "b";' in dot
+
+    inferred, seen = reading_collects(lambda: rdfs_expand_types(mg))
+    assert seen == [{"pos"}]  # the subClassOf schema scan
+    # asserted triples read SPO, the rdf:type scan POS
+    assert layouts(inferred) == {"spo", "pos"}
+    fields = S.TRIPLE_FIELDS
+    assert rows(inferred.select(*fields)) == rows(
+        rdfs_expand_types(mem).select(*fields)
+    )
+    assert ("a", False, "rdf:type", "res", "kg:Cls", "", "") in rows(
+        inferred.select(*fields)
+    )
+
+    idx = graph_text_index(mg, predicates=["rdfs:label"])
+    assert layouts(idx.postings) == {"pos"}
+    assert rows(idx.postings) == rows(
+        graph_text_index(mem, predicates=["rdfs:label"]).postings
+    )
+
+    for node in ("a", bnode("a")):
+        got = mg.describe(node)
+        assert layouts(got) == {"spo", "osp"}
+        got_rows = rows(got.select(*fields))
+        assert got_rows and got_rows == rows(mem.describe(node).select(*fields))
+    # the IRI a and the bnode a stay apart
+    assert rows(mg.describe(bnode("a")).select("subject")) == [("c",)]
+
+
 def test_materialized_snapshot_at_file_uri(spark, tmp_path, snap, monkeypatch):
     """A snapshot rooted at a file:// URI keeps its manifest next to its
     layouts (not under the driver's working directory), reopens from

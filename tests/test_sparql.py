@@ -1359,3 +1359,45 @@ def test_bind_strbefore_strafter(g):
         ("<doc:2>", '"doc"^^<>', '"2"^^<>', '""^^<>'),
         ("<doc:3>", '"doc"^^<>', '"3"^^<>', '""^^<>'),
     ]
+
+
+def test_describe_names_nodes_like_the_lookups(
+    spark, uncheckpointed_persisted
+):
+    """DESCRIBE <x> describes the IRI x only: not a bnode subject _:x,
+    not a bnode object _:x (DESCRIBE ?v already kept them apart); over
+    a plain triple DataFrame it leaves nothing cached."""
+    tw = [
+        ("x", False, "kg:note", "lit", "iri", "xsd:string", ""),
+        ("x", True, "kg:note", "lit", "bnode", "xsd:string", ""),
+        ("d", False, "kg:ref", "bnode", "x", "", ""),
+    ]
+    df = spark.createDataFrame(tw, S.TRIPLE_SCHEMA)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
+    cols = ["subject", "subject_is_bnode", "predicate", "object_value"]
+    got = rows(sparql_query(df, "DESCRIBE <x>").select(*cols))
+    assert uncheckpointed_persisted() == []
+    if was_empty:
+        assert cache.isEmpty()
+    assert got == [("x", False, "kg:note", "iri")]
+    # a bnode is named the way the lookups name it
+    got_b = RDFGraph(df, cache=False).describe(Obj(S.KIND_BNODE, "x"))
+    assert rows(got_b.select(*cols)) == [
+        ("d", False, "kg:ref", "x"),
+        ("x", True, "kg:note", "bnode"),
+    ]
+
+
+def test_hop_scans_keep_a_slash_iri_whole(spark):
+    """A predicate IRI holding '/' (urn:x/y) is one hop in every path
+    form: the hop scans read it as one IRI, never as a path again."""
+    tw = [("n1", False, "urn:x/y", "res", "n2", "", "")]
+    g = RDFGraph(spark.createDataFrame(tw, S.TRIPLE_SCHEMA), cache=False)
+    for text, want in [
+        ("SELECT ?o WHERE { <n1> <urn:x/y> ?o }", [("<n2>",)]),
+        ("SELECT ?o WHERE { <n1> (<urn:x/y>|<urn:q>) ?o }", [("<n2>",)]),
+        ("SELECT ?s WHERE { <n2> ^<urn:x/y> ?s }", [("<n1>",)]),
+        ("SELECT ?o WHERE { <n1> <urn:x/y>+ ?o }", [("<n2>",)]),
+    ]:
+        assert rows(sparql_query(g, text)) == want, text

@@ -45,8 +45,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark.dsl import Obj
-from triplestore_spark.functions.keys import okey_expr, subject_key_expr
-from triplestore_spark.operators.graph import RDFGraph, route, term_filter
+from triplestore_spark.functions.keys import subject_key_expr
+from triplestore_spark.operators.graph import (
+    RDFGraph,
+    as_graph,
+    route,
+    term_filter,
+)
 from triplestore_spark.schema import KIND_RESOURCE
 from triplestore_spark.session import checkpoint_level, local_frame
 
@@ -135,11 +140,6 @@ def _as_obj(t: Term) -> Obj:
     """A bare string in object position is an IRI constant — the same
     convenience the Tree edge view applies (resource objects)."""
     return t if isinstance(t, Obj) else Obj(KIND_RESOURCE, t)
-
-
-def _object_key(df: DataFrame) -> Column:
-    # reuse the stored identity column when the graph already carries it
-    return F.col("okey") if "okey" in df.columns else okey_expr()
 
 
 def strip_node_key(col: Column | str) -> Column:
@@ -273,23 +273,24 @@ def bgp_construct(
 
 
 def _pattern_scan(
-    src: RDFGraph | DataFrame, pat: Pattern
+    graph: RDFGraph, pat: Pattern
 ) -> tuple[DataFrame, list[str]]:
     """One pattern -> (bindings DataFrame, variable names).
 
-    Over an RDFGraph the scan reads the layout `route` picks for the
-    pattern's constant positions (the WithX index routing, so every
-    constant lands on the sort prefix of a materialized copy); a plain
-    DataFrame is scanned as is. Constants become the same component
-    filters the WithX lookups use (`term_filter`); variables project
-    node-key columns. A variable repeated inside one pattern adds the
-    implied equality filter.
+    The scan reads the layout `route` picks for the pattern's constant
+    positions (the WithX index routing, so every constant lands on the
+    sort prefix of a materialized copy). Constants become the same
+    component filters the WithX lookups use (`term_filter`); variables
+    project node-key columns. A variable repeated inside one pattern
+    adds the implied equality filter. The predicate is always one IRI
+    here, never re-read as a path: path hops scan through this
+    directly.
     """
     s, p, o = pat
     cs, cp, co = (None if _is_var(t) else t for t in pat)
     if co is not None:
         co = _as_obj(co)
-    df = src.layout(route(cs, cp, co)) if isinstance(src, RDFGraph) else src
+    df = graph.layout(route(cs, cp, co))
     cond = term_filter(cs, cp, co)
     bindings: dict[str, Column] = {}
     if _is_var(s):
@@ -303,7 +304,7 @@ def _pattern_scan(
             bindings[v] = key
     if _is_var(o):
         v = _var(o)
-        key = _object_key(df)
+        key = F.col("okey")
         if v in bindings:
             cond = cond & (bindings[v] == key)
         else:
@@ -846,7 +847,7 @@ def bgp_match(
     pattern), so every constant lands on parquet min/max stats of a
     copy sorted for it.
     """
-    df = graph.df if isinstance(graph, RDFGraph) else graph
+    graph = as_graph(graph)
     if isinstance(patterns, str):
         patterns = parse_bgp(patterns)
     if optional is not None:
@@ -1389,7 +1390,7 @@ def _negated_hop_frame(graph, excluded: Sequence[str], src_t, dst_t):
     """One forward hop over the COMPLEMENT of a predicate set: a
     predicate-variable scan minus the excluded keys (isin is a single
     codegen'd filter; at scale the exclusion list is config-sized)."""
-    scan = bgp_match(graph, [(src_t, "?__np", dst_t)], distinct=False)
+    scan = _pattern_scan(graph, (src_t, "?__np", dst_t))[0]
     keys = [f"<{p}>" for p in excluded]
     out = scan.where(~F.col("__np").isin(keys))
     if len(out.columns) == 1:  # both endpoints pinned: witness rows
@@ -1428,7 +1429,7 @@ def _closure_edges(graph, alts: Sequence) -> DataFrame:
             pat: Pattern = ("?__cd", a[1:], "?__cs")
         else:
             pat = ("?__cs", a, "?__cd")
-        frames.append(bgp_match(graph, [pat], distinct=False))
+        frames.append(_pattern_scan(graph, pat)[0])
     edges = None
     if frames:
         edges = frames[0]
@@ -1617,6 +1618,7 @@ def property_path(
     """
     if not path:
         raise ValueError("property_path: empty path")
+    graph = as_graph(graph)
     steps = _parse_path_steps(path)
     swapped = False
     if start is None and steps[0][1:] != (1, 1):
@@ -1713,10 +1715,12 @@ def property_path(
                         f"({'inverse ' if a.startswith('^') else ''}"
                         f"'{a}') — only IRIs can occupy subject position"
                     )
-                frames.append(bgp_match(graph, [pat], distinct=False))
+                frames.append(_pattern_scan(graph, pat)[0])
             step_df = frames[0]
             for f in frames[1:]:
                 step_df = step_df.unionByName(f)
+            if not step_df.columns:  # both endpoints pinned: witness rows
+                step_df = step_df.select(F.lit(1).alias("_w"))
         if cur is None:
             cur, bound = step_df, set(step_df.columns)
         else:

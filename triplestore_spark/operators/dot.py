@@ -18,25 +18,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from triplestore_spark.operators.graph import RDFGraph
-from triplestore_spark.schema import KIND_RESOURCE
+from triplestore_spark.operators.graph import RDFGraph, edge_view
 
 
 def encode_dot(graph: RDFGraph, predicate: str) -> str:
-    edges_df = (
-        graph.with_predicate(predicate)
-        .where(F.col("object_kind") == KIND_RESOURCE)
-        .select(
-            F.col("subject").alias("src"), F.col("object_value").alias("dst")
-        )
-    )
-    types_df = (
-        graph.with_predicate("rdf:type")
-        .where(F.col("object_kind") == KIND_RESOURCE)
-        .select(
-            F.col("subject").alias("node"),
-            F.col("object_value").alias("typ"),
-        )
+    edges_df = edge_view(graph, predicate)
+    types_df = edge_view(graph, "rdf:type").select(
+        F.col("src").alias("node"), F.col("dst").alias("typ")
     )
     nodes = (
         edges_df.select(F.col("src").alias("node"))

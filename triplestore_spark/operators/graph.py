@@ -14,7 +14,12 @@ Spark realization:
   the layout `route` picks for the bound positions: SPO, POS or OSP.
   An in-memory graph serves every layout from its one frame; a
   MaterializedGraph (operators/materialize.py) reads the copy sorted
-  for it. bgp_match and SHACL route their scans the same way.
+  for it.
+- Every operator reads the graph through that routing: its public
+  entry turns a triple DataFrame into an RDFGraph once (`as_graph`),
+  and each scan after that is `layout(route(s, p, o))` / `_match`.
+  "(src, dst) resource edges of one predicate" is `edge_view`, and
+  DESCRIBE is `RDFGraph.describe` over (name, is_bnode) nodes.
   Multi-column equality also fixes the reference's unseparated-concat
   index ambiguity (source.go:148-155 concatenates sub+pred without a
   separator, so "ab"+"c" == "a"+"bc").
@@ -112,14 +117,9 @@ def dedup_triples(df: DataFrame) -> DataFrame:
     deterministic concat of the components; multi-column equality
     also avoids the reference's unseparated-concat ambiguity).
     Hash partial+final aggregation; AQE handles skewed keys."""
-    out = with_keys(
+    return with_keys(
         df.select(*S.TRIPLE_FIELDS).dropDuplicates(S.TRIPLE_FIELDS)
     )
-    # marker consumed by materialize_graph: this exact DataFrame object
-    # is already canonical, so re-deduplicating it there would add a
-    # second full exchange+aggregate for nothing
-    out._ts_canonical = True
-    return out
 
 
 class RDFGraph:
@@ -253,18 +253,40 @@ class RDFGraph:
             F.col("id").alias("subject"), "score", "rank"
         )
 
-    def describe(self, node: str) -> DataFrame:
-        """Every triple touching `node` (as subject, or as resource /
-        bnode object) — the exploration helper SPARQL calls DESCRIBE.
-        One pass, two component filters OR'd (both prune on a
-        materialized layout's stats)."""
-        return self._df.where(
-            (F.col("subject") == node)
-            | (
-                F.col("object_kind").isin(S.KIND_RESOURCE, S.KIND_BNODE)
-                & (F.col("object_value") == node)
+    def describe(self, nodes) -> DataFrame:
+        """Every triple touching a node, as subject or as resource /
+        bnode object — SPARQL's DESCRIBE. `nodes` is one node, named
+        the way the lookups name it (an IRI string or a `dsl.bnode`
+        Obj), or a DataFrame of (name string, is_bnode boolean) rows.
+        A node is its (name, is_bnode) pair, so an IRI <x> and a bnode
+        _:x never meet. The subject side semi-joins the SPO layout,
+        the object side the OSP layout; a triple on both sides (a
+        self-loop) appears once."""
+        if isinstance(nodes, str):
+            nodes = Obj(S.KIND_RESOURCE, nodes)
+        if isinstance(nodes, Obj):
+            nodes = local_frame(
+                self._df.sparkSession,
+                [(nodes.value, nodes.kind == S.KIND_BNODE)],
+                "name string, is_bnode boolean",
             )
+        spo, osp = self.layout("spo"), self.layout("osp")
+        as_subj = spo.join(
+            nodes,
+            (spo["subject"] == nodes["name"])
+            & (spo["subject_is_bnode"] == nodes["is_bnode"]),
+            "left_semi",
         )
+        objs = osp.where(
+            F.col("object_kind").isin(S.KIND_RESOURCE, S.KIND_BNODE)
+        )
+        as_obj = objs.join(
+            nodes,
+            (objs["object_value"] == nodes["name"])
+            & ((objs["object_kind"] == S.KIND_BNODE) == nodes["is_bnode"]),
+            "left_semi",
+        )
+        return as_subj.unionByName(as_obj).distinct()
 
     def merge_equivalents(
         self, sameas_pred: str = "owl:sameAs", **kwargs
@@ -341,6 +363,30 @@ class RDFGraph:
         return self._df.join(
             other._df.select("tkey"), on="tkey", how="left_semi"
         )
+
+
+def as_graph(graph: "RDFGraph | DataFrame") -> RDFGraph:
+    """The one normalizer of operator inputs: an RDFGraph as is, a
+    triple DataFrame as an uncached in-memory RDFGraph (keys derived
+    when missing), so every read after it routes through `layout`."""
+    if isinstance(graph, RDFGraph):
+        return graph
+    return RDFGraph(graph, cache=False)
+
+
+def edge_view(graph: "RDFGraph | DataFrame", predicate: str) -> DataFrame:
+    """(src, dst) resource-to-resource edges of one predicate
+    (reference tree.go:37-46): the predicate-routed scan with literal
+    and bnode objects dropped. Tree, DOT, the graph algorithms and the
+    property-graph labels all read edges through here."""
+    return (
+        as_graph(graph)
+        ._match(p=predicate)
+        .where(F.col("object_kind") == S.KIND_RESOURCE)
+        .select(
+            F.col("subject").alias("src"), F.col("object_value").alias("dst")
+        )
+    )
 
 
 class TripleSource:

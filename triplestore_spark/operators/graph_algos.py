@@ -16,7 +16,8 @@ Scale shapes (the part that matters at 100 TB):
   keyed by node alone.
 
 Both take the same (src, dst) edge frame `edge_view` builds from a
-predicate (resource objects only, like Tree.edges — tree.go:37-46).
+predicate (operators/graph.edge_view, re-exported here: resource
+objects only, the frame Tree.edges reads — tree.go:37-46).
 Weakly connected components of an edge view are
 dedup.connected_components_star over its (src, dst) pairs.
 Differential evidence: tests/test_graph_algos.py checks triangles
@@ -30,8 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark.operators.bgp import _reach
-from triplestore_spark.operators.graph import RDFGraph
-from triplestore_spark.schema import KIND_RESOURCE
+from triplestore_spark.operators.graph import edge_view
 from triplestore_spark.session import local_frame
 
 __all__ = [
@@ -39,19 +39,6 @@ __all__ = [
     "triangle_count",
     "bfs_distances",
 ]
-
-
-def edge_view(graph: RDFGraph | DataFrame, predicate: str) -> DataFrame:
-    """(src, dst) resource-to-resource edges of one predicate."""
-    df = graph.df if isinstance(graph, RDFGraph) else graph
-    return (
-        df.where(
-            (F.col("predicate") == predicate)
-            & (F.col("object_kind") == KIND_RESOURCE)
-        )
-        .select(F.col("subject").alias("src"),
-                F.col("object_value").alias("dst"))
-    )
 
 
 def _canonical_undirected(edges: DataFrame) -> DataFrame:

@@ -35,7 +35,7 @@ from collections import deque
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from triplestore_spark.operators.graph import RDFGraph, dedup_triples
+from triplestore_spark.operators.graph import RDFGraph, as_graph, dedup_triples
 from triplestore_spark.schema import KIND_RESOURCE
 from triplestore_spark.session import local_frame
 
@@ -93,12 +93,12 @@ def _schema_closure(
 
 
 def _collect_schema(
-    df: DataFrame, pred: str, max_edges: int
+    g: RDFGraph, pred: str, max_edges: int
 ) -> list[tuple[str, str]]:
     rows = (
-        df.where(
-            (F.col("predicate") == pred)
-            & (F.col("object_kind") == KIND_RESOURCE)
+        g._match(p=pred)
+        .where(
+            (F.col("object_kind") == KIND_RESOURCE)
             & ~F.col("subject_is_bnode")
         )
         .select("subject", "object_value")
@@ -119,17 +119,16 @@ def rdfs_expand_types(
     """Materialize rdfs9+rdfs11: asserted triples PLUS an inferred
     (x, rdf:type, D) for every asserted (x, rdf:type, C) with C
     subClassOf* D. Returns the deduped canonical union (keyed)."""
-    df = graph.df if isinstance(graph, RDFGraph) else graph
-    spark = df.sparkSession
-    closure = _collect_schema(df, subclass_pred, max_schema_edges)
+    g = as_graph(graph)
+    df = g._match()
+    closure = _collect_schema(g, subclass_pred, max_schema_edges)
     if not closure:
         return dedup_triples(df)
     cl = F.broadcast(
-        local_frame(spark, closure, "cls string, supercls string")
+        local_frame(df.sparkSession, closure, "cls string, supercls string")
     )
-    types = df.where(
-        (F.col("predicate") == type_pred)
-        & (F.col("object_kind") == KIND_RESOURCE)
+    types = g._match(p=type_pred).where(
+        F.col("object_kind") == KIND_RESOURCE
     )
     inferred = types.join(
         cl, types["object_value"] == cl["cls"], "inner"
@@ -155,13 +154,13 @@ def rdfs_expand_properties(
     """Materialize rdfs7: asserted triples PLUS an inferred (x, q, y)
     for every asserted (x, p, y) with p subPropertyOf* q. Returns the
     deduped canonical union (keyed)."""
-    df = graph.df if isinstance(graph, RDFGraph) else graph
-    spark = df.sparkSession
-    closure = _collect_schema(df, subproperty_pred, max_schema_edges)
+    g = as_graph(graph)
+    df = g._match()
+    closure = _collect_schema(g, subproperty_pred, max_schema_edges)
     if not closure:
         return dedup_triples(df)
     cl = F.broadcast(
-        local_frame(spark, closure, "prop string, superprop string")
+        local_frame(df.sparkSession, closure, "prop string, superprop string")
     )
     inferred = df.join(
         cl, df["predicate"] == cl["prop"], "inner"

@@ -103,12 +103,10 @@ def materialize_graph(
 
     Returns the manifest. Skips the write when the fingerprint matches
     the existing manifest (snapshot memoization)."""
-    if getattr(df, "_ts_canonical", False) and "tkey" in df.columns:
-        # already the exact output of dedup_triples (marker set there):
-        # re-deduplicating would repeat the full exchange + aggregate
-        src = df
-    else:
-        src = dedup_triples(df)
+    # over an already deduplicated frame (dedup_triples output, as
+    # run_pipeline returns) Catalyst drops the repeated aggregate, so
+    # the plan keeps one exchange either way
+    src = dedup_triples(df)
     # cache the 7 COMPONENT columns only: the derived okey/tkey strings
     # (~150 B/row, about half the row) are recomputed by a codegen
     # concat wherever needed — the fingerprint derives tkey on the fly

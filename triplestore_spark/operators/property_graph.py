@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from triplestore_spark import schema as S
-from triplestore_spark.operators.graph import RDFGraph
+from triplestore_spark.operators.graph import RDFGraph, as_graph, edge_view
 
 __all__ = ["to_property_graph"]
 
@@ -47,7 +47,8 @@ def to_property_graph(
     edges: (src, label, dst) — one row per resource-valued triple
     with predicate != type_pred, bag of distinct triples (the
     canonical table is already tkey-deduped)."""
-    df = graph.df if isinstance(graph, RDFGraph) else graph
+    g = as_graph(graph)
+    df = g._match()
 
     edges = df.where(
         (F.col("object_kind").isin(S.KIND_RESOURCE, S.KIND_BNODE))
@@ -59,12 +60,9 @@ def to_property_graph(
     )
 
     labels = (
-        df.where(
-            (F.col("predicate") == type_pred)
-            & (F.col("object_kind") == S.KIND_RESOURCE)
-        )
-        .groupBy(F.col("subject").alias("id"))
-        .agg(F.sort_array(F.collect_set("object_value")).alias("labels"))
+        edge_view(g, type_pred)
+        .groupBy(F.col("src").alias("id"))
+        .agg(F.sort_array(F.collect_set("dst")).alias("labels"))
     )
 
     prop_lists = (

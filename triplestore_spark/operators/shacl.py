@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from triplestore_spark import schema as S
 from triplestore_spark.operators.bgp import _sql_str
-from triplestore_spark.operators.graph import RDFGraph
+from triplestore_spark.operators.graph import RDFGraph, as_graph
 
 __all__ = ["validate", "validate_sql"]
 
@@ -121,12 +121,7 @@ def validate(
     # every SHACL scan filters on a constant predicate: read the POS
     # layout, so over a MaterializedGraph the constant lands on parquet
     # min/max stats of the copy sorted for it (operators/graph.route)
-    df = graph.layout("pos") if isinstance(graph, RDFGraph) else graph
-    okey = (
-        F.col("okey")
-        if "okey" in df.columns
-        else F.concat(F.lit("<"), F.col("object_value"), F.lit(">"))
-    )
+    df = as_graph(graph).layout("pos")
     parts: list[DataFrame] = []
     for shape in shapes:
         _check_shape(shape)
@@ -141,7 +136,7 @@ def validate(
                     F.col("object_kind").alias("k"),
                     F.col("object_value").alias("v"),
                     F.col("object_type").alias("t"),
-                    okey.alias("key"),
+                    F.col("okey").alias("key"),
                 )
                 .join(targets, "focus", "leftsemi")
             )

@@ -28,8 +28,8 @@ Supported grammar (case-insensitive keywords)::
     ASK { group }
     CONSTRUCT { triples } WHERE { group }
     DESCRIBE <node> | DESCRIBE ?v WHERE { group }
-        (the variable form describes every bound node via one
-        semi-join per role — never a driver-side node collect)
+        (RDFGraph.describe: one semi-join per role on (name,
+        is_bnode) — the node set is never collected)
 
     group    := triples and any of:
                   OPTIONAL { triples [FILTER (...)] ... }
@@ -120,6 +120,7 @@ from triplestore_spark.operators.bgp import (
     _is_path_pred,
     _SeqGroup,
     _Step,
+    strip_node_key,
 )
 
 __all__ = [
@@ -1743,10 +1744,9 @@ def _ask_group(graph, g: dict) -> bool:
     """One ASK arm. A group whose patterns are ALL constant is the
     reference's Contains check (source.go's point lookup) — bgp_match
     deliberately refuses it (nothing to join), so each pattern runs as
-    a limit-1 lookup instead, on the routed layout of an RDFGraph;
-    any variable makes it a normal limit-1 BGP."""
+    a limit-1 lookup on its routed layout instead; any variable makes
+    it a normal limit-1 BGP."""
     from triplestore_spark.operators.bgp import _as_obj, _is_var, bgp_match
-    from triplestore_spark.operators.graph import RDFGraph, term_filter
 
     kw = _match_kwargs(g, graph)
     has_var = any(
@@ -1756,12 +1756,7 @@ def _ask_group(graph, g: dict) -> bool:
         m = bgp_match(graph, g["patterns"], distinct=False, **kw)
         return bool(m.limit(1).take(1))
     for s, p, o in g["patterns"]:
-        o = _as_obj(o)
-        if isinstance(graph, RDFGraph):
-            scan = graph._match(s, p, o)
-        else:
-            scan = graph.where(term_filter(s, p, o))
-        if not scan.limit(1).take(1):
+        if not graph._match(s, p, _as_obj(o)).limit(1).take(1):
             return False
     return True
 
@@ -1770,64 +1765,38 @@ def sparql_query(graph, text: str):
     """Execute SPARQL text on an RDFGraph / triple DataFrame. SELECT,
     CONSTRUCT, and DESCRIBE return a DataFrame; ASK returns a bool.
     See the module docstring for the supported subset."""
-    from triplestore_spark.operators.bgp import bgp_construct, bgp_match
-    from triplestore_spark.operators.bgp_agg import bgp_select, bgp_union
-    from triplestore_spark.operators.graph import RDFGraph
+    from pyspark.sql import functions as F
 
+    from triplestore_spark.operators.bgp import bgp_construct, bgp_match
+    from triplestore_spark.operators.graph import as_graph
+
+    graph = as_graph(graph)
     q = parse_sparql(text)
     form = q["form"]
     if form == "describe":
-        g = graph if isinstance(graph, RDFGraph) else RDFGraph(graph)
-        return g.describe(q["node"])
+        return graph.describe(q["node"])
     if form == "describe_var":
-        from pyspark.sql import functions as F
-
-        from triplestore_spark import schema as S
-
-        g = graph if isinstance(graph, RDFGraph) else RDFGraph(graph)
         kw = _match_kwargs(q["where"], graph)
-        m = bgp_match(g, q["where"]["patterns"], distinct=False, **kw)
+        m = bgp_match(graph, q["where"]["patterns"], distinct=False, **kw)
         var = q["var"][1:]
         if var not in m.columns:
             raise SparqlParseError(
                 f"sparql: DESCRIBE variable ?{var} is not bound by "
                 "the WHERE group"
             )
-        # distinct node NAMES (IRIs/bnodes only — literals are not
-        # describable); one semi-join per role, no driver collect.
-        # The kind travels WITH the name: an IRI <x> and a bnode _:x
-        # must not collapse onto the same bare text, so both joins
-        # also match on is-bnode.
+        # distinct node keys (IRIs/bnodes only — literals are not
+        # describable) as (name, is_bnode): the kind travels WITH the
+        # name, so an IRI <x> and a bnode _:x stay apart
+        k = F.col(var)
         nodes = (
-            m.select(F.col(var).alias("__k"))
-            .where(~F.col("__k").startswith('"'))
+            m.where(~k.startswith('"'))
             .select(
-                F.col("__k").startswith("_:").alias("__b"),
-                F.when(
-                    F.col("__k").startswith("_:"),
-                    F.expr("substring(__k, 3)"),
-                ).otherwise(
-                    F.expr("substring(__k, 2, length(__k) - 2)")
-                ).alias("__n"),
+                strip_node_key(k).alias("name"),
+                k.startswith("_:").alias("is_bnode"),
             )
             .distinct()
         )
-        df = g.df
-        as_subj = df.join(
-            nodes,
-            (df["subject"] == nodes["__n"])
-            & (df["subject_is_bnode"] == nodes["__b"]),
-            "left_semi",
-        )
-        as_obj = df.where(
-            F.col("object_kind").isin(S.KIND_RESOURCE, S.KIND_BNODE)
-        ).join(
-            nodes,
-            (df["object_value"] == nodes["__n"])
-            & ((df["object_kind"] == S.KIND_BNODE) == nodes["__b"]),
-            "left_semi",
-        )
-        return as_subj.unionByName(as_obj).distinct()
+        return graph.describe(nodes)
 
     where = q["where"]
     arms = where.get("union")

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from triplestore_spark.operators.graph import as_graph, route
 from triplestore_spark.schema import KIND_LITERAL
 from triplestore_spark.session import local_frame
 from triplestore_spark.storage import read_json, write_json
@@ -226,13 +227,18 @@ def graph_text_index(
     """Index the literal objects of an RDFGraph, one virtual document
     per SUBJECT (all its literal values merge — the jena-text shape:
     search returns subjects). `predicates` restricts which properties
-    feed the index (e.g. only rdfs:label / kg:text); the filter is a
-    component predicate, so it pushes down onto the POS layout's
-    parquet stats when the graph is materialized."""
-    df = graph.df if hasattr(graph, "df") else graph
-    lit_rows = df.where(F.col("object_kind") == KIND_LITERAL)
-    if predicates is not None:
-        lit_rows = lit_rows.where(F.col("predicate").isin(list(predicates)))
+    feed the index (e.g. only rdfs:label / kg:text); with them bound
+    the scan routes to the POS layout, so over a MaterializedGraph the
+    predicate filter pushes down onto the parquet stats of the copy
+    sorted by predicate (operators/graph.route)."""
+    g = as_graph(graph)
+    if predicates is None:
+        rows = g._match()
+    else:
+        rows = g.layout(route(None, predicates, None)).where(
+            F.col("predicate").isin(list(predicates))
+        )
+    lit_rows = rows.where(F.col("object_kind") == KIND_LITERAL)
     return build_text_index(
         lit_rows, id_col="subject", text_col="object_value"
     )

@@ -25,8 +25,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from triplestore_spark.operators.graph import RDFGraph
-from triplestore_spark.schema import KIND_RESOURCE
+from triplestore_spark.operators.graph import RDFGraph, edge_view
 from triplestore_spark.session import checkpoint_level, local_frame
 
 
@@ -40,13 +39,8 @@ class Tree:
     def edges(self) -> DataFrame:
         """(parent, child) edge set: triples of the tree predicate
         pointing at resource objects (reference tree.go:37-46)."""
-        return (
-            self._g.with_predicate(self.predicate)
-            .where(F.col("object_kind") == KIND_RESOURCE)
-            .select(
-                F.col("subject").alias("parent"),
-                F.col("object_value").alias("child"),
-            )
+        return edge_view(self._g, self.predicate).select(
+            F.col("src").alias("parent"), F.col("dst").alias("child")
         )
 
     # -- distributed traversals: frontier joins per level --
@@ -74,7 +68,7 @@ class Tree:
         call."""
         edges = self.edges().localCheckpoint(eager=True)
         frontier = local_frame(
-            self._g.df.sparkSession,
+            edges.sparkSession,
             [(start, 0, [start])],
             "node string, depth int, path array<string>",
         )
