@@ -3,7 +3,7 @@
 The DataFrame plan (operators/bgp.bgp_match) and the generated ANSI
 self-join SQL (bgp_match_sql) are structurally independent renderings
 of the same semantics; DuckDB executes the SQL as the oracle, exactly
-the redact_pii / dedup_lines_corpus evidence pattern.
+the filter_documents / chunk_documents evidence pattern.
 """
 
 import random

@@ -86,21 +86,3 @@ def test_cli_auto_detect(nt_file, tmp_path, capsys):
     main(["-in", "auto", "-out", "ntriples", "-files", str(nt_file)])
     out = capsys.readouterr().out
     assert "<s> <p> <o> ." in out
-
-
-def test_cli_turtle_roundtrip(tmp_path, capsys):
-    ttl = tmp_path / "in.ttl"
-    ttl.write_text(
-        "@prefix ex: <http://e/> .\n"
-        'ex:s ex:p ex:o ; ex:n 7 .\n'
-    )
-    main(["-in", "turtle", "-out", "ntriples", "-files", str(ttl)])
-    out = capsys.readouterr().out
-    assert "<http://e/s> <http://e/p> <http://e/o> ." in out
-    assert '<http://e/s> <http://e/n> "7"^^<xsd:integer> .' in out
-
-    # and back out as grouped Turtle text on stdout
-    main(["-in", "turtle", "-out", "turtle", "-files", str(ttl)])
-    out2 = capsys.readouterr().out
-    assert out2.count("<http://e/s>") == 1  # one grouped block
-    assert '"7"^^<http://www.w3.org/2001/XMLSchema#integer>' in out2

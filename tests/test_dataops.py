@@ -455,349 +455,6 @@ def test_stratified_sample_deterministic_and_rates(docs):
     assert ids3 != ids1
 
 
-def test_stratified_sample_epochs_oracle(docs):
-    """Upsampling: exact (doc_id, epoch) multiset against a pure-Python
-    md5 oracle; frac <= 1 subset identical to stratified_sample with
-    epoch == 0; repartition-invariant."""
-    import hashlib
-
-    from triplestore_spark.operators.textstats import (
-        stratified_sample,
-        stratified_sample_epochs,
-    )
-
-    fr = {"src0": 2.3, "src1": 0.5, "src2": 1.0}
-    seed = 42
-
-    def py_draw(doc_id):
-        h = hashlib.md5(f"{doc_id}:{seed}".encode()).hexdigest()
-        return int(h[:8], 16) / float(1 << 32)
-
-    src_of = {
-        r["doc_id"]: r["source"]
-        for r in docs.select("doc_id", "source").collect()
-    }
-    expected = set()
-    for did, src in src_of.items():
-        frac = fr.get(src, 0.0)
-        n = int(frac) + (1 if py_draw(did) < frac - int(frac) else 0)
-        for e in range(n):
-            expected.add((did, e))
-
-    got = {
-        (r["doc_id"], r["epoch"])
-        for r in stratified_sample_epochs(docs, fr, seed=seed)
-        .select("doc_id", "epoch")
-        .collect()
-    }
-    assert got == expected and got
-    # some src0 doc really was upsampled to 3 copies (frac 2.3)
-    assert any(e == 2 for _, e in got)
-
-    # repartition-invariant
-    got2 = {
-        (r["doc_id"], r["epoch"])
-        for r in stratified_sample_epochs(docs.repartition(7), fr, seed=seed)
-        .select("doc_id", "epoch")
-        .collect()
-    }
-    assert got2 == got
-
-    # frac <= 1 restriction: identical row set to stratified_sample,
-    # every epoch 0
-    fr_dn = {"src1": 0.5, "src2": 1.0}
-    ep = stratified_sample_epochs(docs, fr_dn, seed=seed).collect()
-    assert all(r["epoch"] == 0 for r in ep)
-    assert {r["doc_id"] for r in ep} == {
-        r["doc_id"] for r in stratified_sample(docs, fr_dn, seed=seed).collect()
-    }
-
-
-def test_cap_per_group_oracle(docs):
-    """Per-source cap: exact survivor set against the pure-Python md5
-    oracle, repartition-invariant, under-cap groups untouched."""
-    import hashlib
-
-    from triplestore_spark.operators.textstats import cap_per_group
-
-    def draw(did):
-        h = hashlib.md5(f"{did}:42".encode()).hexdigest()
-        return int(h[:8], 16) / float(1 << 32)
-
-    by_src: dict = {}
-    for r in docs.select("doc_id", "source").collect():
-        by_src.setdefault(r["source"], []).append(r["doc_id"])
-    cap = 7
-    expected = set()
-    for src, ids in by_src.items():
-        for did in sorted(ids, key=lambda d: (draw(d), d))[:cap]:
-            expected.add(did)
-
-    got = {r["doc_id"] for r in cap_per_group(docs, cap).collect()}
-    assert got == expected
-    got2 = {
-        r["doc_id"] for r in cap_per_group(docs.repartition(9), cap).collect()
-    }
-    assert got2 == got
-    # groups at/below the cap keep everything
-    small = {s for s, ids in by_src.items() if len(ids) <= cap}
-    for s in small:
-        assert set(by_src[s]) <= got
-    # a big cap is the identity
-    assert cap_per_group(docs, 10**6).count() == docs.count()
-
-
-def test_shuffle_deterministic_order(docs):
-    """Global order is reproducible across partitionings, changes with
-    the seed, and matches the pure-Python md5 sort."""
-    import hashlib
-
-    from triplestore_spark.operators.textstats import shuffle_deterministic
-
-    order1 = [
-        r["doc_id"]
-        for r in shuffle_deterministic(docs, seed=42).select("doc_id").collect()
-    ]
-    order2 = [
-        r["doc_id"]
-        for r in shuffle_deterministic(docs.repartition(11), seed=42)
-        .select("doc_id")
-        .collect()
-    ]
-    assert order1 == order2 and len(order1) == docs.count()
-
-    def key(did):
-        h = hashlib.md5(f"{did}:42".encode()).hexdigest()
-        return (int(h[:8], 16) / float(1 << 32), did)
-
-    assert order1 == sorted(order1, key=key)
-
-    order3 = [
-        r["doc_id"]
-        for r in shuffle_deterministic(docs, seed=7).select("doc_id").collect()
-    ]
-    assert order3 != order1 and sorted(order3) == sorted(order1)
-
-
-def test_plan_mixture_fractions(spark):
-    """Token-budget -> keep-fraction planning: big sources downweight
-    toward the cap, small ones keep everything, absent-from-dict
-    sources drop; composes with stratified_sample."""
-    from triplestore_spark.operators.textstats import (
-        plan_mixture,
-        stratified_sample,
-    )
-
-    rows = []
-    for i in range(40):
-        rows.append((i, "w " * 99 + "w", "en", "big", 200))      # 100 toks
-    for i in range(40, 44):
-        rows.append((i, "w w w w w", "en", "small", 9))          # 5 toks
-    for i in range(44, 48):
-        rows.append((i, "w w w", "en", "other", 5))              # 3 toks
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    fr = plan_mixture(docs, 1000)  # uniform cap: big has 4000 toks
-    assert fr["big"] == 0.25 and fr["small"] == 1.0 and fr["other"] == 1.0
-
-    fr2 = plan_mixture(docs, {"big": 400, "small": 10})
-    assert fr2 == {"big": 0.1, "small": 0.5}  # 'other' dropped
-
-    sampled = stratified_sample(docs, fr2)
-    srcs = {r["source"] for r in sampled.collect()}
-    assert "other" not in srcs
-
-
-def test_dedup_lines_corpus(spark):
-    """Corpus-level line dedup: planted boilerplate lines verified
-    against a pure-Python oracle AND Spark==DuckDB engine agreement
-    (keep='first', keep='none', min_line_chars guard) on planted docs
-    unioned with the real sf0.001 corpus."""
-    import duckdb
-    import pandas as pd
-
-    from triplestore_spark.operators.textstats import (
-        dedup_lines_corpus,
-        dedup_lines_corpus_sql,
-    )
-
-    BOILER = "ACCEPT ALL COOKIES TO CONTINUE"
-    planted = [
-        (90001, f"{BOILER}\nunique alpha line\n--\n\nbody one", "en", "srcp", 40),
-        (90002, f"unique beta line\n{BOILER}\n--\nbody two", "en", "srcp", 38),
-        (90003, f"shared tail line\nbody three\n{BOILER}", "en", "srcp", 36),
-        (90004, "shared tail line\nbody four\n\n--", "en", "srcp", 30),
-        (90005, "all unique here\nnothing repeats", "en", "srcp", 31),
-        (90006, BOILER, "en", "srcp", 30),  # whole doc is boilerplate
-    ]
-    path = "/root/testdata/sf0.001/documents.parquet"
-    base = spark.read.parquet(path)
-    df = base.unionByName(spark.createDataFrame(planted, base.schema))
-
-    # pure-Python oracle over the full unioned corpus, keep='first'
-    rows = [(r["doc_id"], r["text"]) for r in df.collect()]
-    seen: dict[str, tuple] = {}
-    for did, text in sorted(rows):
-        for pos, line in enumerate(text.split("\n")):
-            if line and (did, pos) < seen.get(line, (float("inf"), 0)):
-                seen[line] = (did, pos)
-    from collections import Counter
-
-    counts = Counter(
-        line for _, text in rows for line in text.split("\n") if line
-    )
-    expected = {}
-    for did, text in rows:
-        kept, dropped = [], 0
-        for pos, line in enumerate(text.split("\n")):
-            if line and counts[line] >= 2 and seen[line] != (did, pos):
-                dropped += 1
-            else:
-                kept.append(line)
-        expected[did] = ("\n".join(kept), dropped)
-
-    got = {
-        r["doc_id"]: (r["text"], r["n_lines_dropped"])
-        for r in dedup_lines_corpus(df).collect()
-    }
-    assert got == expected
-    # the planted boilerplate survived exactly once, in doc 90001
-    assert BOILER in got[90001][0]
-    assert all(
-        BOILER not in got[d][0] for d in (90002, 90003, 90006)
-    )
-    assert got[90006] == ("", 1)  # all-dropped doc -> empty text
-    # short "--" lines are protected by min_line_chars=3
-    g3 = {
-        r["doc_id"]: r["text"]
-        for r in dedup_lines_corpus(df, min_line_chars=3).collect()
-    }
-    assert "--" in g3[90001] and "--" in g3[90002] and "--" in g3[90004]
-
-    # engine agreement vs DuckDB for both keep modes + the guard
-    con = duckdb.connect()
-    pdf = pd.DataFrame(
-        planted, columns=["doc_id", "text", "lang", "source", "n_chars"]
-    )
-    con.register("planted", pdf)
-    con.execute(
-        f"CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{path}') UNION ALL FROM planted"
-    )
-    for kw in (
-        {"keep": "first"},
-        {"keep": "none"},
-        {"keep": "first", "min_line_chars": 3},
-    ):
-        a = sorted(
-            (r["doc_id"], r["text"], r["n_lines_dropped"])
-            for r in dedup_lines_corpus(df, **kw).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in con.execute(
-                "SELECT doc_id, text, n_lines_dropped FROM ("
-                + dedup_lines_corpus_sql(**kw)
-                + ")"
-            ).fetchall()
-        )
-        assert a == b, kw
-
-
-def test_redact_pii_planted(spark):
-    """Exact expected redactions: email, IPv4, phone-shaped run, and
-    a clean row; n_redacted counts the placeholders inserted."""
-    from triplestore_spark.operators.textstats import redact_pii
-
-    rows = [
-        (1, "contact bob@example.com or 192.168.0.1 now", "en", "src0", 42),
-        (2, "call +1 (555) 123-4567 today", "en", "src0", 28),
-        (3, "clean text with no identifiers at all", "en", "src1", 37),
-        (4, "two mails a@b.co c@d.org and ip 10.0.0.255", "en", "src1", 42),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    got = {r["doc_id"]: (r["text"], r["n_redacted"])
-           for r in redact_pii(df).collect()}
-    assert got[1] == ("contact <EMAIL> or <IP> now", 2)
-    assert got[2] == ("call <PHONE> today", 1)
-    assert got[3] == ("clean text with no identifiers at all", 0)
-    assert got[4] == ("two mails <EMAIL> <EMAIL> and ip <IP>", 3)
-
-
-def test_redact_pii_engine_agreement(spark):
-    """Spark (java.util.regex) and DuckDB (RE2) must agree exactly on
-    the dialect-neutral PII patterns — planted PII rows plus the real
-    sf0.001 corpus."""
-    import duckdb
-
-    from triplestore_spark.operators.textstats import (
-        redact_pii,
-        redact_pii_sql,
-    )
-
-    path = "/root/testdata/sf0.001/documents.parquet"
-    planted = [
-        (90001, "mail x.y+z@sub.example.org mid-line", "en", "srcp", 35),
-        (90002, "ips 8.8.8.8 and 255.255.255.255, tel 555-123-9876", "en", "srcp", 49),
-        (90003, "no-pii control row", "en", "srcp", 18),
-    ]
-    base = spark.read.parquet(path)
-    df = base.unionByName(
-        spark.createDataFrame(planted, base.schema)
-    )
-    a = sorted(
-        (r["doc_id"], r["text"], r["n_redacted"])
-        for r in redact_pii(df).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{path}') "
-        f"UNION ALL FROM (VALUES "
-        + ", ".join(
-            f"({i}, '{t}', '{lang}', '{src}', {nc})"
-            for i, t, lang, src, nc in planted
-        )
-        + ") v(doc_id, text, lang, source, n_chars)"
-    )
-    b = sorted(
-        tuple(r)
-        for r in con.execute(
-            "SELECT doc_id, text, n_redacted FROM ("
-            + redact_pii_sql()
-            + ")"
-        ).fetchall()
-    )
-    assert a == b
-
-
-def test_decontaminate_planted(spark):
-    """A doc sharing an 8-gram with the eval set is dropped with the
-    hit counted; shorter-than-n and non-overlapping docs stay."""
-    from triplestore_spark.operators.textstats import decontaminate
-
-    gram = "the quick brown fox jumps over the lazy"
-    docs = spark.createDataFrame(
-        [
-            (1, f"intro words then {gram} dog outro"),
-            (2, "completely unrelated text that shares nothing at all with it"),
-            (3, "too short"),
-        ],
-        "doc_id long, text string",
-    )
-    eval_docs = spark.createDataFrame(
-        [(100, f"eval question: {gram} dog. answer: yes")],
-        "doc_id long, text string",
-    )
-    clean, contaminated = decontaminate(docs, eval_docs, n=8)
-    assert sorted(r["doc_id"] for r in clean.collect()) == [2, 3]
-    hits = {r["doc_id"]: r["n_hits"] for r in contaminated.collect()}
-    assert set(hits) == {1} and hits[1] >= 1
-
-
 def test_boilerplate_ngrams_planted(spark):
     """Planted shared 3-gram across docs 1/2; doc 3 all-unique; doc 4
     too short for any gram (no row, as in the oracle's UNNEST)."""
@@ -1303,77 +960,3 @@ def test_connected_components_star_nonconvergence_raises(spark):
     )
     with pytest.raises(ConvergenceError):
         connected_components_star(pairs, max_iter=1)
-
-
-# -- best-fit (FFD) sequence packing ----------------------------------
-
-
-def test_pack_bestfit_matches_python_ffd(spark):
-    """pack_documents_bestfit == a pure-Python FFD oracle per shard:
-    same doc->pack assignment, deterministic under repartitioning."""
-    import random
-
-    from triplestore_spark.operators.textstats import (
-        pack_documents_bestfit,
-        packing_waste,
-    )
-
-    rng = random.Random(7)
-    rows = [
-        (i, i % 3, " ".join("w" for _ in range(rng.randrange(1, 700))))
-        for i in range(200)
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id bigint, shard bigint, text string"
-    )
-    W = 512
-    got = {
-        (r["doc_id"], r["shard"]): r["pack_id"]
-        for r in pack_documents_bestfit(docs, W).collect()
-    }
-    n_tok = {i: len(t.split(" ")) for i, _, t in rows}
-
-    def ffd_oracle(items):  # [(doc_id, n)] -> {doc_id: pack}
-        items = sorted(items, key=lambda x: (-x[1], x[0]))
-        space, out = [], {}
-        for d, t in items:
-            for i, rem in enumerate(space):
-                if rem >= t:
-                    space[i] -= t
-                    out[d] = i
-                    break
-            else:
-                space.append(max(0, W - t))
-                out[d] = len(space) - 1
-        return out
-
-    for shard in (0, 1, 2):
-        want = ffd_oracle(
-            [(i, n_tok[i]) for i, s, _ in rows if s == shard]
-        )
-        for d, p in want.items():
-            assert got[(d, shard)] == p, (shard, d)
-    # feasibility: no pack over the window unless it is one long doc
-    from pyspark.sql import functions as F
-
-    per_pack = (
-        pack_documents_bestfit(docs, W)
-        .groupBy("shard", "pack_id")
-        .agg(F.sum("n_tokens").alias("s"), F.count("*").alias("c"))
-        .collect()
-    )
-    for r in per_pack:
-        assert r["s"] <= W or r["c"] == 1, dict(r.asDict())
-    # invariant under partitioning
-    got2 = {
-        (r["doc_id"], r["shard"]): r["pack_id"]
-        for r in pack_documents_bestfit(
-            docs.repartition(13), W
-        ).collect()
-    }
-    assert got2 == got
-    # waste audit runs and is sane
-    w = {r["shard"]: r for r in packing_waste(
-        pack_documents_bestfit(docs, W), W).collect()}
-    for shard in (0, 1, 2):
-        assert 0.0 <= w[shard]["waste_frac"] < 0.5

@@ -217,8 +217,7 @@ def test_materialized_operators_read_only_their_layout(
 ):
     """Routing pin for the operators: every predicate-scoped read (the
     edge view, Tree.edges, encode_dot's edge and rdf:type scans, the
-    RDFS schema and type scans, the property-graph labels, a
-    predicate-restricted text index) reads only POS files of a
+    RDFS schema and type scans) reads only POS files of a
     MaterializedGraph; describe reads SPO (subject side) and OSP
     (object side); and each returns what the in-memory graph of the
     same triples returns."""
@@ -233,8 +232,6 @@ def test_materialized_operators_read_only_their_layout(
         MaterializedGraph,
         materialize_graph,
     )
-    from triplestore_spark.operators.property_graph import to_property_graph
-    from triplestore_spark.operators.text_search import graph_text_index
     from triplestore_spark.operators.tree import Tree
 
     df = triples_to_df(
@@ -273,15 +270,6 @@ def test_materialized_operators_read_only_their_layout(
         assert layouts(read(mg)) == {"pos"}, name
         assert rows(read(mg)) == rows(read(mem)) == [("a", "b"), ("b", "c")]
 
-    # the label scan is the one predicate-scoped read of the property
-    # graph; its other reads (edges, props, subjects) scan SPO
-    verts = to_property_graph(mg)[0]
-    assert layouts(verts) == {"spo", "pos"}
-    labelled = "size(labels) > 0"
-    assert rows(verts.where(labelled)) == rows(
-        to_property_graph(mem)[0].where(labelled)
-    )
-
     # collected frames (DOT's scans, the RDFS schema): spy on what
     # they read
     collect = DataFrame.collect
@@ -311,12 +299,6 @@ def test_materialized_operators_read_only_their_layout(
     )
     assert ("a", False, "rdf:type", "res", "kg:Cls", "", "") in rows(
         inferred.select(*fields)
-    )
-
-    idx = graph_text_index(mg, predicates=["rdfs:label"])
-    assert layouts(idx.postings) == {"pos"}
-    assert rows(idx.postings) == rows(
-        graph_text_index(mem, predicates=["rdfs:label"]).postings
     )
 
     for node in ("a", bnode("a")):

@@ -172,181 +172,6 @@ def test_no_python_udf_in_plan(spark, sf_dir):
         assert marker not in plan, f"{marker} found in physical plan"
 
 
-def test_curate_funnel_end_to_end(spark, sf_dir):
-    """The composed curation funnel: every stage's semantics verified
-    on the real corpus plus planted rows that each stage must act on
-    (boilerplate line, PII, eval contamination, near-dup pair,
-    over-cap source, mixture budget, final deterministic order)."""
-    import hashlib
-    import os
-
-    from triplestore_spark.operators.textstats import filter_documents
-    from triplestore_spark.pipeline.curate import curate
-
-    base = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    hosts = [
-        r.asDict()
-        for r in filter_documents(base).orderBy("doc_id").limit(4).collect()
-    ]
-    assert len(hosts) == 4
-    # stopword-bearing so a boiler-only doc still passes the filter's
-    # lang gate (exercising the emptied-doc drop after line dedup)
-    BOILER = "SUBSCRIBE TO the NEWSLETTER FOR a FREE UPDATE"
-    # a standalone near-dup pair: reversed host tokens keep the
-    # quality/lang stats but share no 3-shingles with the host, so the
-    # pair clusters only with itself (canonical = 91004)
-    rev = " ".join(reversed(hosts[2]["text"].split(" ")))
-    near = rev.rsplit(" ", 2)[0] + " changed tokens"
-    planted_texts = [
-        # two filtered hosts carrying the same boilerplate line; the
-        # body line gets a unique marker so it does not ALSO collide
-        # with the host base doc's own text (which is a corpus line)
-        (91001, f"{BOILER}\n" + hosts[0]["text"] + " uniqninety1"),
-        (91002, f"{BOILER}\n" + hosts[1]["text"] + " uniqninety2"),
-        # PII carrier
-        (91003, hosts[2]["text"] + " contact bob@example.com"),
-        # standalone near-dup pair (lines differ -> survive line dedup)
-        (91004, rev),
-        (91005, near),
-        # boilerplate-only doc: hollowed out by line dedup, must be
-        # dropped by the post-dedup length gate (never reaches LSH,
-        # where emptied texts would share one degenerate bucket)
-        (91006, BOILER),
-    ]
-    planted = [
-        (did, t, "en", "srcp", len(t)) for did, t in planted_texts
-    ]
-    df = base.unionByName(spark.createDataFrame(planted, base.schema))
-    eval_docs = spark.createDataFrame(
-        [(1, hosts[3]["text"])], "doc_id long, text string"
-    )
-
-    res = curate(
-        df,
-        eval_docs,
-        per_source_cap=5,
-        token_budget=400,
-        epochs=True,
-        seed=42,
-    )
-
-    filtered_ids = {r["doc_id"] for r in res.filtered.select("doc_id").collect()}
-    assert {91001, 91002, 91003, 91004, 91005, 91006} <= filtered_ids
-
-    # line dedup kept exactly one corpus-wide copy of the boiler line,
-    # and the hollowed-out boiler-only doc exited the funnel
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in res.line_deduped.select("doc_id", "text").collect()
-    }
-    n_boiler = sum(1 for t in texts.values() if BOILER in t)
-    assert n_boiler == 1 and BOILER in texts[91001]
-    assert 91006 not in texts
-
-    # PII redacted at the redaction stage
-    red = dict(
-        res.redacted.where(F.col("doc_id") == 91003)
-        .select("doc_id", "text")
-        .collect()
-    )
-    assert "<EMAIL>" in red[91003] and "bob@example.com" not in red[91003]
-
-    # the eval-contaminated host was reported and dropped
-    cont_ids = {
-        r["doc_id"] for r in res.contamination_report.select("doc_id").collect()
-    }
-    assert hosts[3]["doc_id"] in cont_ids
-    decon_ids = {
-        r["doc_id"] for r in res.decontaminated.select("doc_id").collect()
-    }
-    assert hosts[3]["doc_id"] not in decon_ids
-
-    # near-dup pair: only the canonical (min id) survives
-    nd_ids = {r["doc_id"] for r in res.near_deduped.select("doc_id").collect()}
-    assert 91004 in nd_ids and 91005 not in nd_ids
-
-    # per-source cap honored
-    caps = res.capped.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    assert all(r["n"] <= 5 for r in caps.collect())
-
-    # mixture sampling ran with epochs; fractions recorded
-    assert res.mixture_fractions and "epoch" in res.docs.columns
-    assert 0 < res.docs.count() <= res.capped.count() * 2
-
-    # final order is the deterministic hash order
-    order = [r["doc_id"] for r in res.docs.select("doc_id").collect()]
-
-    def key(did):
-        h = hashlib.md5(f"{did}:42".encode()).hexdigest()
-        return (int(h[:8], 16) / float(1 << 32), did)
-
-    assert order == sorted(order, key=key)
-
-    # funnel is monotone; the line-dedup stage dropped exactly the
-    # hollowed-out boiler-only doc on this corpus
-    fc = res.funnel_counts()
-    assert fc["filtered"] - 1 == fc["line_deduped"] == fc["redacted"]
-    assert (
-        fc["redacted"]
-        >= fc["decontaminated"]
-        >= fc["near_deduped"]
-        >= fc["capped"]
-        >= fc["sampled"]
-    )
-
-
-def test_curate_lm_screen_stage(spark, sf_dir):
-    """Optional LM perplexity stage: a gibberish doc (passes the
-    stats-based filter via stopword padding) is dropped by the
-    reference-trained screen; reference-like docs survive; the knobs
-    must be given together."""
-    import os
-
-    import pytest
-
-    from triplestore_spark.operators.lm import (
-        perplexity_score,
-        train_ngram_lm,
-    )
-    from triplestore_spark.operators.textstats import filter_documents
-    from triplestore_spark.pipeline.curate import curate
-
-    base = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    ref = filter_documents(base)
-    # gibberish with stopwords so quality/lang gates pass (>=500
-    # chars for the length half of the quality score, distinct
-    # nonsense tokens for diversity) but bigrams unseen by the model
-    junk = " ".join(f"the zq{i}x w{i}vk" for i in range(60))
-    assert len(junk) >= 500
-    host = ref.orderBy("doc_id").limit(1).collect()[0]
-    df = base.unionByName(
-        spark.createDataFrame(
-            [(95001, junk, "en", host["source"], len(junk))], base.schema
-        )
-    )
-    model = train_ngram_lm(ref, n=2, min_count=2)
-    scores = {
-        r["doc_id"]: r["avg_neg_logp"]
-        for r in perplexity_score(
-            filter_documents(df), model
-        ).collect()
-    }
-    # threshold between the corpus and the planted junk
-    thr = (
-        max(v for d, v in scores.items() if d != 95001 and v is not None)
-        + scores[95001]
-    ) / 2
-    assert scores[95001] > thr
-    res = curate(
-        df, lm_reference=ref, lm_max_avg_neg_logp=thr, lm_n=2
-    )
-    kept = {r["doc_id"] for r in res.lm_screened.select("doc_id").collect()}
-    assert 95001 not in kept and len(kept) > 0
-    assert res.funnel_counts()["lm_screened"] == len(kept)
-    with pytest.raises(ValueError, match="go together"):
-        curate(df, lm_reference=ref)
-
-
 @pytest.mark.parametrize("max_bytes", [128 << 20, 16 << 10])
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_under_split_guard_needs_no_rdd(spark, sf_dir, sf, max_bytes, monkeypatch):

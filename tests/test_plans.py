@@ -162,38 +162,6 @@ def test_boilerplate_shuffles_exclude_text(spark, sf_dir):
             assert "text" not in line, line
 
 
-def test_redact_pii_is_shuffle_free_codegen(spark, sf_dir):
-    """The PII scrub is a pure map: no Exchange anywhere, no Python
-    eval, and the regexp chain inside a WholeStageCodegen span — at
-    100 TB this op must cost exactly one scan."""
-    import os
-
-    from triplestore_spark.operators.textstats import redact_pii
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    plan = plan_str(redact_pii(docs))
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "*(1)" in plan
-
-
-def test_decontaminate_shuffles_exclude_text(spark, sf_dir):
-    """Both decontamination shuffles (gram join, doc_id anti-join)
-    move md5 keys / ids only — the text column never crosses an
-    Exchange (same narrow-key discipline as boilerplate_ngrams)."""
-    import os
-
-    from triplestore_spark.operators.textstats import decontaminate
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    clean, cont = decontaminate(docs, docs.limit(3), n=8)
-    for df in (clean, cont):
-        for line in plan_str(df).splitlines():
-            if "Exchange hashpartitioning" in line:
-                assert "text" not in line, line
-    assert "LeftAnti" in plan_str(clean)
-
-
 def test_binary_split_ranges_spread_tasks(spark, tmp_path):
     """The split reader decodes each byte range in its own task: one
     partition per range, whatever the core count, never collapsed."""
@@ -234,29 +202,6 @@ def test_binary_split_ranges_spread_tasks(spark, tmp_path):
     total = sum(r["n"] for r in per_task)
     assert total == len(ts)
     assert max(r["n"] for r in per_task) < total
-
-
-def test_dedup_lines_corpus_two_data_shuffles(spark, sf_dir):
-    """Line dedup is exactly two data shuffles (line-fingerprint
-    window, doc_id reassembly) plus the broadcast/SMJ metadata
-    re-attach — rank and occurrence count share one window Exchange,
-    and doc metadata never rides through the line explode."""
-    import os
-
-    from triplestore_spark.operators.textstats import dedup_lines_corpus
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    plan = plan_str(dedup_lines_corpus(docs))
-    hash_parts = [
-        line
-        for line in plan.splitlines()
-        if "Exchange hashpartitioning" in line
-    ]
-    assert len(hash_parts) == 2, plan
-    assert any("fp#" in line for line in hash_parts)
-    assert any("doc_id#" in line for line in hash_parts)
-    # one Window node computes both rn and cnt
-    assert plan.count("Window") == 1, plan
 
 
 def test_rank_by_key_desc_is_distributed(spark):

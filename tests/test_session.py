@@ -1,12 +1,13 @@
 """Session defaults: the local master and the default shuffle partition
-count come from one core count. Checked against a recording builder,
+count come from one core count; the driver heap comes from the
+machine's memory. Checked against a recording builder,
 so no SparkSession is created or reconfigured."""
 
 import os
 
 from pyspark.sql import SparkSession
 
-from triplestore_spark.session import get_spark
+from triplestore_spark.session import default_driver_memory, get_spark
 
 
 class _RecordingBuilder:
@@ -41,3 +42,24 @@ def test_default_shuffle_partitions_follow_master_cores(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     n = len(os.sched_getaffinity(0))
     assert built() == (f"local[{n}]", str(n))
+
+
+def test_default_driver_memory_is_half_of_physical_capped_at_8g(monkeypatch):
+    def on_machine(phys_bytes):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_bytes // 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+        return default_driver_memory()
+
+    assert on_machine(4 << 30) == "2048m"
+    assert on_machine(15 << 30) == "7680m"
+    assert on_machine(16 << 30) == "8192m"
+    assert on_machine(512 << 30) == "8192m"
+
+    def driver_memory():
+        monkeypatch.setattr(SparkSession, "builder", _RecordingBuilder())
+        return get_spark(cpus=1)["spark.driver.memory"]
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert on_machine(4 << 30) == driver_memory() == "2048m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert driver_memory() == "3g"

@@ -519,6 +519,61 @@ def test_ask(g):
     )
 
 
+@pytest.fixture(scope="module")
+def chain(spark):
+    """(n1 urn:p n2), (n2 urn:q n3): the smallest graph with a
+    two-hop path between constants."""
+    from triplestore_spark.dsl import subj_pred, triples_to_df
+
+    return RDFGraph(
+        triples_to_df(
+            spark,
+            [
+                subj_pred("n1", "urn:p").resource("n2"),
+                subj_pred("n2", "urn:q").resource("n3"),
+            ],
+        ),
+        cache=False,
+    )
+
+
+@pytest.mark.parametrize(
+    "holds, fails",
+    [
+        ("<n1> (<urn:p>|<urn:q>) <n2>", "<n1> (<urn:p>|<urn:q>) <n3>"),
+        ("<n1> <urn:p>/<urn:q> <n3>", "<n2> <urn:p>/<urn:q> <n3>"),
+        ("<n1> <urn:p>+ <n2>", "<n2> <urn:p>+ <n1>"),
+        ("<n3> ^<urn:q> <n2>", "<n2> ^<urn:q> <n3>"),
+    ],
+)
+def test_ask_path_between_constants(chain, holds, fails):
+    """An ASK arm with no variable but a path predicate walks the path
+    between its two constants."""
+    assert sparql_query(chain, f"ASK {{ {holds} }}") is True
+    assert sparql_query(chain, f"ASK {{ {fails} }}") is False
+
+
+@pytest.mark.parametrize(
+    "path, start, end, absent",
+    [
+        (["^urn:q"], "n3", "n2", "n1"),
+        (["urn:p", "^urn:p"], "n1", "n1", "n2"),
+        (["^urn:q", "^urn:p"], "n3", "n1", "n2"),
+    ],
+)
+def test_property_path_inverse_last_step_obj_end(
+    chain, path, start, end, absent
+):
+    """A path ending in an inverse hop puts `end` in the subject slot;
+    an IRI end given as an Obj answers like the same end as a string."""
+    from triplestore_spark.dsl import resource
+
+    for e, n in ((end, 1), (absent, 0)):
+        got = property_path(chain, path, start=start, end=resource(e))
+        assert got.count() == n
+        assert rows(got) == rows(property_path(chain, path, start=start, end=e))
+
+
 def test_construct(g):
     text = """
     CONSTRUCT { ?e kg:mentionedBy ?d }

@@ -111,66 +111,8 @@ def main():
         "files_before_compact": files_before,
         "files_after_compact": files_after,
         "no_crash_markers": markers_ok,
+        "pass": ok,
     }
-    # NOTE: no print and no "pass" key here — the script's contract is
-    # ONE stdout JSON line with the combined verdict at the end
-    # (ADVICE r5: an early pass=true line misled single-line readers).
-
-    # ---- phase 2: streaming KG construction (streaming/kg.py) ----
-    # documents -> per-micro-batch extract+resolve -> dedup-merge;
-    # throughput in docs/s and triples/s plus exactly-once equality
-    # with the batch pipeline over the same corpus.
-    from triplestore_spark.streaming.kg import (
-        read_batch_metrics,
-        stream_documents_into_kg,
-    )
-
-    docs = spark.read.parquet(os.path.join(args.sf, "documents.parquet"))
-    reps2 = spark.range(args.replicate).select(F.col("id").alias("rep"))
-    docs_big = (
-        docs.crossJoin(F.broadcast(reps2))
-        .withColumn("doc_id", F.col("doc_id") + F.col("rep") * 100000000)
-        .drop("rep")
-    )
-    kg_in = os.path.join(work, "docs_in")
-    docs_big.repartition(16).write.mode("overwrite").parquet(kg_in)
-    n_docs = docs_big.count()
-    kg_table = os.path.join(work, "kg_table")
-    kg_cp = os.path.join(work, "kg_cp")
-    t1 = time.time()
-    q2 = stream_documents_into_kg(
-        spark, kg_in, kg_table, kg_cp, max_files_per_trigger=4
-    )
-    finished2 = q2.awaitTermination(900)
-    kg_elapsed = time.time() - t1
-    if not finished2:
-        q2.stop()
-        out.update({"pass": False, "error": "kg stream timed out"})
-        print(json.dumps(out))
-        sys.exit(1)
-    from triplestore_spark.operators.graph import dedup_triples
-    from triplestore_spark.pipeline.run import candidate_triples
-
-    sink = read_sink(spark, kg_table)
-    n_kg = sink.count()
-    n_kg_distinct = sink.select("tkey").distinct().count()
-    n_batch_ref = dedup_triples(
-        candidate_triples(spark, docs_big)
-    ).count()
-    n_batches = read_batch_metrics(spark, kg_table).count()
-    kg_ok = n_kg == n_kg_distinct == n_batch_ref
-    out_kg = {
-        "kg_docs": n_docs,
-        "kg_micro_batches": n_batches,
-        "kg_stream_sec": round(kg_elapsed, 2),
-        "kg_docs_per_sec": round(n_docs / kg_elapsed, 1),
-        "kg_triples_per_sec": round(n_kg / kg_elapsed, 1),
-        "kg_sink_triples": n_kg,
-        "kg_equals_batch_pipeline": kg_ok,
-        "pass": ok and kg_ok,
-    }
-    out.update(out_kg)
-    ok = ok and kg_ok
     print(json.dumps(out))
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(
@@ -180,10 +122,7 @@ def main():
             "# Streaming ingest evidence (tools/bench_streaming.py)\n\n"
             "Exactly-once bucketed NT ingest (availableNow); every second\n"
             "original file duplicated to exercise the dedup merge, then\n"
-            "one compaction pass. kg_* fields: streaming KG construction\n"
-            "(documents stream -> per-batch extract+resolve -> dedup\n"
-            "merge, streaming/kg.py), checked equal to the batch\n"
-            "pipeline over the same corpus.\n\n"
+            "one compaction pass.\n\n"
             + json.dumps(out, indent=2)
             + "\n"
         )

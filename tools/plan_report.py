@@ -269,29 +269,6 @@ def main():
         )
     )
 
-    # round-6: LM perplexity scoring — the model-count joins must
-    # broadcast (model is the small trusted side) so candidate text
-    # never shuffles
-    from triplestore_spark.operators.lm import (
-        perplexity_score,
-        train_ngram_lm,
-    )
-
-    docs_lm = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    sections.append(
-        (
-            "LM perplexity scoring (model-count joins broadcast; "
-            "candidate text never crosses an exchange; per-doc agg "
-            "partial+final)",
-            fmt(
-                perplexity_score(
-                    docs_lm,
-                    train_ngram_lm(docs_lm.limit(200), n=2, min_count=2),
-                )
-            ),
-        )
-    )
-
     # round-6: filter pushdown below the BGP join + the two-pass rank
     sections.append(
         (
@@ -318,32 +295,6 @@ def main():
                     g.layout("spo").select("tkey"), num_partitions=8
                 )
             ),
-        )
-    )
-
-    # round-6: full-text search — the query side broadcasts onto the
-    # postings; nothing after tokenization carries document text
-    from triplestore_spark.operators.text_search import (
-        bm25_search,
-        build_text_index,
-        tfidf_vectors,
-    )
-
-    txt_idx = build_text_index(docs.select("doc_id", "text"))
-    sections.append(
-        (
-            "BM25 top-k search (query terms BroadcastExchange onto the "
-            "postings; shuffles carry (qid, id, partial score) — never "
-            "text)",
-            fmt(bm25_search(txt_idx, ["data spark stream"], k=5)),
-        )
-    )
-    sections.append(
-        (
-            "Hashed TF-IDF document vectors (one term join + one "
-            "(id, slot) aggregation; the dense vector materializes "
-            "only in the final projection)",
-            fmt(tfidf_vectors(txt_idx, dim=64)),
         )
     )
 

@@ -1620,6 +1620,13 @@ def property_path(
         raise ValueError("property_path: empty path")
     graph = as_graph(graph)
     steps = _parse_path_steps(path)
+    # an IRI endpoint given as an Obj is its plain string: a string is
+    # an IRI in the subject slot and in the object slot alike, and an
+    # inverse hop puts `end` in the subject slot
+    start, end = (
+        t.value if isinstance(t, Obj) and t.kind == KIND_RESOURCE else t
+        for t in (start, end)
+    )
     swapped = False
     if start is None and steps[0][1:] != (1, 1):
         # unrooted leading closure: walk from the other end if pinned

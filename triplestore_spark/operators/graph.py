@@ -225,34 +225,6 @@ class RDFGraph:
 
         return bgp_construct(self, patterns, template, **kwargs)
 
-    def to_property_graph(self, **kwargs):
-        """(vertices, edges) DataFrames — the labeled-property-graph
-        projection downstream graph systems consume
-        (operators.property_graph.to_property_graph)."""
-        from triplestore_spark.operators.property_graph import (
-            to_property_graph,
-        )
-
-        return to_property_graph(self, **kwargs)
-
-    def text_search(
-        self, query: str, k: int = 10, predicates=None, **kwargs
-    ) -> DataFrame:
-        """BM25 full-text search over this graph's literal objects ->
-        (subject, score, rank) — the jena-text convenience shape.
-        Builds the inverted index inline (one-shot exploration); for
-        query-many serving build it once via
-        operators.text_search.graph_text_index + save_text_index."""
-        from triplestore_spark.operators.text_search import (
-            bm25_search,
-            graph_text_index,
-        )
-
-        idx = graph_text_index(self, predicates=predicates)
-        return bm25_search(idx, [query], k=k, **kwargs).select(
-            F.col("id").alias("subject"), "score", "rank"
-        )
-
     def describe(self, nodes) -> DataFrame:
         """Every triple touching a node, as subject or as resource /
         bnode object — SPARQL's DESCRIBE. `nodes` is one node, named
@@ -287,20 +259,6 @@ class RDFGraph:
             "left_semi",
         )
         return as_subj.unionByName(as_obj).distinct()
-
-    def merge_equivalents(
-        self, sameas_pred: str = "owl:sameAs", **kwargs
-    ) -> "RDFGraph":
-        """owl:sameAs canonicalization front door: merge equivalence
-        classes and rewrite every triple through the component-min
-        representative (operators/sameas.py). Returns a NEW graph
-        (immutable, like add/remove)."""
-        from triplestore_spark.operators.sameas import merge_equivalents
-
-        return RDFGraph(
-            merge_equivalents(self._df, sameas_pred, **kwargs),
-            cache=False,
-        )
 
     # -- the six point lookups (reference source.go:203-220) --
 

@@ -1,11 +1,11 @@
 """Multimodal column handling: opaque binary payloads + typed metadata.
 
 Images/audio/video are opaque `binary` columns with a typed metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched `mapInPandas` UDFs (the only sane shape for per-blob
-Python work: the batch boundary amortizes serialization, and the
-plumbing — schema, partitioning, batch iteration — is identical to
-what a real libjpeg/ffmpeg-backed implementation would use).
+struct; decode and feature extraction run as Arrow-batched
+`mapInPandas` UDFs (the only sane shape for per-blob Python work:
+the batch boundary amortizes serialization, and the plumbing —
+schema, partitioning, batch iteration — is identical to what a real
+libjpeg/ffmpeg-backed implementation would use).
 
 The actual media libs are not in this container, so the byte-level
 decoders are STUBS: `decode_image(..., fake=True)` produces a
@@ -138,28 +138,4 @@ def decode_image_features(
 
     return media.select("media_ref", "payload").mapInPandas(
         batches, IMAGE_FEATURES_SCHEMA
-    )
-
-
-def resize_plan(media: DataFrame, target: int = 224) -> DataFrame:
-    """Resize stub: plumbing only — the output schema and partition
-    behavior of a resize stage (payload passthrough; a real impl
-    replaces the payload column inside the same mapInPandas)."""
-    return media.withColumn("target_size", F.lit(target))
-
-
-def frame_sample_plan(
-    media: DataFrame, every_n_frames: int = 30
-) -> DataFrame:
-    """Video frame-sampling stub: emits the (media_ref, frame_idx)
-    expansion a real ffmpeg-backed sampler would produce, with frame
-    count derived deterministically from the payload digest."""
-    n_frames = (
-        F.pmod(F.xxhash64("payload"), F.lit(300)).cast("int") + 1
-    )
-    return media.where(F.col("kind") == "video").select(
-        "media_ref",
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n_frames))
-        ).alias("frame_idx"),
     )

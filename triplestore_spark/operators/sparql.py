@@ -1744,9 +1744,15 @@ def _ask_group(graph, g: dict) -> bool:
     """One ASK arm. A group whose patterns are ALL constant is the
     reference's Contains check (source.go's point lookup) — bgp_match
     deliberately refuses it (nothing to join), so each pattern runs as
-    a limit-1 lookup on its routed layout instead; any variable makes
-    it a normal limit-1 BGP."""
-    from triplestore_spark.operators.bgp import _as_obj, _is_var, bgp_match
+    a limit-1 lookup on its routed layout instead (a path between two
+    constants is a limit-1 property_path); any variable makes it a
+    normal limit-1 BGP."""
+    from triplestore_spark.operators.bgp import (
+        _as_obj,
+        _is_var,
+        bgp_match,
+        property_path,
+    )
 
     kw = _match_kwargs(g, graph)
     has_var = any(
@@ -1756,7 +1762,11 @@ def _ask_group(graph, g: dict) -> bool:
         m = bgp_match(graph, g["patterns"], distinct=False, **kw)
         return bool(m.limit(1).take(1))
     for s, p, o in g["patterns"]:
-        if not graph._match(s, p, _as_obj(o)).limit(1).take(1):
+        if isinstance(p, PathExpr):
+            m = property_path(graph, p.steps, start=s, end=o, distinct=False)
+        else:
+            m = graph._match(s, p, _as_obj(o))
+        if not m.limit(1).take(1):
             return False
     return True
 

@@ -180,222 +180,6 @@ def boilerplate_ngrams(
     )
 
 
-# PII patterns kept dialect-neutral (java.util.regex AND RE2/DuckDB
-# compatible: no lookaround, no backrefs) so the engine-agreement test
-# can pin Spark == DuckDB on the same corpus. Order matters: emails
-# first (their digits must not be eaten by the phone pattern), then
-# IPv4 (dotted digits would otherwise match the phone shape), then
-# phone-shaped digit runs.
-PII_PATTERNS = (
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("ip", r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b", "<IP>"),
-    ("phone", r"\+?[0-9][0-9() -]{6,}[0-9]\b", "<PHONE>"),
-)
-
-
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """PII scrubbing — the redaction screen of a pretraining pipeline
-    (emails / IPv4 / phone-shaped digit runs replaced by typed
-    placeholder tokens). Counts are taken per pattern BEFORE its
-    replacement (regexp_count on the text as the pattern sees it, i.e.
-    after the earlier patterns ran), so n_redacted is exactly the
-    number of placeholders inserted.
-
-    Pure Catalyst (regexp_count + regexp_replace chain, whole-stage
-    codegen, no shuffle): at 100 TB this is a scan-speed map like
-    ts_filter. The pattern list is deliberately conservative —
-    recall-tuned pattern packs are a config concern, not an engine
-    one; any (name, pattern, replacement) triple with RE2-compatible
-    syntax drops in via PII_PATTERNS."""
-    text = F.col(text_col)
-    n_total = F.lit(0)
-    for _, pat, repl in PII_PATTERNS:
-        n_total = n_total + F.regexp_count(text, F.lit(pat))
-        text = F.regexp_replace(text, pat, repl)
-    others = [c for c in docs.columns if c != text_col]
-    return docs.select(
-        *others,
-        text.alias(text_col),
-        n_total.cast("int").alias("n_redacted"),
-    )
-
-
-def redact_pii_sql(text_col: str = "text") -> str:
-    """DuckDB mirror of redact_pii over the `documents` view (RE2
-    syntax; 'g' flag because DuckDB replaces first-match by default
-    while Spark replaces all)."""
-    text = text_col
-    counts = []
-    for _, pat, repl in PII_PATTERNS:
-        esc = pat.replace("'", "''")
-        counts.append(f"len(regexp_extract_all({text}, '{esc}'))")
-        text = f"regexp_replace({text}, '{esc}', '{repl}', 'g')"
-    other_cols = "doc_id, lang, source, n_chars"
-    return f"""
-    SELECT {other_cols},
-           {text} AS {text_col},
-           CAST(({' + '.join(counts)}) AS INT) AS n_redacted
-    FROM documents
-    """
-
-
-def decontaminate(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """Eval-set decontamination (the GPT-3/PaLM-style screen: drop
-    training documents sharing any n-gram with a held-out eval set).
-    Returns (clean_docs, contaminated) where `contaminated` is
-    (doc_id, n_hits) — the number of distinct eval n-grams the doc
-    contains, countable/auditable before the drop.
-
-    Scale shape: both sides' grams are md5'd before any shuffle (the
-    same 16-byte narrow-key discipline as boilerplate_ngrams and the
-    MinHash pipeline), the eval side is distinct'd first (eval sets
-    are small — AQE broadcasts it at runtime), and the final drop is a
-    left-anti join on doc_id only. Docs shorter than n tokens have no
-    grams and are trivially clean."""
-    toks = tokens_col(text_col)
-    cnt = F.size(toks) - (n - 1)
-    grams = F.when(
-        cnt > 0,
-        F.transform(
-            F.sequence(F.lit(0), cnt - 1),
-            lambda i: F.md5(
-                F.array_join(F.slice(toks, i + F.lit(1), n), " ")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    doc_grams = docs.select("doc_id", F.explode(grams).alias("gram"))
-    eval_grams = (
-        eval_docs.select(F.explode(grams).alias("gram")).distinct()
-    )
-    contaminated = (
-        doc_grams.join(eval_grams, "gram")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("gram").alias("n_hits"))
-    )
-    clean = docs.join(contaminated, "doc_id", "left_anti")
-    return clean, contaminated
-
-
-def dedup_lines_corpus(
-    docs: DataFrame,
-    keep: str = "first",
-    min_line_chars: int = 1,
-    line_sep: str = "\n",
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus-level LINE dedup — the RefinedWeb/MassiveText screen
-    that strips boilerplate lines (nav bars, cookie banners, license
-    headers) repeated across documents. A line occurring in more than
-    one place corpus-wide is dropped everywhere except its first
-    occurrence (keep='first', ordered by (doc_id, position)) or
-    everywhere (keep='none', the aggressive boilerplate-removal
-    variant). Documents come back with surviving lines rejoined in
-    original order plus an auditable n_lines_dropped; lines shorter
-    than min_line_chars always survive (so blank separator lines are
-    not collapsed corpus-wide).
-
-    Scale shape: one shuffle partitioned by the line fingerprint
-    (rank + occurrence count share a single window spec), one shuffle
-    by doc_id to reassemble, and a same-key join to re-attach the
-    narrow doc metadata (which never rides through the explode, so
-    metadata is not multiplied by line count). Short lines get a
-    per-(doc,pos) unique fingerprint instead of bypass-union plumbing
-    — they stay in the single pass but can never cluster. Line text
-    crosses the wire once per shuffle; fingerprints are md5."""
-    if keep not in ("first", "none"):
-        raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    from pyspark.sql.window import Window
-
-    lines = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.col(text_col), line_sep, -1)).alias(
-            "pos", "line"
-        ),
-    )
-    eligible = F.length("line") >= min_line_chars
-    fp = F.when(eligible, F.md5(F.col("line"))).otherwise(
-        F.concat_ws(":", F.col("doc_id"), F.col("pos"))
-    )
-    # exactly ONE window function: keep='first' needs only the rank
-    # (rn > 1 already implies the line occurs >= 2 times), keep='none'
-    # needs only the occurrence count — so the plan carries a single
-    # Window node over a single fp Exchange either way.
-    w = Window.partitionBy("fp")
-    if keep == "none":
-        mark = F.count(F.lit(1)).over(w).alias("mark")
-        drop = F.col("mark") >= 2
-    else:
-        mark = (
-            F.row_number().over(w.orderBy("doc_id", "pos")).alias("mark")
-        )
-        drop = F.col("mark") > 1
-    marked = lines.withColumn("fp", fp).select(
-        "doc_id", "pos", "line", mark
-    )
-    rebuilt = marked.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(~drop, F.struct("pos", "line"))
-                    )
-                ),
-                lambda s: s["line"],
-            ),
-            line_sep,
-        ).alias(text_col),
-        F.sum(drop.cast("int")).alias("n_lines_dropped"),
-    )
-    return docs.drop(text_col).join(rebuilt, "doc_id")
-
-
-def dedup_lines_corpus_sql(
-    keep: str = "first", min_line_chars: int = 1
-) -> str:
-    """DuckDB mirror of dedup_lines_corpus over the `documents` view
-    (newline separator): same fingerprint trick, same window, same
-    ordered reassembly — string_agg skips the NULLed dropped lines and
-    COALESCE covers the all-lines-dropped document."""
-    drop = (
-        "cnt >= 2"
-        if keep == "none"
-        else "cnt >= 2 AND rn > 1"
-    )
-    return f"""
-    WITH split AS (
-      SELECT doc_id, string_split(text, chr(10)) AS parts FROM documents
-    ), lines AS (
-      SELECT doc_id, u.pos, parts[u.pos] AS line
-      FROM split, UNNEST(range(1, len(parts) + 1)) AS u(pos)
-    ), marked AS (
-      SELECT *,
-             CASE WHEN length(line) >= {min_line_chars} THEN md5(line)
-                  ELSE doc_id || ':' || pos END AS fp
-      FROM lines
-    ), w AS (
-      SELECT *,
-             row_number() OVER (PARTITION BY fp ORDER BY doc_id, pos) AS rn,
-             count(*) OVER (PARTITION BY fp) AS cnt
-      FROM marked
-    ), rebuilt AS (
-      SELECT doc_id,
-             COALESCE(string_agg(
-               CASE WHEN NOT ({drop}) THEN line END, chr(10)
-               ORDER BY pos), '') AS text,
-             SUM(CASE WHEN {drop} THEN 1 ELSE 0 END) AS n_lines_dropped
-      FROM w GROUP BY doc_id
-    )
-    SELECT d.doc_id, d.lang, d.source, d.n_chars,
-           r.text, CAST(r.n_lines_dropped AS BIGINT) AS n_lines_dropped
-    FROM documents d JOIN rebuilt r USING (doc_id)
-    """
-
-
 def fingerprint(docs: DataFrame) -> DataFrame:
     """Exact-dedup fingerprint: md5 of the lowercased text (md5 is
     bit-identical across engines, so the oracle matches exactly)."""
@@ -510,140 +294,6 @@ def _fraction_case(
             frac
         )
     return frac
-
-
-def stratified_sample_epochs(
-    docs: DataFrame,
-    fractions: dict[str, float],
-    seed: int = 42,
-    source_col: str = "source",
-) -> DataFrame:
-    """stratified_sample generalized to fractions > 1.0 — UPSAMPLING,
-    the other half of mixture weighting (a 4.3x-weighted source emits
-    each document 4 times plus a 5th with probability 0.3). Output
-    carries an `epoch` column (0..n_copies-1) so downstream packing /
-    sharding can spread a document's repeats across the training run
-    instead of emitting them back-to-back.
-
-    n_copies(doc) = floor(frac) + (draw < frac mod 1), with the same
-    md5(doc_id:seed) draw as stratified_sample — so for frac <= 1 the
-    kept row set is IDENTICAL to stratified_sample (epoch always 0),
-    and the whole cut stays engine- and partitioning-invariant.
-
-    Pure Catalyst: the copy count is a literal CASE, the copies come
-    from explode(sequence(...)) — row amplification happens inside the
-    scan stage, no shuffle, no UDF. At 100 TB the explode multiplies
-    rows AFTER the filter, so a downweighted source never materializes
-    dropped rows."""
-    draw = uniform_draw(seed=seed)
-    frac = _fraction_case(fractions, source_col)
-    n_copies = (
-        F.floor(frac)
-        + F.when(draw < frac - F.floor(frac), F.lit(1)).otherwise(F.lit(0))
-    ).cast("int")
-    return (
-        docs.withColumn("__n_copies", n_copies)
-        .where(F.col("__n_copies") > 0)
-        .withColumn(
-            "epoch",
-            F.explode(
-                F.sequence(F.lit(0), F.col("__n_copies") - F.lit(1))
-            ),
-        )
-        .drop("__n_copies")
-    )
-
-
-def cap_per_group(
-    docs: DataFrame,
-    per_group: int,
-    group_col: str = "source",
-    seed: int = 42,
-) -> DataFrame:
-    """Per-group document cap — the RefinedWeb-style per-domain limit
-    (no single domain/source may contribute more than per_group
-    documents). Which documents survive is decided by the same
-    md5(doc_id:seed) uniform draw as stratified_sample, so the cut is
-    a deterministic uniform random sample of each over-cap group:
-    engine-, partitioning- and run-invariant, re-drawable with a new
-    seed.
-
-    One shuffle (window rank partitioned by the group column). Skew
-    caveat at 100 TB: a pathological mega-domain concentrates its rank
-    computation on one partition; since only the top per_group rows
-    per group survive, pre-filtering each partition to its local
-    top-per_group by draw before the window (AQE skew handling or a
-    partial rank) bounds that — for the common many-domains shape the
-    plain window is the right plan."""
-    from pyspark.sql.window import Window
-
-    draw = uniform_draw(seed=seed)
-    rank = F.row_number().over(
-        Window.partitionBy(group_col).orderBy(
-            draw.asc(), F.col("doc_id").asc()
-        )
-    )
-    return (
-        docs.withColumn("__rank", rank)
-        .where(F.col("__rank") <= per_group)
-        .drop("__rank")
-    )
-
-
-def shuffle_deterministic(
-    docs: DataFrame,
-    seed: int = 42,
-    doc_id_col: str = "doc_id",
-) -> DataFrame:
-    """Reproducible global training order: sort by the same
-    md5(doc_id:seed) uniform draw (doc_id as tiebreak — md5 collisions
-    on the 8-hex prefix are possible at corpus scale). Any engine, any
-    partitioning, any run produces the same total order for a given
-    seed; change the seed to get an independent order per training run.
-
-    At scale this is ONE range-partitioned sort (Spark samples split
-    points, then sorts within ranges) — the standard way to produce a
-    sharded, globally-ordered training corpus; write the result with
-    maxRecordsPerFile to get ordered shards. df.orderBy(rand(seed))
-    is partitioning-dependent and so not reproducible."""
-    draw = uniform_draw(doc_id_col, seed=seed)
-    return docs.orderBy(draw.asc(), F.col(doc_id_col).asc())
-
-
-def plan_mixture(
-    docs: DataFrame,
-    budget_tokens: "dict[str, int] | int",
-    source_col: str = "source",
-) -> dict[str, float]:
-    """Mixture planning — compute the per-source keep fractions that
-    stratified_sample needs to hit a token budget. budget_tokens is
-    either one cap applied to every source (the classic flattening
-    mix: big sources downweighted toward parity) or a per-source dict
-    (sources absent from the dict are dropped, fraction 0.0 — same
-    convention as stratified_sample).
-
-    fraction[src] = min(1.0, budget[src] / tokens[src]) — under the
-    uniform hash draw the sampled token count concentrates tightly
-    around the budget for any corpus much larger than one document.
-
-    One narrow groupBy over (source, token count) and a driver-side
-    collect of <= #sources rows (a mixture has a handful of sources;
-    this is config-sized, not data-sized)."""
-    totals = {
-        r["src"]: r["toks"]
-        for r in docs.groupBy(F.col(source_col).alias("src"))
-        .agg(F.sum(F.size(tokens_col())).alias("toks"))
-        .collect()
-    }
-    if isinstance(budget_tokens, int):
-        budget = {src: budget_tokens for src in totals}
-    else:
-        budget = budget_tokens
-    return {
-        src: min(1.0, budget[src] / totals[src])
-        for src in sorted(totals)
-        if src in budget and totals[src] > 0
-    }
 
 
 def stratified_sample_sql(
@@ -892,82 +542,3 @@ def boilerplate_ngrams_sql(n: int = 3, min_docs: int = 2) -> str:
     FROM g LEFT JOIN b ON g.gram = b.gram
     GROUP BY g.doc_id
     """
-
-
-def pack_documents_bestfit(
-    docs: DataFrame,
-    window_tokens: int = 512,
-    shard_col: str = "shard",
-) -> DataFrame:
-    """Waste-minimizing sequence packing: FIRST-FIT-DECREASING bin
-    packing of documents into `window_tokens` context windows, per
-    shard — (doc_id, shard, n_tokens, pack_id). Compare
-    pack_documents (concat-then-cut): that preserves corpus order and
-    splits nothing, but a 400-token doc after a 200-token doc wastes
-    nothing only by luck; FFD sorts descending and places each doc in
-    the first pack with room, the classic 11/9·OPT+1 bound.
-
-    Distribution model: FFD is inherently sequential WITHIN a bin set,
-    so the corpus is packed per `shard_col` group with applyInPandas —
-    shards are the unit a loader consumes (file/worker sized,
-    bounded), so each group fits one task comfortably and the
-    shuffle is one hash exchange on the shard key. Pack ids are local
-    to a shard. Documents longer than the window get a pack of their
-    own (never split), matching pack_documents' doc-integrity rule.
-
-    Determinism: groups sort by (n_tokens desc, doc_id) — ties broken
-    by doc_id — so output is invariant to input partitioning.
-    """
-    import pandas as pd
-
-    n = F.size(tokens_col())
-    prepped = docs.select(
-        "doc_id", F.col(shard_col).alias("shard"), n.alias("n_tokens")
-    )
-
-    def ffd(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["n_tokens", "doc_id"], ascending=[False, True]
-        ).reset_index(drop=True)
-        space: list[int] = []  # remaining tokens per open pack
-        out = []
-        for t in pdf["n_tokens"]:
-            t = int(t)
-            placed = None
-            for i, rem in enumerate(space):
-                if rem >= t:
-                    placed = i
-                    break
-            if placed is None:
-                space.append(max(0, window_tokens - t))
-                placed = len(space) - 1
-            else:
-                space[placed] -= t
-            out.append(placed)
-        pdf["pack_id"] = pd.Series(out, dtype="int64")
-        return pdf
-
-    return prepped.groupBy("shard").applyInPandas(
-        ffd, "doc_id bigint, shard bigint, n_tokens int, pack_id bigint"
-    )
-
-
-def packing_waste(
-    packed: DataFrame, window_tokens: int = 512
-) -> DataFrame:
-    """Padding-waste audit per shard: packs used, token sum, and the
-    fraction of window slots left empty (docs longer than the window
-    count a full window — the loader truncates or streams them)."""
-    per_pack = packed.groupBy("shard", "pack_id").agg(
-        F.sum("n_tokens").alias("pack_tokens")
-    )
-    return per_pack.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_packs"),
-        F.sum("pack_tokens").alias("tokens"),
-        F.round(
-            1
-            - F.sum(F.least(F.col("pack_tokens"), F.lit(window_tokens)))
-            / (F.count(F.lit(1)) * window_tokens),
-            6,
-        ).alias("waste_frac"),
-    )

@@ -1,5 +1,4 @@
 from triplestore_spark.pipeline.corpus import build_corpus
-from triplestore_spark.pipeline.curate import CurationResult, curate
 from triplestore_spark.pipeline.extract import (
     extract_all_candidates_direct,
     extract_mention_surfaces_direct,
@@ -9,8 +8,6 @@ from triplestore_spark.pipeline.run import run_pipeline
 
 __all__ = [
     "build_corpus",
-    "CurationResult",
-    "curate",
     "extract_all_candidates_direct",
     "extract_mention_surfaces_direct",
     "resolve_mentions",

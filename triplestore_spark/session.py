@@ -78,6 +78,15 @@ def checkpoint_level(df, metric):
     return out, seen.get["v"]
 
 
+def default_driver_memory() -> str:
+    """The driver heap a default session asks for, in MiB: half of
+    physical memory, at most 8g. A local-mode driver JVM runs every
+    executor task, so it gets half; the other half is left to the
+    Python workers and the OS."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(8 << 30, phys // 2) >> 20}m"
+
+
 def get_spark(
     app_name: str = "triplestore-spark",
     cpus: int | None = None,
@@ -108,7 +117,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -24,7 +24,6 @@ concatenator encode_binary_triples (golden tests / CLI).
 from __future__ import annotations
 
 import posixpath
-import re
 import struct
 from itertools import islice
 from typing import Iterator, Optional
@@ -751,26 +750,8 @@ def is_nt_format(head: bytes) -> bool:
     return head[:1] == b"<"
 
 
-_TURTLE_DIRECTIVE = re.compile(
-    rb"^\s*(?:#[^\n]*\n\s*)*(?:@prefix|@base|PREFIX[ \t]|BASE[ \t])",
-    re.IGNORECASE,
-)
-
-
-def is_turtle_format(head: bytes, path: str = "") -> bool:
-    """Beyond the reference's two formats: a .ttl/.turtle extension,
-    or a leading @prefix/@base/PREFIX/BASE directive (after comments),
-    identifies Turtle. Directive-free Turtle that happens to be valid
-    NT decodes identically through the NT path (NT is a Turtle
-    subset), so the sniff only needs to catch what NT would reject."""
-    if path.rsplit(".", 1)[-1].lower() in ("ttl", "turtle"):
-        return True
-    return bool(_TURTLE_DIRECTIVE.match(head))
-
-
 def read_auto(spark: SparkSession, path: str) -> DataFrame:
-    """Auto-dispatch decode per file head byte (reference decode.go:29-35;
-    Turtle added beyond the reference — see is_turtle_format).
+    """Auto-dispatch decode per file head byte (reference decode.go:29-35).
 
     Reads each file once via binaryFile; NT files are split into lines
     inside the decode UDF.
@@ -783,19 +764,12 @@ def read_auto(spark: SparkSession, path: str) -> DataFrame:
         import pandas as pd
 
         from triplestore_spark.sources.ntriples import parse_nt_text
-        from triplestore_spark.sources.turtle import parse_turtle_text
 
         for pdf in it:
             rows = []
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
+            for blob in pdf["content"]:
                 blob = bytes(blob)
-                if is_turtle_format(blob[:4096], str(fpath)):
-                    rows.extend(
-                        parse_turtle_text(
-                            blob.decode("utf-8"), fname=str(fpath)
-                        )
-                    )
-                elif is_nt_format(blob):
+                if is_nt_format(blob):
                     rows.extend(parse_nt_text(blob.decode("utf-8")))
                 else:
                     rows.extend(decode_binary_bytes(blob))

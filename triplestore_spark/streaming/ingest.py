@@ -15,7 +15,7 @@ by (buckets touched by the batch) x (bucket size), not by total sink
 size — the round-1 design re-read the whole sink every batch, O(table)
 per micro-batch, a scale-killer for continuous ingest. On a real
 cluster with Iceberg/Delta on the classpath, MERGE INTO on tkey
-replaces this module's anti-join (see operators/iceberg.py); the
+replaces this module's anti-join; the
 bucketed-parquet path keeps the same layout so the switch is
 config-only.
 
@@ -100,8 +100,8 @@ def merge_batch_into_sink(
     the directory is absent between the swap's two renames — a
     sub-millisecond window that additionally requires the merge to
     have begun before the compactor's claim; stores needing a hard
-    transactional guarantee should use Iceberg MERGE
-    (operators/iceberg.py). `lock_lease_ms` must match the value the
+    transactional guarantee should use Iceberg MERGE.
+    `lock_lease_ms` must match the value the
     sink's compactors use (see COMPACTION_LOCK_LEASE_MS)."""
     spark = batch_df.sparkSession
     fs, _ = _hadoop_fs(spark, data_path)
@@ -428,8 +428,7 @@ def compact_sink(
     recover_sink — invoked at every subsequent merge or compact —
     restores any bucket caught between its two renames and clears the
     leftovers. (Hadoop rename is not atomic on S3; on object stores
-    run compaction through a committer or Iceberg MERGE instead —
-    operators/iceberg.py.)
+    run compaction through a committer or Iceberg MERGE instead.)
 
     Concurrent-merge safety (ADVICE r4): merge refuses to START while
     this lock is live, but a merge that passed its check just before
