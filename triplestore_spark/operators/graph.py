@@ -260,6 +260,20 @@ class RDFGraph:
         )
         return as_subj.unionByName(as_obj).distinct()
 
+    def merge_equivalents(
+        self, sameas_pred: str = "owl:sameAs", **kwargs
+    ) -> "RDFGraph":
+        """owl:sameAs canonicalization front door: merge equivalence
+        classes and rewrite every triple through the component-min
+        representative (operators/sameas.py). Returns a NEW graph
+        (immutable, like add/remove)."""
+        from triplestore_spark.operators.sameas import merge_equivalents
+
+        return RDFGraph(
+            merge_equivalents(self._df, sameas_pred, **kwargs),
+            cache=False,
+        )
+
     # -- the six point lookups (reference source.go:203-220) --
 
     def layout(self, name: str) -> DataFrame:
